@@ -5,7 +5,9 @@ SURVEY.md §5): an audit is a query over a built model that returns the
 *offending* rows — any rows returned means the audit FAILS.
 
 Audits run after materialization and are recorded in
-``meta.model_audits`` (audit name, model, status, bad-row count).
+``meta.model_audits`` (audit name, model, status, bad-row count):
+one pyarrow-written parquet file per ``run_audits`` call, renamed into
+place by the small-state store (engine/state.py), with no Spark job.
 Scale: an audit is just another Spark plan over the materialized
 table — predicate pushdown applies, and a LIMIT caps the evidence
 collected to the driver.
@@ -19,6 +21,10 @@ from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame
+
+from .state import StateTable
+
+AUDITS_SCHEMA = "audit string, model string, status string, bad_rows long, ran_at timestamp"
 
 AuditBuilder = Callable[[DataFrame], DataFrame]
 
@@ -82,12 +88,11 @@ def run_audits(
             results.append(
                 AuditResult(a.name, m, "pass" if n == 0 else "fail", n)
             )
-    if results and warehouse_root is not None:
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = [(r.audit, r.model, r.status, r.bad_rows, now) for r in results]
-        spark.createDataFrame(
-            rows, "audit string, model string, status string, bad_rows long, ran_at timestamp"
-        ).write.mode("append").parquet(str(Path(warehouse_root) / "meta" / "model_audits"))
+    if warehouse_root is not None:
+        now = datetime.now(timezone.utc)
+        StateTable(Path(warehouse_root) / "meta" / "model_audits", AUDITS_SCHEMA).append(
+            [(r.audit, r.model, r.status, r.bad_rows, now) for r in results]
+        )
     return results
 
 

@@ -6,14 +6,17 @@ The reference delegates this to sqlmesh (MODEL kind + ``start
 interval tracking described in SURVEY.md §3.3) and to ``.completed``
 semaphore files in the extractors (sra/extract.py:407-458). Here:
 
-- completed intervals are tracked in a parquet state table
-  (model, interval_start, interval_end, recorded_at);
+- completed intervals are tracked in the ``intervals/`` table of the
+  small-state store (engine/state.py): (model, interval_start,
+  interval_end, recorded_at), one pyarrow-written parquet file per
+  ``record`` commit, renamed into place;
 - ``missing_intervals`` computes the daily (or @monthly) gaps between
   a model's start and the requested end, minus what's recorded;
 - re-running a completed interval is allowed (idempotent via dynamic
   partition overwrite) — the planner just skips it by default.
 
-This is driver-side bookkeeping over tiny state — no Spark compute.
+This is driver-side bookkeeping over tiny state — no Spark compute:
+``record`` and ``completed`` are pyarrow file operations.
 """
 
 from __future__ import annotations
@@ -22,7 +25,10 @@ from dataclasses import dataclass
 from datetime import date, datetime, timedelta, timezone
 from pathlib import Path
 
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
+
+from .state import StateTable
 
 STATE_SCHEMA = (
     "model string, interval_start date, interval_end date, recorded_at timestamp"
@@ -58,31 +64,22 @@ def monthly_intervals(start: date, end: date) -> list[Interval]:
 
 
 class IntervalStore:
-    """Parquet-backed record of completed (model, interval) pairs."""
+    """Record of completed (model, interval) pairs in the small-state
+    store. ``spark`` is accepted for callers that pass a session; the
+    store itself never uses one."""
 
     def __init__(self, spark: SparkSession, state_root: str) -> None:
-        self.spark = spark
-        self.path = str(Path(state_root) / "intervals")
+        self.table = StateTable(Path(state_root) / "intervals", STATE_SCHEMA)
 
     def completed(self, model: str) -> set[tuple[date, date]]:
-        if not Path(self.path).exists():
-            return set()
-        rows = (
-            self.spark.read.parquet(self.path)
-            .filter(f"model = '{model}'")
-            .select("interval_start", "interval_end")
-            .collect()
+        t = self.table.read(
+            ["interval_start", "interval_end"], filter=ds.field("model") == model
         )
-        return {(r[0], r[1]) for r in rows}
+        return set(zip(t["interval_start"].to_pylist(), t["interval_end"].to_pylist()))
 
     def record(self, model: str, intervals: list[Interval]) -> None:
-        if not intervals:
-            return
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = [(model, i.start, i.end, now) for i in intervals]
-        self.spark.createDataFrame(rows, STATE_SCHEMA).write.mode("append").parquet(
-            self.path
-        )
+        now = datetime.now(timezone.utc)
+        self.table.append([(model, i.start, i.end, now) for i in intervals])
 
     def missing_intervals(
         self, model: str, start: date, end: date, cron: str = "@daily"

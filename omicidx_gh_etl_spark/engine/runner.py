@@ -14,8 +14,13 @@ warehouse_cli.py:64-90,192-205):
   sqlmesh interval re-materialization);
 - run tracking: ``meta.model_runs`` rows (status, seconds,
   rows_affected, plan hash — "SQL hash (detects changes)"
-  WAREHOUSE.md:253-259) appended as parquet;
-- lineage: ``meta.model_lineage`` (model → dependency edges);
+  WAREHOUSE.md:253-259), appended through the pyarrow small-state
+  store (engine/state.py): one parquet file per run, renamed into
+  place, no Spark job. The plan hash covers the builder's source, its
+  bound defaults (a factory's glob, schema, filter value), kind, time
+  column and dependencies;
+- lineage: ``meta.model_lineage`` (model → dependency edges) and
+  ``meta.model_docs``, through the same store;
 - export materializations after build (EXPORT_DEPLOYMENT.md:199-237).
 
 Scale notes: VIEW models never materialize — downstream models see the
@@ -29,6 +34,7 @@ partition-prune.
 from __future__ import annotations
 
 import hashlib
+import inspect
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -40,6 +46,17 @@ from pyspark.sql import functions as F
 
 from ..models.registry import Model, ModelContext, ModelRegistry
 from .dag import topo_sort, upstream_closure
+from .state import StateTable
+
+MODEL_RUNS_SCHEMA = (
+    "run_id string, model string, status string, seconds double, "
+    "rows_affected long, plan_hash string, error string, started_at timestamp"
+)
+MODEL_LINEAGE_SCHEMA = "run_id string, model string, depends_on string"
+MODEL_DOCS_SCHEMA = (
+    "run_id string, model string, layer string, kind string, "
+    "time_column string, grain string, doc string"
+)
 
 
 @dataclass
@@ -229,21 +246,23 @@ class WarehouseRunner:
     def _table_path(self, m: Model) -> str:
         return str(Path(self.warehouse_root) / m.layer / m.name.split(".", 1)[1])
 
-    def _plan_hash(self, m: Model) -> str:
-        import inspect
-
+    @staticmethod
+    def _plan_hash(m: Model) -> str:
+        """Hash of what defines the model: factory-built models share
+        their builder's source, so its bound defaults count too."""
         try:
             src = inspect.getsource(m.build)
         except (OSError, TypeError):
             src = m.name
-        return hashlib.sha256(src.encode()).hexdigest()[:16]
+        defaults = getattr(m.build, "__defaults__", None)
+        key = repr((src, defaults, m.kind, m.time_column, m.depends_on))
+        return hashlib.sha256(key.encode()).hexdigest()[:16]
 
     def _meta_append(self, rel: str, rows: list[tuple], schema: str) -> None:
-        path = str(Path(self.warehouse_root) / "meta" / rel)
-        self.spark.createDataFrame(rows, schema).write.mode("append").parquet(path)
+        StateTable(Path(self.warehouse_root) / "meta" / rel, schema).append(rows)
 
     def _record_runs(self, run_id: str, results: list[RunResult]) -> None:
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        now = datetime.now(timezone.utc)
         self._meta_append(
             "model_runs",
             [
@@ -251,8 +270,7 @@ class WarehouseRunner:
                  r.rows_affected, r.plan_hash, r.error, now)
                 for r in results
             ],
-            "run_id string, model string, status string, seconds double, "
-            "rows_affected long, plan_hash string, error string, started_at timestamp",
+            MODEL_RUNS_SCHEMA,
         )
 
     def _record_lineage(self, run_id: str) -> None:
@@ -261,10 +279,7 @@ class WarehouseRunner:
             for name, deps in self.registry.dependency_edges().items()
             for dep in deps
         ]
-        if edges:
-            self._meta_append(
-                "model_lineage", edges, "run_id string, model string, depends_on string"
-            )
+        self._meta_append("model_lineage", edges, MODEL_LINEAGE_SCHEMA)
 
     def _record_docs(self, run_id: str) -> None:
         """meta.model_docs: name, layer, kind, grain, doc (WAREHOUSE.md:242-274)."""
@@ -272,12 +287,7 @@ class WarehouseRunner:
             (run_id, name, m.layer, m.kind, m.time_column, m.grain, m.doc)
             for name, m in self.registry.items()
         ]
-        self._meta_append(
-            "model_docs",
-            rows,
-            "run_id string, model string, layer string, kind string, "
-            "time_column string, grain string, doc string",
-        )
+        self._meta_append("model_docs", rows, MODEL_DOCS_SCHEMA)
 
     def run_history(self, limit: int = 20) -> DataFrame:
         """meta.model_runs, newest first (warehouse_cli.py:192-205)."""
@@ -312,7 +322,9 @@ class WarehouseRunner:
         overwrite (idempotent), recording each completed interval so a
         crashed backfill resumes where it stopped — the Spark analogue
         of the extractors' ``.completed`` semaphores
-        (sra/extract.py:407-458).
+        (sra/extract.py:407-458). The interval state is read once, for
+        the plan; each interval is committed to the store as soon as it
+        succeeds.
 
         Intervals run sequentially by design: each is itself a fully
         parallel Spark job, and serializing them bounds cluster memory

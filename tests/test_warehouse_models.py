@@ -448,6 +448,81 @@ def test_backfill_runs_missing_intervals_and_resumes(spark, runner):
     assert len(runner.plan_backfill(model, s, date(2024, 1, 17))) == 1
 
 
+def test_backfill_resumes_after_a_crash_between_write_and_record(spark, data_root, tmp_path):
+    """Day 2's partition is written, then the run dies before its interval
+    is recorded: only day 1 is recorded, and the re-run records days 2..n
+    once each and leaves the same partition data as a clean backfill."""
+    import pyarrow.dataset as ds
+
+    from omicidx_gh_etl_spark.engine import IntervalStore
+
+    model = "bronze.stg_sra_experiments"
+    s, e = D(2024, 1, 14), D(2024, 1, 16)
+
+    def make(wh: str) -> WarehouseRunner:
+        return WarehouseRunner(spark=spark, registry=REGISTRY, data_root=data_root,
+                               warehouse_root=str(tmp_path / wh))
+
+    crashing = make("resumed")
+    materialize = crashing._materialize
+
+    def write_then_crash(m, ctx):
+        rows = materialize(m, ctx)
+        if m.name == model and ctx.start_ds == "2024-01-15":
+            raise RuntimeError("killed after the partition write")
+        return rows
+
+    crashing._materialize = write_then_crash
+    done = crashing.backfill(model, s, e)
+    assert [(iv.start, rs[-1].status) for iv, rs in done] == [
+        (D(2024, 1, 14), "success"), (D(2024, 1, 15), "failed")]
+    store = IntervalStore(spark, str(tmp_path / "resumed"))
+    assert store.completed(model) == {(s, s)}
+
+    resumed = make("resumed").backfill(model, s, e)
+    assert [iv.start for iv, _ in resumed] == [D(2024, 1, 15), D(2024, 1, 16)]
+    recorded = store.table.read(filter=ds.field("model") == model)["interval_start"]
+    assert sorted(recorded.to_pylist()) == [D(2024, 1, 14), D(2024, 1, 15), D(2024, 1, 16)]
+
+    make("clean").backfill(model, s, e)
+
+    def table_rows(wh: str) -> list[str]:
+        path = tmp_path / wh / "bronze" / "stg_sra_experiments"
+        return sorted(map(repr, spark.read.parquet(str(path)).collect()))
+
+    assert table_rows("resumed") == table_rows("clean")
+    assert len(table_rows("clean")) == 2
+
+
+def test_plan_hash_distinguishes_every_registered_model():
+    hashes = {WarehouseRunner._plan_hash(m) for _, m in REGISTRY.items()}
+    assert len(hashes) == len(REGISTRY.names())
+
+
+def test_plan_hash_follows_the_model_definition():
+    import dataclasses
+    import types
+
+    def with_defaults(fn, defaults):
+        return types.FunctionType(fn.__code__, fn.__globals__, fn.__name__, defaults, fn.__closure__)
+
+    raw = REGISTRY.get("raw.src_sra_accessions")
+    glob, schema, fmt = raw.build.__defaults__
+    base = WarehouseRunner._plan_hash(raw)
+    assert WarehouseRunner._plan_hash(dataclasses.replace(raw)) == base
+    moved = with_defaults(raw.build, ("sra/moved.parquet", schema, fmt))
+    assert WarehouseRunner._plan_hash(dataclasses.replace(raw, build=moved)) != base
+
+    bronze = REGISTRY.get("bronze.stg_sra_runs")
+    entity, _ = bronze.build.__defaults__
+    other_type = with_defaults(bronze.build, (entity, "SAMPLE"))
+    assert WarehouseRunner._plan_hash(dataclasses.replace(bronze, build=other_type)) != (
+        WarehouseRunner._plan_hash(bronze))
+    for change in ({"kind": "TABLE"}, {"time_column": "published"}, {"depends_on": ()}):
+        assert WarehouseRunner._plan_hash(dataclasses.replace(bronze, **change)) != (
+            WarehouseRunner._plan_hash(bronze))
+
+
 def test_backfill_rejects_non_incremental(runner):
     from datetime import date
 
