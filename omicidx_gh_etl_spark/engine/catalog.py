@@ -245,6 +245,26 @@ def write_catalog(meta: DataFrame, out_path: str) -> None:
     meta.write.mode("overwrite").option("compression", "zstd").parquet(out_path)
 
 
+def _hidden(name: str) -> bool:
+    """Spark's listing rule: ``_``/``.`` names are not data, except
+    partition directories (``_col=v``)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _footer_row_count(table_dir: Path) -> int:
+    """Rows of a parquet table directory, summed from its part files'
+    footers (the reference's ``parquet_metadata`` row counts). Files
+    Spark would not read — any path component that is hidden by
+    :func:`_hidden`, like ``_SUCCESS`` or ``_temporary/`` — are skipped."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in table_dir.rglob("*")
+        if f.is_file() and not any(map(_hidden, f.relative_to(table_dir).parts))
+    )
+
+
 def build_catalog_json(
     spark: SparkSession,
     export_root: str,
@@ -257,11 +277,13 @@ def build_catalog_json(
     tables = {}
     root = Path(export_root)
     for tdir in sorted(p for p in root.iterdir() if p.is_dir()) if root.exists() else []:
-        df = spark.read.parquet(str(tdir))
+        # the schema via Spark keeps a partitioned layout's partition
+        # columns; the row count is footer metadata, no Spark job
+        schema = spark.read.parquet(str(tdir)).schema
         tables[tdir.name] = {
             "path": f"{base_url}{tdir.name}" if base_url else str(tdir),
-            "row_count": df.count(),
-            "schema": {f.name: f.dataType.simpleString() for f in df.schema.fields},
+            "row_count": _footer_row_count(tdir),
+            "schema": {f.name: f.dataType.simpleString() for f in schema.fields},
         }
     return {
         "version": version,

@@ -6,19 +6,30 @@ snapshot gap; spec: WAREHOUSE.md:132-150,242-310,
 WAREHOUSE_SUMMARY.md:107-171, EXPORT_DEPLOYMENT.md:197-237; consumer:
 warehouse_cli.py:64-90,192-205):
 
-- model discovery (registry), dependency DAG, topological execution;
+- model discovery (registry), dependency DAG, ready-set execution: a
+  model starts as soon as every dependency in the plan has finished,
+  with no per-layer barrier, so independent models run concurrently on
+  a thread pool bounded by ``defaultParallelism`` (the reference's
+  DuckDB build runs with ``threads: 16``, WAREHOUSE.md:289). Pool
+  threads inherit the caller's job group, description and tags, so
+  cancelling the caller's group cancels the models' jobs;
 - materialization: VIEW → temp view (zero-copy, Catalyst inlines it);
   TABLE → parquet; INCREMENTAL_BY_TIME_RANGE → date-partitioned
-  parquet written with **dynamic partition overwrite**, so re-running
-  any [start_ds, end_ds] window is idempotent (the Spark analogue of
-  sqlmesh interval re-materialization);
+  parquet written with **dynamic partition overwrite**, after which the
+  window's partitions the write did not produce are deleted, so
+  re-running any [start_ds, end_ds] window replaces the whole range
+  (sqlmesh interval re-materialization);
+- one write job per materialized model: ``rows_affected`` is the rows
+  written, taken from the write's observed metrics (``df.observe``),
+  never from a second count over what was written;
 - run tracking: ``meta.model_runs`` rows (status, seconds,
   rows_affected, plan hash — "SQL hash (detects changes)"
   WAREHOUSE.md:253-259), appended through the pyarrow small-state
   store (engine/state.py): one parquet file per run, renamed into
-  place, no Spark job. The plan hash covers the builder's source, its
-  bound defaults (a factory's glob, schema, filter value), kind, time
-  column and dependencies;
+  place, no Spark job. ``seconds`` is the model's own wall time, which
+  overlaps with the models that ran beside it. The plan hash covers
+  the builder's source, its bound defaults (a factory's glob, schema,
+  filter value), kind, time column and dependencies;
 - lineage: ``meta.model_lineage`` (model → dependency edges) and
   ``meta.model_docs``, through the same store;
 - export materializations after build (EXPORT_DEPLOYMENT.md:199-237).
@@ -35,14 +46,17 @@ from __future__ import annotations
 
 import hashlib
 import inspect
+import shutil
 import time
 import uuid
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..models.registry import Model, ModelContext, ModelRegistry
 from .dag import topo_sort, upstream_closure
@@ -111,25 +125,32 @@ class WarehouseRunner:
             start_ds=start_ds, end_ds=end_ds,
         )
         run_id = uuid.uuid4().hex[:12]
-        results: list[RunResult] = []
         self._cache.clear()
-        for name in self.plan(select):
-            m = self.registry.get(name)
-            t0 = time.perf_counter()
-            try:
-                rows = self._materialize(m, ctx)
-                res = RunResult(
-                    name, "success", round(time.perf_counter() - t0, 3),
-                    rows, self._plan_hash(m),
-                )
-            except Exception as e:  # noqa: BLE001
-                res = RunResult(
-                    name, "failed", round(time.perf_counter() - t0, 3),
-                    None, self._plan_hash(m), f"{type(e).__name__}: {e}",
-                )
-            results.append(res)
-            if res.status == "failed" and fail_fast:
-                break
+        order = self.plan(select)
+        edges, planned = self.registry.dependency_edges(), set(order)
+        waiting = {name: set(edges[name]) & planned for name in order}
+        done: dict[str, RunResult] = {}
+        running: dict[Future, str] = {}
+        stop = False
+        with ThreadPoolExecutor(self.spark.sparkContext.defaultParallelism) as pool:
+            while True:
+                ready = [] if stop else [n for n in order if n in waiting and not waiting[n]]
+                for name in ready:
+                    del waiting[name]
+                    # wrapped per task, on this thread: each task gets its
+                    # own copy of the caller's local properties and tags
+                    task = inheritable_thread_target(self.spark)(self._run_model)
+                    running[pool.submit(task, self.registry.get(name), ctx)] = name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    done[name] = res = fut.result()
+                    stop |= fail_fast and res.status == "failed"
+                    for deps in waiting.values():
+                        deps.discard(name)
+        results = [done[n] for n in order if n in done]
         self._record_runs(run_id, results)
         self._record_lineage(run_id)
         self._record_docs(run_id)
@@ -142,6 +163,18 @@ class WarehouseRunner:
                 self.spark, self.warehouse_root,
             )
         return results
+
+    def _run_model(self, m: Model, ctx: ModelContext) -> RunResult:
+        t0 = time.perf_counter()
+        try:
+            rows = self._materialize(m, ctx)
+            status, error = "success", None
+        except Exception as e:  # noqa: BLE001
+            rows, status, error = None, "failed", f"{type(e).__name__}: {e}"
+        return RunResult(
+            m.name, status, round(time.perf_counter() - t0, 3), rows,
+            self._plan_hash(m), error,
+        )
 
     def resolve(self, name: str, ctx: ModelContext | None = None) -> DataFrame:
         """DataFrame for a model: materialized parquet if present,
@@ -185,22 +218,27 @@ class WarehouseRunner:
         elif m.kind == "INCREMENTAL_BY_TIME_RANGE":
             assert m.time_column, f"{m.name}: incremental model needs time_column"
             path = self._table_path(m)
+            obs = Observation()
             (
-                df.write.mode("overwrite")
+                df.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.collect_set(m.time_column).alias("written"),
+                )
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .option("compression", "zstd")
                 .partitionBy(m.time_column)
                 .parquet(path)
             )
+            metrics = obs.get
+            rows = metrics["rows"]
+            self._drop_unwritten_partitions(path, m.time_column, metrics["written"], ctx)
             # read back with the plan's schema: an interval with ZERO
             # rows (routine in daily backfills) writes no part files,
             # and a schema-less read of the empty dataset fails with
             # UNABLE_TO_INFER_SCHEMA
-            out = self.spark.read.schema(df.schema).parquet(path)
-            rows = out.filter(
-                F.col(m.time_column).between(ctx.start_ds, ctx.end_ds)
-            ).count()
-            self._cache[m.name] = out
+            self._cache[m.name] = self.spark.read.schema(df.schema).parquet(path)
         elif m.kind == "SNAPSHOT_TABLE":
             # versioned TABLE: each run commits a snapshot version —
             # history/rollback via engine.snapshots (CLI `snapshots`);
@@ -214,8 +252,6 @@ class WarehouseRunner:
             rows = snap.n_rows
             self._cache[m.name] = table.read(self.spark)
         else:  # TABLE
-            from pyspark.sql import Observation
-
             path = self._table_path(m)
             # row metric piggybacks on the write job (df.observe) — no
             # second count scan over what was just written
@@ -228,6 +264,24 @@ class WarehouseRunner:
         if m.export is not None and self.export_root is not None:
             self._export(m, self._cache[m.name])
         return rows
+
+    @staticmethod
+    def _drop_unwritten_partitions(
+        path: str, column: str, written: list, ctx: ModelContext
+    ) -> None:
+        """Delete the ``column=<day>`` partitions inside [start_ds, end_ds]
+        that this write did not produce: dynamic overwrite only replaces
+        the partitions a write emits, so a day whose upstream rows are
+        gone would otherwise keep its old rows. Runs before the interval
+        is recorded, so a crash here is cleaned up by the re-run."""
+        prefix = f"{column}="
+        keep = {d.isoformat() for d in written}
+        root = Path(path)
+        for part in root.iterdir() if root.is_dir() else ():
+            day = part.name[len(prefix):]
+            if (part.name.startswith(prefix) and day not in keep
+                    and ctx.start_ds <= day <= ctx.end_ds):
+                shutil.rmtree(part)
 
     def _export(self, m: Model, df: DataFrame) -> None:
         cfg = m.export

@@ -140,7 +140,15 @@ class Bm25Index:
         A/B): build 35.1 s → 30.6 s first pass, 56.2 s → 27.5 s second
         pass (contended window), with all three table hashes and the
         serve output identical (tools/r11_bm25_build_ab.py;
-        tests pin serve equivalence)."""
+        tests pin serve equivalence).
+
+        Precondition: ``id_col`` is unique. The stats are the corpus row
+        count and the summed lengths of the distinct ``(doc_id, __dl)``
+        postings pairs, so with unique ids (token-less docs included)
+        ``(n, avgdl)`` equal :func:`bm25_build_index`'s. Duplicate ids
+        are not supported: their postings merge into one document while
+        ``n`` still counts each row, so scores differ from the one-shot
+        path (tests/test_operators.py pins both)."""
         for t in (self.postings_table, self.dfreq_table, self.stats_table):
             _drop_table_and_location(self.spark, t)
         toks = tokens_sql(f"coalesce(`{text_col}`, '')")

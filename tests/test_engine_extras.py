@@ -46,6 +46,31 @@ def test_catalog_json(spark, tmp_path):
     assert cat["tables"]["mart_table"]["schema"] == {"id": "bigint"}
 
 
+def test_catalog_json_row_count_from_footers_skips_what_spark_skips(spark, tmp_path):
+    """Row counts come from footers; files Spark does not read (``_SUCCESS``,
+    ``_temporary/``, hidden part files) are not counted, and the schema
+    keeps the partition column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    tdir = tmp_path / "export" / "events"
+    spark.range(20).withColumn("day", (F.col("id") % 3).cast("string")).write.partitionBy(
+        "day").parquet(str(tdir))
+    assert (tdir / "_SUCCESS").exists()
+    stray = pa.table({"id": pa.array([100, 101], pa.int64())})
+    for rel in ("_temporary/0/day=0/part-00000.parquet", "day=1/.part-00009.parquet",
+                "day=2/_temporary/part-00001.parquet"):
+        (tdir / rel).parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(stray, tdir / rel)
+
+    entry = build_catalog_json(spark, str(tmp_path / "export"))["tables"]["events"]
+    df = spark.read.parquet(str(tdir))
+    assert entry["row_count"] == df.count() == 20
+    assert entry["schema"] == {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    assert entry["schema"] == {"id": "bigint", "day": "int"}
+
+
 def test_upload_manifest_matches_catalog(spark, tmp_path, capsys):
     """`upload --dry-run` (reference warehouse_cli.py:452-548): the
     manifest must cover exactly the catalog.json tables' files plus the

@@ -2871,3 +2871,33 @@ def test_bm25_index_persisted_serve_matches_batch_topk(spark, sf_dir):
     finally:
         for t in (idx.postings_table, idx.dfreq_table, idx.stats_table):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_bm25_index_stats_need_unique_doc_ids(spark):
+    """With unique doc ids, token-less docs included, Bm25Index's
+    persisted (n, avgdl) equal bm25_build_index's. Unique ids are the
+    build's documented precondition: on a duplicate id, n counts rows."""
+    import uuid
+
+    from omicidx_gh_etl_spark.operators import text as text_ops
+    from omicidx_gh_etl_spark.operators.bm25_index import Bm25Index
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat"), (2, "a dog barked"), (3, "   "), (4, "the the cat ran far")],
+        "doc_id long, text string",
+    )
+    idx = Bm25Index(spark, f"bm25idx_t_{uuid.uuid4().hex[:8]}")
+
+    def persisted_stats():
+        return tuple(spark.table(idx.stats_table).collect()[0])
+
+    try:
+        idx.build(docs, "text", "doc_id", n_buckets=4)
+        _, _, stats = text_ops.bm25_build_index(docs, "text", "doc_id", materialize=False)
+        assert persisted_stats() == tuple(stats.collect()[0])
+        dup = docs.unionByName(spark.createDataFrame([(2, "a dog barked")], docs.schema))
+        idx.build(dup, "text", "doc_id", n_buckets=4)
+        assert persisted_stats()[0] == dup.count() == 5
+    finally:
+        for t in (idx.postings_table, idx.dfreq_table, idx.stats_table):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
