@@ -7,8 +7,8 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All queries live in ``omicidx_gh_etl_spark.queries`` (one registered
 (builder, oracle) pair per operator from SURVEY.md §2 plus the
-training-data-pipeline operators). tools/parity.py replicates the
-driver's comparison locally.
+training-data-pipeline operators). tools/parity_strict.py replicates
+the driver's comparison locally.
 """
 
 from __future__ import annotations

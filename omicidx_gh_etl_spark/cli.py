@@ -365,8 +365,7 @@ def cmd_audit(args: argparse.Namespace) -> int:
         start_ds="2001-01-01", end_ds="2100-01-01",
     )
     results = run_audits(
-        AUDITS, lambda n: runner.resolve(n, ctx), models,
-        runner.spark, args.warehouse_root,
+        AUDITS, lambda n: runner.resolve(n, ctx), models, args.warehouse_root
     )
     failed = False
     for r in results:

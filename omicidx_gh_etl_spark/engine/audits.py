@@ -75,7 +75,6 @@ def run_audits(
     registry: AuditRegistry,
     resolve: Callable[[str], DataFrame],
     models: list[str],
-    spark,
     warehouse_root: str | None = None,
     evidence_limit: int = 20,
 ) -> list[AuditResult]:

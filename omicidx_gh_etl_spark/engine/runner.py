@@ -160,7 +160,7 @@ class WarehouseRunner:
             ok_models = [r.model for r in results if r.status == "success"]
             self.audit_results = run_audits(
                 AUDITS, lambda n: self.resolve(n, ctx), ok_models,
-                self.spark, self.warehouse_root,
+                self.warehouse_root,
             )
         return results
 

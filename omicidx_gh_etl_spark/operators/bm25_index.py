@@ -136,11 +136,11 @@ class Bm25Index:
           exactly in any order, so sum/count is bit-identical to the
           former avg()).
 
-        Measured at the bench shape (2M docs, 256 buckets, interleaved
-        A/B): build 35.1 s → 30.6 s first pass, 56.2 s → 27.5 s second
-        pass (contended window), with all three table hashes and the
-        serve output identical (tools/r11_bm25_build_ab.py;
-        tests pin serve equivalence).
+        Measured against the former two-tokenize-pass build (2M docs,
+        256 buckets, interleaved A/B): build 35.1 s → 30.6 s first pass,
+        56.2 s → 27.5 s second pass (contended window), with all three
+        table hashes and the serve output identical (tests pin serve
+        equivalence).
 
         Precondition: ``id_col`` is unique. The stats are the corpus row
         count and the summed lengths of the distinct ``(doc_id, __dl)``

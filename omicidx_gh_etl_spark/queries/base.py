@@ -39,8 +39,9 @@ from pyspark.sql.types import DecimalType
 Builder = Callable[[SparkSession, str], DataFrame]
 
 # The synthetic tables every oracle runs against (DuckDB views over
-# {sf_dir}/{name}.parquet) — ONE definition shared by bench.py and
-# tools/parity*.py so a new table can't silently desync them.
+# {sf_dir}/{name}.parquet) — ONE definition shared by
+# tools/parity_strict.py and perfbench so a new table can't silently
+# desync them.
 ORACLE_TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"

@@ -29,7 +29,7 @@ def test_audit_pass_and_fail(spark, tmp_path):
         return df.filter(F.col("v").isNull())
 
     df = spark.createDataFrame([(1,), (-2,), (3,)], "v int")
-    results = run_audits(reg, lambda n: df, ["m"], spark, str(tmp_path / "wh"))
+    results = run_audits(reg, lambda n: df, ["m"], str(tmp_path / "wh"))
     by_name = {r.audit: r for r in results}
     assert by_name["no_negatives"].status == "fail"
     assert by_name["no_negatives"].bad_rows == 1

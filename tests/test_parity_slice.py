@@ -1,8 +1,8 @@
 """CI-style rotating strict-parity slice.
 
 The round driver samples ~50 of the registered queries per round, so
-most of the registry is only ever checked by tools/parity.py's
-row-level compare. This test replays the driver's EXACT pandas
+most of the registry is only ever checked by a full
+tools/parity_strict.py run. This test replays the driver's EXACT pandas
 value-hash gate (tools/parity_strict.py) over a deterministic 35-query
 window that rotates with the round number: every oracle-backed query
 gets a recorded strict check within ~5 rounds without any single test

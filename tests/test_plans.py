@@ -9,7 +9,9 @@ lineage) fails here, not in production.
 
 from __future__ import annotations
 
+import importlib.util
 import re
+from pathlib import Path
 
 import pytest
 
@@ -452,3 +454,14 @@ def test_bm25_index_serve_prunes_buckets_no_postings_shuffle(spark):
     # no workload-keyed distinct exchanges — deduped driver-side)
     body = plan.split("\n\n")[0]
     assert count_shuffles(body) == len(parts)
+
+
+def test_plan_docs_audit_only_registered_queries():
+    """tools/gen_plan_docs.py builds PLANS.md from its AUDITED list; a
+    name missing from the registry would only fail when the docs are
+    regenerated."""
+    path = Path(__file__).resolve().parent.parent / "tools" / "gen_plan_docs.py"
+    spec = importlib.util.spec_from_file_location("gen_plan_docs", path)
+    gen_plan_docs = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen_plan_docs)
+    assert set(gen_plan_docs.AUDITED) - REGISTRY.keys() == set()

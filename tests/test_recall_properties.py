@@ -1,7 +1,7 @@
 """ANN recall PROPERTIES pinned in the suite (r9 verdict item 2: the
-measured recall-vs-cost curve lived only in a bench row that a host
-fault could — and did — erase; the structural claims behind the curve
-belong in pytest where they cannot silently vanish).
+measured recall-vs-cost curve lived only in a benchmark record that a
+host fault could — and did — erase; the structural claims behind the
+curve belong in pytest where they cannot silently vanish).
 
 Two claims, both guaranteed by construction and therefore stable:
 
@@ -18,13 +18,13 @@ Two claims, both guaranteed by construction and therefore stable:
   stays reachable, and vectors lost just across one hyperplane become
   reachable.
 
-The corpus is the deterministic perturbed-replica family construction
-of bench._ann_recall_curve (each base embedding replicated with a
-fixed ±lattice perturbation, so replicas are genuine near neighbors
-with spread); ground truth is the exact brute cosine (arrow gemm
-engine, pytest-pinned bit-identical to the sql engine elsewhere). The
-MEASURED 200k-vector curve numbers (recall/sec per config) stay in
-SCALING.md + BENCH_DETAIL; this test pins the shape of the curve.
+The corpus is a deterministic perturbed-replica family (each base
+embedding replicated with a fixed ±lattice perturbation, so replicas
+are genuine near neighbors with spread); ground truth is the exact
+brute cosine (arrow gemm engine, pytest-pinned bit-identical to the
+sql engine elsewhere). The MEASURED 200k-vector curve numbers
+(recall/sec per config) stay in SCALING.md + BENCH_DETAIL; this test
+pins the shape of the curve.
 """
 
 from __future__ import annotations
@@ -128,7 +128,7 @@ def test_multiprobe_lsh_recall_at_least_single_probe(spark, sf_dir):
     # ~125 vectors each, so both probe modes have real candidate pools
     # (at 8 hyperplanes the 256 buckets average ~8 vectors and BOTH
     # modes starve — recall floors say nothing there; the dense-corpus
-    # 8-hyperplane servable point lives in the 200k bench curve)
+    # 8-hyperplane servable point lives in the measured 200k curve)
     hyper = base.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("hp_id"), F.col("embedding").alias("hv")
     )

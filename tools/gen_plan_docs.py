@@ -3,8 +3,8 @@ plus the non-headline corpus-rewrite/eval operators.
 
 Run after plan-affecting changes:  python tools/gen_plan_docs.py
 
-For each audited query (bench.py HEADLINE + the flagship mart + the
-rewrite/eval extras listed in main()), records the
+For each query in ``AUDITED`` (the headline set + the rewrite/eval
+extras), records the
 scale-relevant facts straight from the executed plan: shuffle count,
 join strategies, pushed filters, scan schemas (column pruning), window
 partitioning, and Python-boundary operators. The full formatted plan is
@@ -23,6 +23,39 @@ from omicidx_gh_etl_spark.queries import REGISTRY  # noqa: E402
 from omicidx_gh_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
+
+# The headline set plus the non-headline operators whose scale
+# arguments deserve plan evidence (corpus-rewrite + evals).
+AUDITED = (
+    "mart_denormalized",       # reference's 49.4M-row join+export analogue
+    "join_fact_accession",     # bronze detail×accessions join
+    "agg_multikey_pricing",    # TPC-H Q1-shape aggregation
+    "dedup_latest_by_key",     # window dedup
+    "explode_tokens_topk",     # unnest + top-k
+    "dedup_exact",
+    "dedup_minhash_lsh",       # sub-quadratic near-dup path
+    "dedup_simhash",
+    "similarity_topk",         # brute-force ANN baseline
+    "similarity_ivf_assign",   # ANN scale path
+    "similarity_ivf_search",   # full ANN search (probe + cell scan)
+    "text_quality",
+    "text_winnow_fingerprints",  # rolling-hash fingerprints
+    "range_join_events_windows",  # bin-bucketed interval join
+    "sessionize_events",
+    "session_window_builtin",   # native dynamic session windows
+    "sketch_heavy_hitters",     # MG candidates + exact verify
+    "interval_coalesce_user_spans",  # one-shuffle span merge
+    "dedup_paragraphs_rewrite",
+    "dedup_span_excision",
+    "similarity_knn_label_probe",
+    "similarity_ivf_recall",
+    "join_bloom_pruned_semi",
+    "text_bm25_topk",
+    "text_bm25_index_serve",
+    # ids_contiguous_assign deliberately absent: its builder
+    # materializes (eager localCheckpoint), so the visible plan is
+    # just the checkpoint scan — plan story lives in operators/ids.py
+)
 
 HEADER = """\
 # PLANS — physical-plan evidence: headline queries + rewrite/eval ops
@@ -87,28 +120,10 @@ def summarize(plan: str) -> dict:
 
 
 def main() -> None:
-    from bench import HEADLINE  # the graded set
-
     spark = get_spark(app_name="plan-docs", cpus=8)
-    # the graded headline set plus the non-headline operators whose
-    # scale arguments deserve plan evidence (corpus-rewrite + evals)
-    extra = [
-        "mart_denormalized",
-        "dedup_paragraphs_rewrite",
-        "dedup_span_excision",
-        "similarity_knn_label_probe",
-        "similarity_ivf_recall",
-        "join_bloom_pruned_semi",
-        "text_bm25_topk",
-        "text_bm25_index_serve",
-        # ids_contiguous_assign deliberately absent: its builder
-        # materializes (eager localCheckpoint), so the visible plan is
-        # just the checkpoint scan — plan story lives in operators/ids.py
-    ]
-    names = list(dict.fromkeys(HEADLINE + extra))
     rows = []
     details = []
-    for name in names:
+    for name in AUDITED:
         df = REGISTRY[name].builder(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         s = summarize(plan)
@@ -129,7 +144,7 @@ def main() -> None:
         )
     out = HEADER + "\n".join(rows) + "\n\n## Full plans\n\n" + "\n".join(details)
     Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(out)
-    print(f"wrote PLANS.md ({len(names)} queries)")
+    print(f"wrote PLANS.md ({len(AUDITED)} queries)")
 
 
 if __name__ == "__main__":

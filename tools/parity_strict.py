@@ -4,8 +4,8 @@ The driver (CORRECTNESS_r{N}.json) compares the Spark result against the
 DuckDB oracle through *pandas*: ``duckdb.execute(sql).df()`` on the
 oracle side, a pandas frame built from the Spark rows on the other, then
 sorts columns by name, ``sort_values`` over all columns, and hashes the
-canonical frame. That path is dtype-sensitive in ways the row-level
-compare in tools/parity.py is not:
+canonical frame. That path is dtype-sensitive in ways a row-level
+compare of rounded values is not:
 
 - DuckDB ``.df()`` coerces DECIMAL -> float64 and SUM(BIGINT) -> HUGEINT
   -> float64, while Spark rows carry ``Decimal``/``int`` objects, so
