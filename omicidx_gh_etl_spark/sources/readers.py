@@ -90,6 +90,20 @@ def read_csv(
     return reader.csv(path)
 
 
+def fan_out(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """One-column ``path string`` DataFrame over driver-listed ``paths``.
+
+    The file list is split into ``min(len(paths), defaultParallelism)``
+    partitions by ``parallelize`` — no shuffle, so the per-file work
+    (parse, decompress, footer read) runs in the first and only stage
+    instead of behind a round-robin exchange. ``paths`` must be
+    non-empty; callers return their own empty schema first.
+    """
+    sc = spark.sparkContext
+    n = min(len(paths), sc.defaultParallelism)
+    return spark.createDataFrame(sc.parallelize([(p,) for p in paths], n), "path string")
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic test table (TESTDATA.md)."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .readers import fan_out
+
 SOFT_RECORD_SCHEMA = T.StructType(
     [
         T.StructField("entity_type", T.StringType()),
@@ -121,9 +123,7 @@ def extract_soft(spark: SparkSession, paths: list[str] | str) -> DataFrame:
         )
     if not paths:
         return spark.createDataFrame([], SOFT_RECORD_SCHEMA)
-    files_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        min(len(paths), spark.sparkContext.defaultParallelism)
-    )
+    files_df = fan_out(spark, paths)
     cols = [f.name for f in SOFT_RECORD_SCHEMA.fields]
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

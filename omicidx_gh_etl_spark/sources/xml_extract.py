@@ -17,8 +17,8 @@ distributed plumbing (file fan-out, generator parse, normalization,
 schema enforcement) is the real, tested part; swapping in
 ``omicidx.sra.parser`` is a one-line change inside ``_records``.
 
-Scale: one task per file (repartition by file count up to cluster
-parallelism); downloads/decompression happen executor-side inside the
+Scale: one task per file up to cluster parallelism
+(``readers.fan_out``, no shuffle); downloads/decompression happen executor-side inside the
 task (the S7 pattern), so a million-file backfill is
 cluster-parallel with no driver bottleneck.
 """
@@ -33,6 +33,8 @@ from pathlib import Path
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .readers import fan_out
 
 EXPERIMENT_RECORD_SCHEMA = T.StructType(
     [
@@ -112,9 +114,7 @@ def extract_experiments(spark: SparkSession, paths: list[str] | str) -> DataFram
         )
     if not paths:
         return spark.createDataFrame([], EXPERIMENT_RECORD_SCHEMA)
-    files_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        min(len(paths), spark.sparkContext.defaultParallelism)
-    )
+    files_df = fan_out(spark, paths)
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in EXPERIMENT_RECORD_SCHEMA.fields]

@@ -1,60 +1,36 @@
-"""Per-round recorded QUALITY evidence beyond the value-hash gate.
+"""Quality floors that a value hash cannot express.
 
-As of round 8 every registered query is oracle-backed (the last four
-rows-only queries were converted: frozen seeds for
+Every registered query is oracle-backed (frozen seeds for
 `similarity_kmeans_fit` / `dedup_semantic_clusters`, a frozen codebook
 for `similarity_pq_search`, and an unrolled fixed-round SQL replay for
-`text_bpe_learn_merges`). This test remains because a value hash can't
-express QUALITY floors — "the refinement didn't collapse", "ADC recall
-clears the floor", "the clusters partition the corpus", "the span
-fixpoint converged" — so it computes those deterministic
-sub-properties at the driver's comparison scale each round, asserts
-the floors, and appends the measured values (keyed by round number)
-to ROWS_ONLY_EVIDENCE.json — recorded evidence every round, not a
-one-time pin. (`remove_duplicate_spans_fixpoint` stays postcondition-
-pinned here; it is an operator, not a registered query.)
+`text_bpe_learn_merges`), and ``tests/test_strict_parity.py`` checks
+all four value-exactly on every run. A hash still cannot say "the
+refinement didn't collapse", "ADC recall clears the floor", "the
+clusters partition the corpus" or "the span fixpoint converged", so
+this module computes those deterministic sub-properties at sf0.01 and
+asserts their floors. (`remove_duplicate_spans_fixpoint` is an
+operator, not a registered query; its postcondition is pinned here.)
 """
 
 from __future__ import annotations
 
-import importlib.util
-import json
 import math
 import os
-import sys
 
 import numpy as np
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from omicidx_gh_etl_spark.queries import REGISTRY
+
 SF_GATE = "/root/testdata/sf0.01"
-EVIDENCE = os.path.join(REPO, "ROWS_ONLY_EVIDENCE.json")
-
-spec = importlib.util.spec_from_file_location(
-    "parity_strict", os.path.join(REPO, "tools", "parity_strict.py")
-)
-_ps = importlib.util.module_from_spec(spec)
-sys.modules.setdefault("parity_strict", _ps)
-spec.loader.exec_module(_ps)
-
-from omicidx_gh_etl_spark.queries import REGISTRY  # noqa: E402
-
-
-def _record(props: dict) -> None:
-    data = {}
-    if os.path.exists(EVIDENCE):
-        with open(EVIDENCE) as fh:
-            data = json.load(fh)
-    key = f"r{_ps.current_round(REPO):02d}"
-    data.setdefault(key, {}).update(props)
-    with open(EVIDENCE, "w") as fh:
-        json.dump(data, fh, indent=1, sort_keys=True)
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")
 def test_kmeans_fit_centroid_count_and_separation(spark):
     """k=8 distinct centroids, full dimensionality, and non-degenerate
-    pairwise separation (no two centroids collapse)."""
+    pairwise separation (no two centroids collapse). Last recorded: 8
+    centroids of 64 dims, min pairwise cosine separation 0.933 against
+    the 1e-4 floor."""
     rows = REGISTRY["similarity_kmeans_fit"].builder(spark, SF_GATE).collect()
     cents: dict[int, dict[int, float]] = {}
     for r in rows:
@@ -71,22 +47,15 @@ def test_kmeans_fit_centroid_count_and_separation(spark):
     np.fill_diagonal(cos, -1.0)
     min_sep = float(1.0 - cos.max())
     assert min_sep > 1e-4, "two centroids collapsed"
-    _record({
-        "similarity_kmeans_fit": {
-            "n_centroids": len(cents),
-            "dims": dims.pop(),
-            "min_pairwise_cosine_separation": round(min_sep, 6),
-        }
-    })
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")
 def test_pq_search_recall_floor_vs_exact_l2(spark):
     """ADC top-5 recall against the exact L2 top-5 (numpy ground truth
     over the same parquet) must clear the floor — PQ with m=4, k=16
-    codebooks measured 0.33 on the near-random synthetic sf0.01
-    embeddings (recorded per round in ROWS_ONLY_EVIDENCE.json); 0.15
-    is the regression alarm in case the driver reseeds the corpus."""
+    codebooks last recorded 0.467 (0.4 / 0.4 / 0.6 per query; earlier
+    records 0.333) on the near-random synthetic sf0.01 embeddings;
+    0.15 is the regression alarm in case the corpus is reseeded."""
     got = REGISTRY["similarity_pq_search"].builder(spark, SF_GATE).collect()
     by_q: dict[int, set[int]] = {}
     for r in got:
@@ -110,38 +79,27 @@ def test_pq_search_recall_floor_vs_exact_l2(spark):
         recalls.append(len(true5 & by_q[q]) / 5.0)
     mean_recall = float(np.mean(recalls))
     assert mean_recall >= 0.15, recalls
-    _record({
-        "similarity_pq_search": {
-            "recall_at_5_vs_exact_l2": round(mean_recall, 4),
-            "per_query": [round(r, 2) for r in recalls],
-        }
-    })
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")
 def test_semantic_clusters_partition_and_drop_bounds(spark):
     """The cluster summary must PARTITION the corpus (sizes sum to the
     table count), never drop more than size-1 per cluster, and keep at
-    least one vector per cluster."""
+    least one vector per cluster. Last recorded: 8 clusters over the
+    500-vector corpus, 0 dropped."""
     rows = REGISTRY["dedup_semantic_clusters"].builder(spark, SF_GATE).collect()
     n_corpus = spark.read.parquet(
         os.path.join(SF_GATE, "embeddings.parquet")
     ).count()
     assert sum(r["n_vectors"] for r in rows) == n_corpus
     assert all(0 <= r["n_dropped"] <= r["n_vectors"] - 1 for r in rows)
-    _record({
-        "dedup_semantic_clusters": {
-            "n_clusters": len(rows),
-            "n_corpus": n_corpus,
-            "total_dropped": int(sum(r["n_dropped"] for r in rows)),
-        }
-    })
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")
 def test_span_fixpoint_postcondition_recorded(spark):
     """remove_duplicate_spans_fixpoint's postcondition on the real
-    corpus sample: zero >=min_len duplicated spans remain."""
+    corpus sample: zero >=min_len duplicated spans remain. Last
+    recorded: 120 docs in, 120 out, 0 spans remaining."""
     from pyspark.sql import functions as F
 
     from omicidx_gh_etl_spark.operators import dedup
@@ -158,23 +116,17 @@ def test_span_fixpoint_postcondition_recorded(spark):
     assert remaining == 0
     docs_out = out.count()
     assert math.isfinite(docs_out) and docs_out > 0
-    _record({
-        "remove_duplicate_spans_fixpoint": {
-            "docs_in": 120, "docs_out": docs_out,
-            "spans_remaining": int(remaining),
-        }
-    })
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")
 def test_bpe_learn_merges_table_recorded(spark):
     """The learned merge table is fully deterministic (exact integer
-    pair counts, total-order argmax) even though it has no SQL oracle
-    — record it verbatim each round so any drift is visible in the
-    diff, and assert the structural floors: 8 rounds completed on
-    this corpus, counts non-increasing is NOT required (later merges
-    can create new frequent pairs) but every count is positive and
-    orders are 1..8."""
+    pair counts, total-order argmax); its values are checked exactly
+    against the unrolled SQL oracle by the strict gate (last recorded
+    first merge: ``e`` + ``r``, 4568 pairs). Here the structural
+    floors: 8 rounds completed on this corpus, counts non-increasing
+    is NOT required (later merges can create new frequent pairs) but
+    every count is positive and orders are 1..8."""
     rows = sorted(
         REGISTRY["text_bpe_learn_merges"].builder(spark, SF_GATE).collect(),
         key=lambda r: r["merge_order"],
@@ -182,11 +134,3 @@ def test_bpe_learn_merges_table_recorded(spark):
     assert [r["merge_order"] for r in rows] == list(range(1, 9))
     assert all(r["pair_count"] > 0 for r in rows)
     assert all(len(r["left"]) >= 1 and len(r["right"]) >= 1 for r in rows)
-    _record(
-        {
-            "bpe_merges": [
-                [r["merge_order"], r["left"], r["right"], r["pair_count"]]
-                for r in rows
-            ]
-        }
-    )
