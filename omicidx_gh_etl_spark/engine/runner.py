@@ -183,15 +183,7 @@ class WarehouseRunner:
             return self._cache[name]
         m = self.registry.get(name)
         path = self._table_path(m)
-        if m.kind == "SNAPSHOT_TABLE" and Path(path, "_log").exists():
-            # manifest-pinned read — never a raw directory scan (the
-            # data dir holds every commit's files, not one version)
-            from .snapshots import SnapshotTable
-
-            df = SnapshotTable(path).read(self.spark)
-            self._cache[name] = df
-            return df
-        if m.kind not in ("VIEW", "SNAPSHOT_TABLE") and Path(path).exists():
+        if m.kind != "VIEW" and Path(path).exists():
             try:
                 df = self.spark.read.parquet(path)
             except Exception:
@@ -239,19 +231,7 @@ class WarehouseRunner:
             # and a schema-less read of the empty dataset fails with
             # UNABLE_TO_INFER_SCHEMA
             self._cache[m.name] = self.spark.read.schema(df.schema).parquet(path)
-        elif m.kind == "SNAPSHOT_TABLE":
-            # versioned TABLE: each run commits a snapshot version —
-            # history/rollback via engine.snapshots (CLI `snapshots`);
-            # a bad build is a metadata-only rollback, not a recompute
-            from .snapshots import SnapshotTable
-
-            table = SnapshotTable(self._table_path(m))
-            snap = table.commit_overwrite(
-                df, note=f"warehouse run [{ctx.start_ds}..{ctx.end_ds}]"
-            )
-            rows = snap.n_rows
-            self._cache[m.name] = table.read(self.spark)
-        else:  # TABLE
+        else:  # TABLE (ModelRegistry.register admits no other kind)
             path = self._table_path(m)
             # row metric piggybacks on the write job (df.observe) — no
             # second count scan over what was just written

@@ -21,6 +21,10 @@ from pyspark.sql import DataFrame
 #   ctx carries start_ds / end_ds / data_root / spark
 Resolver = Callable[[str], DataFrame]
 
+# the materializations WarehouseRunner implements: temp view,
+# date-partitioned parquet with interval overwrite, full parquet
+MODEL_KINDS = ("VIEW", "INCREMENTAL_BY_TIME_RANGE", "TABLE")
+
 
 @dataclass
 class ModelContext:
@@ -44,7 +48,7 @@ class ExportConfig:
 class Model:
     name: str  # e.g. "bronze.stg_sra_experiments"
     layer: str  # raw | bronze | geometadb | mart
-    kind: str  # VIEW | INCREMENTAL_BY_TIME_RANGE | TABLE | SNAPSHOT_TABLE
+    kind: str  # one of MODEL_KINDS
     build: Callable[[Resolver, ModelContext], DataFrame]
     depends_on: tuple[str, ...] = ()
     time_column: str | None = None  # DATE column for incremental models
@@ -59,6 +63,11 @@ class ModelRegistry:
         self._models: dict[str, Model] = {}
 
     def register(self, model: Model) -> Model:
+        if model.kind not in MODEL_KINDS:
+            raise ValueError(
+                f"{model.name}: unknown kind {model.kind!r}, "
+                f"expected one of {MODEL_KINDS}"
+            )
         if model.name in self._models:
             raise ValueError(f"duplicate model: {model.name}")
         self._models[model.name] = model

@@ -2,11 +2,10 @@
 
 All operators are pure DataFrame/expression compositions (JVM-side,
 whole-stage-codegen'd; no row-at-a-time Python UDFs anywhere). The
-one Arrow-batched exception: :func:`dedup_paragraphs` defaults to a
-``mapInPandas`` chunk producer because Spark's array
-higher-order-function lambdas are interpreted and measure ~2× slower
-than batched Python string ops (the ``engine="sql"`` path keeps the
-pure-expression plan, output pinned identical).
+one Arrow-batched exception: :func:`dedup_paragraphs` chunks with a
+``mapInPandas`` producer because Spark's array higher-order-function
+lambdas are interpreted and measure ~2× slower than batched Python
+string ops.
 
 - ``exact_dedup``            — hash-groupBy exact duplicate clustering
 - ``shingles``               — word n-gram shingling (the common substrate)
@@ -579,7 +578,6 @@ def dedup_paragraphs(
     text_col: str,
     id_col: str,
     chunk_tokens: int = 10,
-    engine: str = "arrow",
 ) -> DataFrame:
     """C4-style paragraph-level dedup WITH document reassembly: split
     each document into fixed ``chunk_tokens``-token paragraphs, keep
@@ -594,7 +592,7 @@ def dedup_paragraphs(
     duplicated spans): this op rewrites the corpus — the shape that
     actually feeds training.
 
-    Plan, shared by both engines: chunk production (map-only), then
+    Plan: chunk production (map-only, :func:`paragraph_chunks`), then
     winner selection as ``groupBy(para).agg(min(struct(id, pos)))`` —
     a HASH aggregate with map-side partials whose min-struct order is
     exactly the ``row_number() OVER (PARTITION BY para ORDER BY id,
@@ -603,23 +601,17 @@ def dedup_paragraphs(
     VALUE (exact — no hash-collision false drops; high-cardinality
     and uniform, so the shuffle is skew-free).
 
-    ``engine`` picks the chunk producer:
-
-    - ``"arrow"`` (default): Arrow-batched ``mapInPandas`` — plain
-      ``str.split``/``join`` per batch, stateless, memory bounded by
-      the Arrow batch size. Spark's array higher-order-function
-      lambdas (``filter``/``transform``/``slice``) are interpreted,
-      not codegen'd, and measure ~2× slower than Python string ops at
-      500k docs (chunk stage: HOF slice 2.0×, JVM regex chunker 1.2×
-      the arrow one; the arrow rewrite took 10.9 s vs DuckDB's 7.2 s);
-      this is the documented exception to the expressions-first rule.
-    - ``"sql"``: the pure-expression plan (posexplode over
-      slice/concat_ws of the token array) — zero Python workers, for
-      Python-less executors or plan-audit baselines. Bit-identical
-      output (pytest-pinned).
+    The chunk producer is Arrow-batched ``mapInPandas`` — plain
+    ``str.split``/``join`` per batch, stateless, memory bounded by the
+    Arrow batch size. Spark's array higher-order-function lambdas
+    (``filter``/``transform``/``slice``) are interpreted, not
+    codegen'd, and measure ~2× slower than Python string ops at 500k
+    docs (chunk stage: HOF slice 2.0×, JVM regex chunker 1.2× the
+    Arrow one; the Arrow rewrite took 10.9 s vs DuckDB's 7.2 s); this
+    is the documented exception to the expressions-first rule.
     """
     keep = (
-        paragraph_chunks(df, text_col, id_col, chunk_tokens, engine)
+        paragraph_chunks(df, text_col, id_col, chunk_tokens)
         .groupBy("para")
         .agg(F.min(F.struct(F.col(id_col).alias("i"),
                             F.col("pos").alias("p"))).alias("w"))
@@ -634,24 +626,23 @@ def paragraph_chunks(
     text_col: str,
     id_col: str,
     chunk_tokens: int = 10,
-    engine: str = "arrow",
 ) -> DataFrame:
     """The chunk-production stage of :func:`dedup_paragraphs` on its
-    own → ``(id, pos, para)`` — exposed so the bench can decompose the
-    row (chunker vs winner-selection tail) and callers can reuse the
+    own → ``(id, pos, para)`` — exposed so a profile can decompose the
+    op (chunker vs winner-selection tail) and callers can reuse the
     chunking for other paragraph-granularity ops.
 
-    Measured at 500k docs (r9): the arrow python-str chunker is the
-    FASTEST of three implementations — the codegen'd HOF slice plan
-    ("sql" engine) runs 2.0x slower (interpreted lambdas), and a JVM
-    ``regexp_extract_all('(\\S+( \\S+){0,9})')`` greedy-group chunker
-    (bit-identical output) 1.2x slower (backtracking group). Arrow
-    batch sizing is flat here (2048: 1.9x worse from per-batch python
-    overhead; 5k-20k within ±5%) — unlike the blocks scan, the chunker
-    is compute-bound in python str work, not transfer-bound, so batch
-    pipelining has nothing to hide.
+    Measured at 500k docs: the Arrow python-str chunker is the
+    FASTEST of three implementations — a HOF plan (posexplode over
+    slice/concat_ws of the token array) runs 2.0x slower (interpreted
+    lambdas), and a JVM ``regexp_extract_all('(\\S+( \\S+){0,9})')``
+    greedy-group chunker (bit-identical output) 1.2x slower
+    (backtracking group). Arrow batch sizing is flat here (2048: 1.9x
+    worse from per-batch python overhead; 5k-20k within ±5%) — unlike
+    the blocks scan, the chunker is compute-bound in python str work,
+    not transfer-bound, so batch pipelining has nothing to hide.
 
-    Measured rejection (round 10, do not re-try blindly): a
+    Measured rejection (do not re-try blindly): a
     ``mapInArrow`` numpy kernel that re-sliced the utf8 data buffer by
     offsets arithmetic (guide §4.2's buffer re-slicing pattern; exact
     per-row fallback for irregular spacing) was bit-identical but NOT
@@ -665,63 +656,40 @@ def paragraph_chunks(
     content scan), not when the row work is already a C loop over the
     same bytes.
     """
-    if engine not in ("arrow", "sql"):
-        raise ValueError(f"engine must be 'arrow' or 'sql', got {engine!r}")
-    qid = f"`{id_col}`"
-    if engine == "arrow":
-        from pyspark.sql.types import IntegerType, StringType, StructField
-        from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType, StringType, StructField
+    from pyspark.sql.types import StructType
 
-        in_id = df.schema[id_col]
-        out_schema = StructType([
-            StructField(id_col, in_id.dataType, in_id.nullable),
-            StructField("pos", IntegerType(), False),
-            StructField("para", StringType(), False),
-        ])
-        ct = chunk_tokens
+    in_id = df.schema[id_col]
+    out_schema = StructType([
+        StructField(id_col, in_id.dataType, in_id.nullable),
+        StructField("pos", IntegerType(), False),
+        StructField("para", StringType(), False),
+    ])
+    ct = chunk_tokens
 
-        def _chunk_batches(batches):
-            import pandas as pd
+    def _chunk_batches(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                ids: list = []
-                poss: list = []
-                paras: list = []
-                for did, txt in zip(pdf.iloc[:, 0].values,
-                                    pdf.iloc[:, 1].values):
-                    if not txt:
-                        continue
-                    toks = [x for x in txt.split(" ") if x]
-                    for p in range((len(toks) + ct - 1) // ct):
-                        ids.append(did)
-                        poss.append(p)
-                        paras.append(" ".join(toks[p * ct:p * ct + ct]))
-                yield pd.DataFrame(
-                    {id_col: ids, "pos": poss, "para": paras}
-                )
-
-        chunks = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            _chunk_batches, out_schema
-        )
-    else:
-        # project the token array ONCE: higher-order-function lambdas
-        # are not subexpression-hoisted, so splitting inline would
-        # re-tokenize the full text per chunk (O(tokens²) character
-        # work per doc)
-        toked = df.select(
-            F.col(id_col), tokens_expr(text_col).alias("__t")
-        ).where(F.size("__t") > 0)
-        chunks = (
-            toked.selectExpr(
-                qid,
-                f"posexplode(transform("
-                f"sequence(0, cast(ceil(size(__t) / {chunk_tokens}.0) as int)"
-                f" - 1), i -> concat_ws(' ', slice(__t,"
-                f" i * {chunk_tokens} + 1, {chunk_tokens}))))",
+        for pdf in batches:
+            ids: list = []
+            poss: list = []
+            paras: list = []
+            for did, txt in zip(pdf.iloc[:, 0].values,
+                                pdf.iloc[:, 1].values):
+                if not txt:
+                    continue
+                toks = [x for x in txt.split(" ") if x]
+                for p in range((len(toks) + ct - 1) // ct):
+                    ids.append(did)
+                    poss.append(p)
+                    paras.append(" ".join(toks[p * ct:p * ct + ct]))
+            yield pd.DataFrame(
+                {id_col: ids, "pos": poss, "para": paras}
             )
-            .withColumnRenamed("col", "para")
-        )
-    return chunks
+
+    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        _chunk_batches, out_schema
+    )
 
 
 def remove_duplicate_spans_fixpoint(

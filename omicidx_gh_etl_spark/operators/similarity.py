@@ -67,14 +67,6 @@ _FOLD_MAX_CENTROIDS = 1024
 # map's per-row value copy loses to the broadcast hash join — see
 # _probe_inline_sql's crossover measurement
 _PROBE_INLINE_MAX_ENTRIES = 64
-# unrolled-cosine dims cap: the straight-line form emits ~2 codegen
-# expressions per dimension TWICE (dot + self-dot); past the cap the
-# generated method risks the JVM's 64 KB method-size codegen fallback
-# and plan-build/constant-folding blowup — the same failure family as
-# the 26.7 s per-element-cast note in _unrolled_query_cos_sql's
-# docstring. 256 is a guard, not a measured crossover: the unrolled
-# form was measured only at 64 dims (6.16 s fold -> 2.00 s, 10M rows).
-_UNROLL_MAX_DIMS = 256
 
 
 def _centroid_fold_sql(
@@ -323,69 +315,6 @@ def _cos_pre_sql(a: str, b: str, anorm: str, bnorm: str) -> str:
     return f"({_dot_sql(a, b)} / ({anorm} * {bnorm}))"
 
 
-def _unrolled_query_cos_sql(qvd: list, vec: str = "v") -> str | None:
-    """Literal-query cosine as STRAIGHT-LINE codegen arithmetic: the
-    1-row query vector is collected at plan time (the same
-    driver-materialized bound the sql engine's broadcast imposes) and
-    the dot/norm folds are UNROLLED into ``dims`` explicit
-    multiply-adds with the query components inlined as double
-    literals. ``zip_with``/``aggregate`` are ``HigherOrderFunction``s
-    — CodegenFallback, an interpreted lambda call per element — so the
-    sql engine pays ~3 interpreted lambda evals per dimension per row;
-    the unrolled form whole-stage-codegens to a branch-free chain of
-    loads and fmas (measured 10M×64, min-of-3 same-window: 6.16 s fold
-    → 2.00 s unrolled — the best ROW-layout engine; the BLOCK layout's
-    frombuffer-gemv kernel still wins at 1.37 s because 2048 packed
-    vectors share one JVM row, vs a 512 B array alloc per vector
-    here. Keep the whole-array cast: a per-element
-    ``cast(v[i] as double)`` variant measured 26.7 s — the doubled
-    expression count trips codegen into an interpreted path).
-
-    Bit-identical by construction: the additions keep the fold's exact
-    left-to-right IEEE order from a 0.0 accumulator; literal doubles
-    round-trip exactly (repr is shortest-exact); the query norm is
-    folded in Python over the same doubles (the
-    :func:`_centroid_fold_sql` argument). A ``size() = dims`` guard
-    keeps every non-conforming row — NULL vector (size → NULL), ragged
-    shorter/longer (zip_with's NULL padding ⇒ NULL cosine) — on the
-    original fold expression, so degenerate corpora are untouched.
-    Returns ``None`` (caller falls back to the fold engine) when the
-    query itself is degenerate: empty, a NULL element (every cosine
-    would be NULL anyway) or a non-finite component (unprintable as a
-    SQL literal).
-    """
-    import math
-
-    if not qvd or any(x is None or not math.isfinite(x) for x in qvd):
-        return None
-    if len(qvd) > _UNROLL_MAX_DIMS:
-        # mirror the module's other literal-inliner size guards
-        # (_FOLD_MAX_CENTROIDS, _PROBE_INLINE_MAX_ENTRIES): a
-        # high-dimensional query would unroll into thousands of
-        # multiply-add terms twice — fall back to the fold engine
-        return None
-    dims = len(qvd)
-    qacc = 0.0
-    for x in qvd:
-        qacc += float(x) * float(x)
-    qn = repr(math.sqrt(qacc)) + "D"
-    prods = " + ".join(
-        f"({vec}[{i}] * {repr(float(qvd[i]))}D)" for i in range(dims)
-    )
-    sq = " + ".join(f"({vec}[{i}] * {vec}[{i}])" for i in range(dims))
-    unrolled = (
-        f"((cast(0.0 as double) + {prods}) / "
-        f"(sqrt(cast(0.0 as double) + {sq}) * {qn}))"
-    )
-    qv_lit = "array(" + ",".join(
-        repr(float(x)) + "D" for x in qvd
-    ) + ")"
-    fold = _cos_pre_sql(vec, qv_lit, _norm_sql(vec), qn)
-    return (
-        f"CASE WHEN size({vec}) = {dims} THEN {unrolled} ELSE {fold} END"
-    )
-
-
 def cosine_topk(
     emb: DataFrame,
     query: DataFrame,
@@ -393,65 +322,16 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_vec_col: str = "qv",
-    engine: str = "sql",
 ) -> DataFrame:
     """Brute-force cosine top-k of ``emb`` against a 1-row query vector.
 
     Scale: the query side is broadcast (1×dim), so this is a map-only
     scan + TakeOrderedAndProject — embarrassingly parallel; the
-    exactness baseline ANN variants are judged against.
-
-    ``engine="arrow"`` swaps the per-row expression cosine for an
-    Arrow-batched numpy gemv (``mapInArrow``): each batch computes all
-    dots as one BLAS matrix-vector product, pre-selects its local
-    top-k by the same (cos desc, id asc) order, and only those
-    candidate rows reach the global TakeOrdered. Same double-precision
-    math and 4-decimal rounding, so the result is bit-identical
-    (pytest-pinned). Spark's array higher-order functions are
-    interpreted per element — the gemv path trades an Arrow transfer
-    of the vector column for native SIMD arithmetic, and wins once the
-    scan is compute-dominated (~20% at 1M×128; more at higher dim).
-    At 100 TB neither brute-force variant is the serving path — that
-    is ``ivf_search``/``ann_index`` — this is the exact ground-truth
-    pass that evals and index builds are judged against.
+    exactness baseline ANN variants are judged against. At 100 TB this
+    is not the serving path — that is ``ivf_search``/``ann_index``.
+    For a corpus packed once at ingest, :func:`cosine_topk_blocks` is
+    the transfer-optimal exact scan.
     """
-    if engine not in ("sql", "arrow", "packed", "codegen"):
-        raise ValueError(
-            "engine must be 'sql', 'arrow', 'packed' or 'codegen', "
-            f"got {engine!r}"
-        )
-    if engine == "arrow":
-        return _cosine_topk_arrow(
-            emb, query, k, id_col, vec_col, query_vec_col
-        )
-    if engine == "packed":
-        return _cosine_topk_packed(
-            emb, query, k, id_col, vec_col, query_vec_col
-        )
-    if engine == "codegen":
-        # literal-query unrolled expression (see _unrolled_query_cos_sql)
-        # — JVM-only, no Python boundary, no HOF interpretation. The
-        # query is collected at plan time like the arrow engine does.
-        qrows = query.selectExpr(
-            f"cast(`{query_vec_col}` as array<double>) AS qv"
-        ).head(2)
-        if len(qrows) != 1:
-            raise ValueError("query must have exactly one row")
-        cos_sql = (
-            None if qrows[0]["qv"] is None
-            else _unrolled_query_cos_sql(list(qrows[0]["qv"]))
-        )
-        if cos_sql is not None:
-            e = emb.selectExpr(
-                f"`{id_col}`", f"cast(`{vec_col}` as array<double>) AS v"
-            )
-            return (
-                e.selectExpr(id_col, f"round({cos_sql}, 4) AS cos_sim")
-                .orderBy(F.desc("cos_sim"), F.asc(id_col))
-                .limit(k)
-            )
-        # degenerate query (empty / NULL / non-finite component):
-        # fall through to the fold engine, whose crossJoin handles it
     # Assembled with selectExpr/string filters, not Column chains: each
     # Column op is a py4j round trip + a JVM analyzer pass, and this
     # profiled at ~0.17 s/plan in Column form (plans identical).
@@ -486,14 +366,20 @@ def _uniform_lengths(vecs, dims: int) -> bool:
     return lo == hi == dims
 
 
-def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
-                       norms_nat=None):
-    """Shared per-batch exact top-k kernel for the arrow/packed engines:
-    native-dtype gemv pre-selection (margin-padded pool — see the error
-    bound in :func:`_cosine_topk_arrow`), float64 rescore of the pool
-    with Spark's decimal HALF_UP rounding, (cos desc, id asc) local
-    order, and the sql engine's null-cosine padding for degenerate
-    corpora. Returns ``(ids list, cos list)`` of ≤ k rows.
+def _batch_topk_scores(arr, idn_all, qv, qn, kk, norms_nat=None):
+    """Per-batch exact top-k kernel of :func:`cosine_topk_blocks`:
+    native-dtype gemv pre-selection of a margin-padded pool, float64
+    rescore of the pool with Spark's decimal HALF_UP rounding,
+    (cos desc, id asc) local order, and :func:`cosine_topk`'s
+    null-cosine padding for degenerate corpora. Returns
+    ``(ids list, cos list)`` of ≤ k rows.
+
+    Two-phase selection is exact by error bound, not by luck: a
+    64-dim float32 cosine differs from the float64 value by
+    ≤ ~dim·eps32 ≈ 8e-6, and rounded-4-decimal ties span < 1e-4, so a
+    1e-3 margin around the float32 k-th best provably contains every
+    row the exact order could select — the float32 pass halves memory
+    bandwidth and skips the f64 copy of the whole batch.
     ``norms_nat`` (per-row f32 norms precomputed at ingest — the
     blocks layout can carry them) skips the einsum norm pass, saving
     one full read of the batch matrix; the f64 rescore recomputes
@@ -501,6 +387,7 @@ def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
     (the margin bound already covers f32 norm error)."""
     import numpy as np
 
+    margin = 1e-3
     n = arr.shape[0]
     idn = idn_all
     if n > kk:
@@ -513,7 +400,7 @@ def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
         )
         with np.errstate(divide="ignore", invalid="ignore"):
             cos_nat = d_nat / np.sqrt(n2 * (qn * qn))
-        # zero-norm rows are NULL-cosine in the sql engine and sort
+        # zero-norm rows are NULL-cosine in cosine_topk and sort
         # last there; exclude them from the pool the same way (NaN
         # would poison np.partition's pivot)
         cos_nat = np.where(np.isfinite(cos_nat), cos_nat, -np.inf)
@@ -533,7 +420,7 @@ def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
     out_ids = idn[order].tolist()
     out_cos = cos[order].tolist()
     if len(out_ids) < kk:
-        # fewer finite rows than k: the sql engine's DESC sort puts
+        # fewer finite rows than k: cosine_topk's DESC sort puts
         # NULL cosines (zero-norm vectors) last but still inside the
         # LIMIT — emit the smallest-id null rows so the global
         # TakeOrdered agrees on degenerate corpora
@@ -545,278 +432,6 @@ def _batch_topk_scores(arr, idn_all, qv, qn, kk, margin=1e-3,
         out_ids += null_ids
         out_cos += [None] * len(null_ids)
     return out_ids, out_cos
-
-
-def _cosine_topk_arrow(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """Arrow/numpy engine for :func:`cosine_topk`: batch gemv +
-    per-batch (cos desc, id asc) pre-selection, global TakeOrdered.
-
-    The query vector is collected to the driver (1×dim — the same
-    driver-materialized bound the broadcast in the sql path has) and
-    closed over; per-batch state is O(k). Variable-length or
-    null-element batches fall back to a per-row python loop — only
-    fixed-width non-null embeddings take the reshape fast path.
-    """
-    import numpy as np
-
-    qrows = query.select(F.col(query_vec_col).alias("qv")).head(2)
-    if len(qrows) != 1:
-        raise ValueError("query must have exactly one row")
-    qv = np.asarray(qrows[0]["qv"], dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-    kk = int(k)
-    id_field = emb.schema[id_col]
-
-    # Two-phase exact selection: a native-dtype (float32 for
-    # array<float> inputs) gemv scans the batch, then ONLY a margin-
-    # padded candidate pool is recomputed in float64 with the exact
-    # HALF_UP rounding and (cos desc, id asc) order. Correct by error
-    # bound, not by luck: a 64-dim float32 cosine differs from the
-    # float64 value by ≤ ~dim·eps32 ≈ 8e-6, and rounded-4-decimal ties
-    # span < 1e-4, so a 1e-3 margin around the float32 k-th best
-    # provably contains every row the exact order could select — the
-    # float32 pass halves memory bandwidth and skips the f64 copy of
-    # the whole batch.
-    MARGIN = 1e-3
-
-    def _gemv_batches(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            # flatten(), NOT .values: .values returns the UNSLICED
-            # child buffer, so every batch after the first (nonzero
-            # slice offset) would size-mismatch and hit the slow
-            # per-row fallback. to_numpy, NOT np.asarray(arrow,
-            # dtype=...): the latter converts element-wise through
-            # __iter__ (measured 3.8 s/64M floats vs ~40 ms for the
-            # buffer view).
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            if vecs.null_count == 0 and _uniform_lengths(vecs, qv.size):
-                arr = flat.reshape(n, qv.size)
-            else:  # ragged/null rows: per-row (correctness fallback)
-                arr = np.array(
-                    [np.asarray(v, dtype=np.float64)
-                     if v is not None and len(v) == qv.size
-                     else np.full(qv.size, np.nan)
-                     for v in vecs.to_pylist()]
-                )
-            idn_all = np.asarray(ids.to_numpy(zero_copy_only=False))
-            out_ids, out_cos = _batch_topk_scores(
-                arr, idn_all, qv, qn, kk, margin=MARGIN
-            )
-            yield pa.record_batch(
-                [pa.array(out_ids), pa.array(out_cos, type=pa.float64())],
-                names=[id_col, "cos_sim"],
-            )
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField("cos_sim", DoubleType(), True),
-    ])
-    return (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .mapInArrow(_gemv_batches, out_schema)
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(kk)
-    )
-
-
-def pack_vectors(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "emb_f32",
-    dims: int | None = None,
-) -> DataFrame:
-    """One-time ingest transform: ``array<float|double>`` → fixed-width
-    little-endian float32 blob (``binary``), the storage layout the
-    ``engine="packed"`` brute-force scan reads.
-
-    Why: Spark's JVM→Arrow producer writes a ``list<double>`` column
-    element-by-element (per-element offsets bookkeeping + a validity
-    walk); for a fixed-dim vector that bookkeeping IS the measured
-    bottleneck of the brute-force kernel (~2 s of a 3 s 10M×64 scan —
-    the in-kernel gemv is ~0.3 s). A binary blob ships as one
-    ``System.arraycopy`` per row and one contiguous data buffer per
-    batch, which ``np.frombuffer`` reinterprets with zero copies. At
-    100 TB this is the difference between an Arrow transcode of the
-    whole corpus and a straight buffer hand-off — choose the layout
-    once at ingest, every downstream scan inherits it.
-
-    The packing itself is vectorized: one ``astype('<f4')`` of the
-    batch's flattened values + an offsets arange, reassembled with
-    ``pa.Array.from_buffers`` — no per-row Python. Rows that are NULL
-    or ragged (wrong length) become NULL blobs.
-    """
-    if dims is None:
-        probe = df.select(F.col(vec_col)).filter(
-            F.col(vec_col).isNotNull()
-        ).first()
-        if probe is None:
-            raise ValueError(f"cannot infer dims: {vec_col} is all-null")
-        dims = len(probe[0])
-    nbytes = 4 * int(dims)
-    id_field = df.schema[id_col]
-
-    def _pack(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            if vecs.null_count == 0 and _uniform_lengths(vecs, dims):
-                f32 = np.ascontiguousarray(flat, dtype="<f4")
-                offs = (np.arange(n + 1, dtype=np.int32) * nbytes)
-                packed = pa.Array.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(offs.tobytes()),
-                     pa.py_buffer(f32.tobytes())],
-                )
-            else:  # ragged/null rows: per-row fallback, NULL them out
-                packed = pa.array(
-                    [
-                        np.asarray(v, dtype="<f4").tobytes()
-                        if v is not None and len(v) == dims else None
-                        for v in vecs.to_pylist()
-                    ],
-                    type=pa.binary(),
-                )
-            yield pa.record_batch(
-                [ids, packed], names=[id_col, out_col]
-            )
-
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField(out_col, BinaryType(), True),
-    ])
-    return df.select(F.col(id_col), F.col(vec_col)).mapInArrow(
-        _pack, out_schema
-    )
-
-
-def _cosine_topk_packed(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """Packed-binary engine for :func:`cosine_topk`: ``vec_col`` holds
-    fixed-width little-endian float32 blobs (see :func:`pack_vectors`).
-
-    Each Arrow batch arrives as ONE contiguous data buffer + a byte-
-    offsets array — ``np.frombuffer(...).reshape(n, dims)`` is a
-    zero-copy reinterpretation, so the scan cost is gemv + buffer
-    hand-off with none of the ``list<double>`` per-element Arrow
-    bookkeeping the plain arrow engine pays. Scoring is the shared
-    exact kernel (:func:`_batch_topk_scores`): float32 gemv
-    pre-selection with a margin-padded pool, float64 rescore, HALF_UP
-    rounding — float32→float64 is exact, so the result is bit-identical
-    to the sql engine reading the unpacked ``array<float>`` column
-    (pytest-pinned). Blobs that are NULL or mis-sized rank as
-    null-cosine rows, matching the sql engine's zero-norm handling.
-    """
-    import numpy as np
-
-    qrows = query.select(F.col(query_vec_col).alias("qv")).head(2)
-    if len(qrows) != 1:
-        raise ValueError("query must have exactly one row")
-    qv = np.asarray(qrows[0]["qv"], dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-    dims = qv.size
-    nbytes = 4 * int(dims)
-    kk = int(k)
-    id_field = emb.schema[id_col]
-
-    def _packed_batches(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            arr = None
-            if vecs.null_count == 0:
-                # Binary arrays carry BYTE offsets (int32; int64 for
-                # large_binary) into one contiguous data buffer. A
-                # uniform-stride offsets run means the whole batch is
-                # already the row-major matrix — frombuffer + reshape,
-                # zero copies, no per-element walk.
-                bufs = vecs.buffers()
-                odt = (
-                    np.int64
-                    if pa.types.is_large_binary(vecs.type) else np.int32
-                )
-                offs = np.frombuffer(bufs[1], dtype=odt)[
-                    vecs.offset : vecs.offset + n + 1
-                ]
-                if offs[-1] - offs[0] == n * nbytes and bool(
-                    np.all(np.diff(offs) == nbytes)
-                ):
-                    arr = np.frombuffer(
-                        bufs[2], dtype="<f4",
-                        offset=int(offs[0]), count=n * dims,
-                    ).reshape(n, dims)
-            if arr is None:  # null/ragged blobs: per-row fallback
-                arr = np.array(
-                    [
-                        np.frombuffer(v, dtype="<f4").astype(np.float64)
-                        if v is not None and len(v) == nbytes
-                        else np.full(dims, np.nan)
-                        for v in vecs.to_pylist()
-                    ]
-                )
-            idn_all = np.asarray(ids.to_numpy(zero_copy_only=False))
-            out_ids, out_cos = _batch_topk_scores(
-                arr, idn_all, qv, qn, kk
-            )
-            yield pa.record_batch(
-                [pa.array(out_ids), pa.array(out_cos, type=pa.float64())],
-                names=[id_col, "cos_sim"],
-            )
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType([
-        StructField(id_col, id_field.dataType, id_field.nullable),
-        StructField("cos_sim", DoubleType(), True),
-    ])
-    return (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .mapInArrow(_packed_batches, out_schema)
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(kk)
-    )
 
 
 def pack_vector_blocks(
@@ -832,22 +447,22 @@ def pack_vector_blocks(
     the matching ``n`` little-endian int64 ids — up to ``block_rows``
     vectors per row.
 
-    Why a second packed layout: even with per-vector f32 blobs
-    (:func:`pack_vectors`) the JVM→Python transfer pays a per-ROW cost
-    (offsets bookkeeping, 10 M socket frames for 10 M vectors —
-    measured ~2.4 s of a 10M×64 scan whose gemv is ~0.3 s). Blocks
-    amortize that over ``block_rows`` vectors: ~10 k rows ship the
-    same 2.5 GB as one contiguous buffer stream, and the scan kernel
-    reinterprets each batch with two ``np.frombuffer`` calls. This is
-    how production vector stores shard fixed-dim embeddings (FAISS
-    shards, Lance/Vortex fixed-width blocks); at 100 TB the layout is
-    chosen once at ingest and every brute-force/rerank scan inherits
-    it. Block boundaries are per-Arrow-batch, so packing is map-only —
+    Why blocks: even with one fixed-width f32 blob per vector the
+    JVM→Python transfer pays a per-ROW cost (offsets bookkeeping, 10 M
+    socket frames for 10 M vectors — measured ~2.4 s of a 10M×64 scan
+    whose gemv is ~0.3 s). Blocks amortize that over ``block_rows``
+    vectors: ~10 k rows ship the same 2.5 GB as one contiguous buffer
+    stream, and the scan kernel reinterprets each batch with two
+    ``np.frombuffer`` calls. This is how production vector stores
+    shard fixed-dim embeddings (FAISS shards, Lance/Vortex fixed-width
+    blocks); at 100 TB the layout is chosen once at ingest and every
+    brute-force/rerank scan inherits it. Block boundaries are per-Arrow-batch, so packing is map-only —
     no shuffle, any grouping is valid because the scan is order-free.
 
     Ingest validation (NOT silent): NULL or wrong-width vectors raise —
     the block layout stores exactly-``dims`` vectors by contract; clean
-    them upstream (the per-row engines handle degenerate rows instead).
+    them upstream (:func:`cosine_topk` on the unpacked column handles
+    degenerate rows instead).
 
     ``with_norms=True`` packs a third blob of per-vector f32 norms
     (computed once at ingest, like FAISS stores norms alongside
@@ -952,17 +567,17 @@ def cosine_topk_blocks(
     Per Arrow batch the kernel reads ONE contiguous vecs buffer and one
     ids buffer (uniform-width blobs → ``np.frombuffer`` + reshape, zero
     copies), stacks every block in the batch into a single gemv, and
-    emits ≤ k candidates through the shared exact kernel
+    emits ≤ k candidates through the exact kernel
     (:func:`_batch_topk_scores`) — float64 rescore, HALF_UP rounding,
-    (cos desc, id asc) order, bit-identical to the sql engine on the
-    unpacked column (pytest-pinned). ``id_scale``/``id_offset_col``
+    (cos desc, id asc) order, bit-identical to :func:`cosine_topk` on
+    the unpacked column (pytest-pinned). ``id_scale``/``id_offset_col``
     re-base block-local ids to global ids (``global = local * scale +
     offset``) for merged shards whose local id spaces overlap — the
     same contiguous-global-ids convention as ``operators/ids.py``.
 
     Scale: map-only scan + TakeOrdered, embarrassingly parallel; the
-    layout removes the per-row Arrow bookkeeping that dominated the
-    per-vector engines (measured 10M×64: 2.4 s arrow → ~1.5 s blocks,
+    layout removes the per-row Arrow bookkeeping that dominates a
+    per-vector Arrow scan (measured 10M×64: 2.4 s → ~1.5 s blocks,
     vs a same-moment DuckDB ``list_dot_product`` scan at 1.2 s).
 
     Deployment note: size ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -1061,29 +676,14 @@ def _brute_topk(
     probe_id_col: str,
     exclude_self: bool = False,
     carry: tuple[str, ...] = (),
-    engine: str = "sql",
 ) -> DataFrame:
     """Multi-query brute-force cosine top-k: ``corpus`` must expose
     (``id_col``, ``v``), ``probes`` (``probe_id_col``, ``qvd``) — both
     double arrays. One place owns the determinism contract (rounded
     similarity, id tiebreak) shared by every exact-ground-truth eval;
-    ``carry`` names extra columns to keep on the output rows.
-
-    ``engine="arrow"`` computes all probe×batch cosines as ONE BLAS
-    gemm per Arrow batch and pre-selects each probe's local top-k
-    (with exact rounded-tie inclusion) before the per-probe window —
-    the window then ranks ~num_batches × k candidates per probe
-    instead of the full corpus × probes cross product. Same f64 math,
-    HALF_UP rounding and NULL-cosine LIMIT semantics; output
-    pytest-pinned identical to the sql engine. The probe side is
-    driver-materialized — the same small-eval-set bound the sql
-    engine's broadcast already imposes."""
-    if engine not in ("sql", "arrow"):
-        raise ValueError(f"engine must be 'sql' or 'arrow', got {engine!r}")
-    if engine == "arrow":
-        return _brute_topk_arrow(
-            corpus, probes, k, id_col, probe_id_col, exclude_self, carry
-        )
+    ``carry`` names extra columns to keep on the output rows. The
+    probe side is broadcast — the small-eval-set bound every caller
+    already meets."""
     # hoist both norms: corpus-row norm would otherwise re-evaluate per
     # probe, probe norm per corpus row (bit-identical, see _cos_pre_sql)
     corpus = corpus.selectExpr("*", f"{_norm_sql('v')} AS __vn")
@@ -1107,140 +707,6 @@ def _brute_topk(
     )
 
 
-def _brute_topk_arrow(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    id_col: str,
-    probe_id_col: str,
-    exclude_self: bool,
-    carry: tuple[str, ...],
-) -> DataFrame:
-    """Arrow/BLAS engine for :func:`_brute_topk` (see its docstring)."""
-    import numpy as np
-
-    kk = int(k)
-    probe_cols = set(probes.columns)
-    corpus_cols = set(corpus.columns)
-    for c in carry:
-        if c in probe_cols and c in corpus_cols:
-            raise ValueError(f"carry column {c!r} exists on both sides")
-        if c not in probe_cols and c not in corpus_cols:
-            raise ValueError(f"carry column {c!r} on neither side")
-    p_carry = [c for c in carry if c in probe_cols]
-    c_carry = [c for c in carry if c in corpus_cols]
-
-    prows = probes.select(probe_id_col, "qvd", *p_carry).collect()
-    if not prows:
-        raise ValueError("probes is empty")
-    pids = np.asarray([r[probe_id_col] for r in prows])
-    qm = np.asarray([r["qvd"] for r in prows], dtype=np.float64)  # P×d
-    qns = np.sqrt((qm * qm).sum(axis=1))
-    p_carry_vals = {c: [r[c] for r in prows] for c in p_carry}
-    dim = qm.shape[1]
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    c_schema = corpus.schema
-    p_schema = probes.schema
-    out_schema = StructType(
-        [StructField(probe_id_col, p_schema[probe_id_col].dataType, True)]
-        + [StructField(c, p_schema[c].dataType, True) for c in p_carry]
-        + [StructField(c, c_schema[c].dataType, True) for c in c_carry]
-        + [StructField(id_col, c_schema[id_col].dataType, True),
-           StructField("cos_sim", DoubleType(), True)]
-    )
-    # the sql engine's column order is probe_id, *carry (caller
-    # order), id, cos — restore it with a final select
-    out_order = [probe_id_col, *carry, id_col, "cos_sim"]
-
-    def _gemm_batches(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            idn = np.asarray(b.column(0).to_numpy(zero_copy_only=False))
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            if vecs.null_count == 0 and _uniform_lengths(vecs, dim):
-                arr = flat.reshape(n, dim).astype(np.float64, copy=False)
-            else:
-                arr = np.array(
-                    [np.asarray(v, dtype=np.float64)
-                     if v is not None and len(v) == dim
-                     else np.full(dim, np.nan)
-                     for v in vecs.to_pylist()]
-                )
-            norms = np.sqrt((arr * arr).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = (arr @ qm.T) / (norms[:, None] * qns[None, :])
-            cosm = np.sign(raw) * np.floor(np.abs(raw) * 1e4 + 0.5) / 1e4
-            if exclude_self:
-                self_mask = idn[:, None] == pids[None, :]
-            rows_idx: list = []
-            probe_idx: list = []
-            cos_out: list = []
-            for p in range(len(pids)):
-                col = cosm[:, p]
-                ok = np.isfinite(col)
-                if exclude_self:
-                    ok &= ~self_mask[:, p]
-                scores = np.where(ok, col, -np.inf)
-                n_ok = int(ok.sum())
-                if n_ok > kk:
-                    kth = np.partition(scores, n - kk)[n - kk]
-                    cand = np.flatnonzero(scores >= kth)  # exact ties in
-                else:
-                    cand = np.flatnonzero(ok)
-                rows_idx.extend(cand.tolist())
-                probe_idx.extend([p] * len(cand))
-                cos_out.extend(col[cand].tolist())
-                if n_ok < kk:
-                    # NULL cosines fill the window's LIMIT slots
-                    # (DESC NULLS LAST, id ASC) on degenerate corpora
-                    nul = ~np.isfinite(col)
-                    if exclude_self:
-                        nul &= ~self_mask[:, p]
-                    nul_idx = np.flatnonzero(nul)
-                    take = nul_idx[np.argsort(idn[nul_idx])][:kk - n_ok]
-                    rows_idx.extend(take.tolist())
-                    probe_idx.extend([p] * len(take))
-                    cos_out.extend([None] * len(take))
-            if not rows_idx:
-                continue
-            take_arr = pa.array(rows_idx, type=pa.int64())
-            cols = [pa.array([pids[p] for p in probe_idx])]
-            for c in p_carry:
-                vals = p_carry_vals[c]
-                cols.append(pa.array([vals[p] for p in probe_idx]))
-            for i, c in enumerate(c_carry):
-                cols.append(b.column(2 + i).take(take_arr))
-            cols.append(b.column(0).take(take_arr))
-            cols.append(pa.array(cos_out, type=pa.float64()))
-            yield pa.record_batch(
-                cols,
-                names=[probe_id_col, *p_carry, *c_carry, id_col, "cos_sim"],
-            )
-
-    cand = corpus.select(id_col, "v", *c_carry).mapInArrow(
-        _gemm_batches, out_schema
-    )
-    return (
-        cand.selectExpr(
-            "*",
-            f"row_number() OVER (PARTITION BY `{probe_id_col}` "
-            f"ORDER BY cos_sim DESC, `{id_col}`) AS rn",
-        )
-        .filter(f"rn <= {kk}")
-        .drop("rn")
-        .select(*out_order)
-    )
-
-
 def cosine_batch_topk(
     emb: DataFrame,
     probes: DataFrame,
@@ -1249,13 +715,12 @@ def cosine_batch_topk(
     vec_col: str = "embedding",
     q_id_col: str = "q_id",
     q_vec_col: str = "qv",
-    engine: str = "sql",
 ) -> DataFrame:
     """Public multi-query brute-force cosine top-k → ``(q_id, vec_id,
     cos_sim, rk)`` with the per-query rank materialized — the ranked
     form retrieval compositions consume (:func:`~.text.rrf_fuse`
     hybrid fusion, eval harnesses). Thin wrapper over
-    :func:`_brute_topk` (same determinism contract and engines); the
+    :func:`_brute_topk` (same determinism contract); the
     rank window runs over ≤ k rows per query."""
     corpus = emb.selectExpr(
         f"`{id_col}`", f"cast(`{vec_col}` as array<double>) AS v"
@@ -1263,7 +728,7 @@ def cosine_batch_topk(
     p = probes.selectExpr(
         f"`{q_id_col}`", f"cast(`{q_vec_col}` as array<double>) AS qvd"
     )
-    out = _brute_topk(corpus, p, int(k), id_col, q_id_col, engine=engine)
+    out = _brute_topk(corpus, p, int(k), id_col, q_id_col)
     w = W.partitionBy(q_id_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
     return out.withColumn("rk", F.row_number().over(w))
 
@@ -1278,7 +743,6 @@ def knn_label_vote(
     probe_id_col: str = "q_id",
     probe_vec_col: str = "qv",
     probe_label_col: str = "true_label",
-    engine: str = "sql",
 ) -> DataFrame:
     """kNN label probe — the standard embedding-quality evaluation for
     a training-data pipeline: predict each held-out probe's label by
@@ -1310,7 +774,7 @@ def knn_label_vote(
     )
     neighbors = _brute_topk(
         c, p, k, id_col, probe_id_col,
-        carry=(probe_label_col, label_col), engine=engine,
+        carry=(probe_label_col, label_col),
     )
     votes = neighbors.groupBy(probe_id_col, probe_label_col, label_col).agg(
         F.count(F.lit(1)).alias("votes")
@@ -1351,7 +815,6 @@ def ivf_recall(
     query_id_col: str = "q_id",
     query_vec_col: str = "qv",
     queries_in_corpus: bool = True,
-    engine: str = "sql",
 ) -> DataFrame:
     """Recall@k of :func:`ivf_search` against the brute-force cosine
     ground truth — THE standard ANN quality metric: per query, the
@@ -1384,7 +847,6 @@ def ivf_recall(
     )
     truth = _brute_topk(
         e, q, k, id_col, query_id_col, exclude_self=queries_in_corpus,
-        engine=engine,
     ).select(query_id_col, id_col)
     hits = truth.join(ivf, [query_id_col, id_col], "left_semi")
     n_true = truth.groupBy(query_id_col).agg(F.count(F.lit(1)).alias("n_true"))

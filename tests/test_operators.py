@@ -326,21 +326,6 @@ def test_bloom_num_hashes_bounds():
     assert "shiftleft" in mask
 
 
-def test_unrolled_cosine_dims_cap():
-    """r10 advice: the straight-line codegen cosine must bound its
-    generated SQL like the module's other literal inliners — above
-    _UNROLL_MAX_DIMS it returns None and the caller keeps the fold
-    engine (JVM codegen method-size / plan-build blowup risk)."""
-    from omicidx_gh_etl_spark.operators.similarity import (
-        _UNROLL_MAX_DIMS,
-        _unrolled_query_cos_sql,
-    )
-
-    at_cap = _unrolled_query_cos_sql([1.0] * _UNROLL_MAX_DIMS)
-    assert at_cap is not None and "CASE WHEN" in at_cap
-    assert _unrolled_query_cos_sql([1.0] * (_UNROLL_MAX_DIMS + 1)) is None
-
-
 def test_winnow_shared_passage_shares_fingerprint(spark):
     from omicidx_gh_etl_spark.operators import text as T
 
@@ -1077,164 +1062,30 @@ def test_dedup_paragraphs_rewrites_and_drops(spark):
     assert out[4] == "completely different words entirely"
 
 
-def test_cosine_topk_engines_identical(spark, sf_dir):
-    """The Arrow/numpy gemv engine returns exactly the sql-expression
-    engine's rows — same doubles, same HALF_UP rounding, same
-    (cos desc, id asc) tiebreak — on the corpus AND under heavy ties
-    (replicated identical vectors, where a per-batch top-k that sorts
-    by cosine alone would drop the lowest ids)."""
+def test_cosine_topk_tie_order(spark, sf_dir):
+    """Rounded-cosine ties resolve by ascending id: with 20 copies of
+    the query vector under ids 0-19 (and 20 copies each of two other
+    vectors under ids 20-59), the top-7 is ids 0-6 in that order, all
+    at cos_sim 1.0 — the (cos desc, id asc) total order the DuckDB
+    oracle produces. Each vector's copies are stored in DESCENDING id
+    order, so input order alone cannot produce the expected rows."""
     from omicidx_gh_etl_spark.operators import similarity
     from omicidx_gh_etl_spark.queries.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    a = similarity.cosine_topk(e, q, k=10, engine="sql").collect()
-    b = similarity.cosine_topk(e, q, k=10, engine="arrow").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-    # tie stress: 60 copies of the query vector under distinct ids
     ties = e.filter(F.col("vec_id") < 3).selectExpr(
         "explode(sequence(0, 19)) AS r", "vec_id", "embedding"
-    ).selectExpr("vec_id * 20 + r AS vec_id", "embedding")
-    at = similarity.cosine_topk(ties, q, k=7, engine="sql").collect()
-    bt = similarity.cosine_topk(ties, q, k=7, engine="arrow").collect()
-    assert [tuple(r) for r in at] == [tuple(r) for r in bt]
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        similarity.cosine_topk(e, q, engine="duck")
-    with _pytest.raises(ValueError):
-        similarity.cosine_topk(e, e.limit(2).selectExpr(
-            "embedding AS qv"), engine="arrow").collect()
-
-
-def test_cosine_topk_packed_engine_identical(spark, sf_dir):
-    """The packed-f32-binary engine (pack_vectors → frombuffer gemv)
-    returns exactly the sql engine's rows on the same corpus —
-    float32→float64 is exact, so the blob layout changes transfer
-    cost only, never values. Null and ragged blobs rank as
-    null-cosine rows like the sql engine's zero-norm vectors."""
-    from omicidx_gh_etl_spark.operators import similarity
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    packed = similarity.pack_vectors(e, "embedding", "vec_id")
-    a = similarity.cosine_topk(e, q, k=10, engine="sql").collect()
-    c = similarity.cosine_topk(
-        packed, q, k=10, vec_col="emb_f32", engine="packed"
-    ).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-
-    # tie stress (replicated identical vectors, distinct ids)
-    ties = e.filter(F.col("vec_id") < 3).selectExpr(
-        "explode(sequence(0, 19)) AS r", "vec_id", "embedding"
-    ).selectExpr("vec_id * 20 + r AS vec_id", "embedding")
-    at = similarity.cosine_topk(ties, q, k=7, engine="sql").collect()
-    ct = similarity.cosine_topk(
-        similarity.pack_vectors(ties, "embedding", "vec_id"),
-        q, k=7, vec_col="emb_f32", engine="packed",
-    ).collect()
-    assert [tuple(r) for r in at] == [tuple(r) for r in ct]
-
-    # degenerate blobs: NULL and wrong-width rows must sort last
-    # (null cosine), exactly like the sql engine's null/zero vectors
-    weird = spark.createDataFrame(
-        [(1, bytearray(b"\x00" * 12)), (2, None)],
-        "vec_id long, emb_f32 binary",
-    )
-    some = packed.filter(F.col("vec_id") < 3).unionByName(weird.filter(
-        F.col("vec_id") < 0).unionByName(weird))
-    got = similarity.cosine_topk(
-        some, q, k=5, vec_col="emb_f32", engine="packed"
-    ).collect()
-    assert len(got) == 5
-    tail = {r["vec_id"] for r in got if r["cos_sim"] is None}
-    assert tail == {1, 2}
-
-    # pack_vectors roundtrip: blob bytes == float32 of the source
-    import numpy as np
-    src = {r["vec_id"]: r["embedding"]
-           for r in e.limit(5).collect()}
-    for r in packed.filter(F.col("vec_id") < 5).collect():
-        want = np.asarray(src[r["vec_id"]], dtype="<f4").tobytes()
-        assert bytes(r["emb_f32"]) == want
-
-
-def test_cosine_topk_codegen_engine_identical(spark, sf_dir):
-    """The unrolled literal-query engine (engine="codegen" — straight
-    -line codegen arithmetic, no zip_with/aggregate HOF interpretation)
-    returns exactly the sql engine's rows: same left-to-right IEEE
-    fold order, same HALF_UP rounding, same (cos desc, id asc)
-    tiebreak — on the corpus, under heavy ties, and on ADVERSARIAL
-    rows (NULL vector, NULL element, ragged shorter AND longer,
-    zero-norm), which the size()-guard routes onto the original fold
-    expression so the zip_with NULL-padding semantics are preserved
-    bit-for-bit."""
-    from omicidx_gh_etl_spark.operators import similarity
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    a = similarity.cosine_topk(e, q, k=10, engine="sql").collect()
-    c = similarity.cosine_topk(e, q, k=10, engine="codegen").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-
-    # tie stress: replicated identical vectors under distinct ids
-    ties = e.filter(F.col("vec_id") < 3).selectExpr(
-        "explode(sequence(0, 19)) AS r", "vec_id", "embedding"
-    ).selectExpr("vec_id * 20 + r AS vec_id", "embedding")
-    at = similarity.cosine_topk(ties, q, k=7, engine="sql").collect()
-    ct = similarity.cosine_topk(ties, q, k=7, engine="codegen").collect()
-    assert [tuple(r) for r in at] == [tuple(r) for r in ct]
-
-    # adversarial corpus: every degenerate shape the guard must route
-    # to the fold branch (plus healthy rows that take the unrolled one)
-    qd = [float(x) for x in q.head(1)[0]["qv"]]
-    dims = len(qd)
-    weird = spark.createDataFrame(
-        [
-            (100, qd),                      # exact query copy
-            (101, None),                    # NULL vector
-            (102, qd[: dims - 1]),          # ragged shorter
-            (103, qd + [1.0]),              # ragged longer
-            (104, qd[:-1] + [None]),        # NULL element
-            # NB: an exact zero-norm row raises DIVIDE_BY_ZERO in BOTH
-            # engines (ANSI; same Divide node in the guard's THEN
-            # branch as in the fold) — near-zero exercises the
-            # magnitude extreme without the shared raise
-            (105, [1e-30] * dims),          # near-zero norm
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    aw = similarity.cosine_topk(weird, q, k=6, engine="sql").collect()
-    cw = similarity.cosine_topk(weird, q, k=6, engine="codegen").collect()
-    assert [tuple(r) for r in aw] == [tuple(r) for r in cw]
-
-    # degenerate QUERY vectors fall back to the fold engine: plans and
-    # values must match the sql engine exactly
-    for bad_q in ([None], [[1.0, None] + [0.0] * (dims - 2)]):
-        bq = spark.createDataFrame(
-            [(v,) for v in bad_q], "qv array<double>"
-        )
-        asql = similarity.cosine_topk(weird, bq, k=3, engine="sql").collect()
-        acg = similarity.cosine_topk(
-            weird, bq, k=3, engine="codegen"
-        ).collect()
-        assert [tuple(r) for r in asql] == [tuple(r) for r in acg]
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        similarity.cosine_topk(e, e.limit(2).selectExpr(
-            "embedding AS qv"), engine="codegen").collect()
+    ).selectExpr("vec_id * 20 + (19 - r) AS vec_id", "embedding")
+    got = [tuple(r) for r in similarity.cosine_topk(ties, q, k=7).collect()]
+    assert got == [(i, 1.0) for i in range(7)]
 
 
 def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
     """The BLOCK layout scan (pack_vector_blocks → cosine_topk_blocks)
-    returns exactly the sql engine's rows, including under ties and a
+    returns exactly cosine_topk's rows, including under ties and a
     non-default block size that forces multi-block batches; the packer
     REJECTS null/ragged vectors (ingest validation, never silent)."""
-    import numpy as np
     import pytest as _pytest
 
     from omicidx_gh_etl_spark.operators import similarity
@@ -1242,8 +1093,7 @@ def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    want = [tuple(r) for r in
-            similarity.cosine_topk(e, q, k=10, engine="sql").collect()]
+    want = [tuple(r) for r in similarity.cosine_topk(e, q, k=10).collect()]
     for br in (7, 1024):  # tiny blocks → many blocks per batch
         blocks = similarity.pack_vector_blocks(
             e, "embedding", "vec_id", block_rows=br
@@ -1300,34 +1150,17 @@ def test_cosine_topk_blocks_matches_sql_and_validates(spark, sf_dir):
         similarity.pack_vector_blocks(
             comp, "embedding", "vec_id", dims=2
         ).collect()
-    # pack_vectors must NULL the ragged rows, not mis-pack them
-    got = {r["vec_id"]: r["emb_f32"] for r in similarity.pack_vectors(
-        comp, "embedding", "vec_id", dims=2
-    ).collect()}
-    assert bytes(got[1]) == np.array([1.0, 2.0], dtype="<f4").tobytes()
-    assert got[2] is None and got[3] is None
-    # and the arrow engine must score them as null-cosine, identical
-    # to the sql engine, not shift vectors under wrong ids
-    qq = spark.createDataFrame(
-        [([1.0, 2.0],)], "qv array<double>"
-    )
-    a = [tuple(r) for r in similarity.cosine_topk(
-        comp, qq, k=3, engine="sql").collect()]
-    b = [tuple(r) for r in similarity.cosine_topk(
-        comp, qq, k=3, engine="arrow").collect()]
-    assert a == b
 
 
 def test_cosine_topk_blocks_norms_blob_identical(spark, sf_dir):
     """with_norms=True (ingest-time norms blob + kernel skip of the
-    einsum pass) returns exactly the no-norms and sql results."""
+    einsum pass) returns exactly cosine_topk's rows."""
     from omicidx_gh_etl_spark.operators import similarity
     from omicidx_gh_etl_spark.queries.tables import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    want = [tuple(r) for r in
-            similarity.cosine_topk(e, q, k=10, engine="sql").collect()]
+    want = [tuple(r) for r in similarity.cosine_topk(e, q, k=10).collect()]
     blocks = similarity.pack_vector_blocks(
         e, "embedding", "vec_id", block_rows=13, with_norms=True
     )
@@ -1355,73 +1188,6 @@ def test_bm25_batch_topk_null_term_dropped(spark, sf_dir):
         "text", "doc_id", k=5,
     ).collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in clean]
-
-
-def test_brute_topk_engines_identical(spark, sf_dir):
-    """The BLAS-gemm arrow engine of the multi-probe brute-force
-    top-k returns exactly the sql engine's rows — carried columns,
-    exclude_self, rounded-cos ties and id tiebreaks included — on the
-    corpus (via knn_label_vote / ivf_recall truth) and on a planted
-    all-ties corpus."""
-    from omicidx_gh_etl_spark.operators import similarity
-    from omicidx_gh_etl_spark.operators.similarity import _brute_topk
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    c = e.select("vec_id", F.expr(
-        "cast(embedding as array<double>)").alias("v"),
-        (F.col("vec_id") % 3).alias("label"))
-    p = e.filter("vec_id < 6").select(
-        F.col("vec_id").alias("q_id"),
-        F.expr("cast(embedding as array<double>)").alias("qvd"),
-        (F.col("vec_id") % 2).alias("true_label"))
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    a = _brute_topk(c, p, 5, "vec_id", "q_id",
-                    carry=("true_label", "label"))
-    b = _brute_topk(c, p, 5, "vec_id", "q_id",
-                    carry=("true_label", "label"), engine="arrow")
-    assert rows(a) == rows(b)
-    ax = _brute_topk(c, p, 5, "vec_id", "q_id", exclude_self=True)
-    bx = _brute_topk(c, p, 5, "vec_id", "q_id", exclude_self=True,
-                     engine="arrow")
-    assert rows(ax) == rows(bx)
-
-    # planted ties: 30 copies of one vector — the per-batch preselect
-    # must keep ALL rounded-cos ties so the id tiebreak stays global
-    ties = e.filter("vec_id < 2").selectExpr(
-        "explode(sequence(0, 14)) AS r", "vec_id", "embedding"
-    ).selectExpr(
-        "vec_id * 15 + r AS vec_id",
-        "cast(embedding as array<double>) AS v",
-    )
-    pt = p.limit(2)
-    at = _brute_topk(ties, pt, 4, "vec_id", "q_id")
-    bt = _brute_topk(ties, pt, 4, "vec_id", "q_id", engine="arrow")
-    assert rows(at) == rows(bt)
-
-    # end-to-end through the eval wrappers
-    knn_a = similarity.knn_label_vote(
-        e.withColumn("label", F.col("vec_id") % 3),
-        e.filter("vec_id < 6").selectExpr(
-            "vec_id AS q_id", "embedding AS qv",
-            "vec_id % 2 AS true_label"))
-    knn_b = similarity.knn_label_vote(
-        e.withColumn("label", F.col("vec_id") % 3),
-        e.filter("vec_id < 6").selectExpr(
-            "vec_id AS q_id", "embedding AS qv",
-            "vec_id % 2 AS true_label"), engine="arrow")
-    assert rows(knn_a) == rows(knn_b)
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        _brute_topk(c, p, 5, "vec_id", "q_id", engine="duck")
-    with _pytest.raises(ValueError):
-        _brute_topk(c, p.withColumnRenamed("true_label", "label"),
-                    5, "vec_id", "q_id", carry=("label",),
-                    engine="arrow")
 
 
 def test_knn_label_vote_majority_and_ties(spark):
@@ -1486,10 +1252,11 @@ def test_ivf_recall_full_probe_is_one(spark, sf_dir):
     assert all(0.0 <= r["recall"] <= 1.0 for r in partial.collect())
 
 
-def test_dedup_paragraphs_engines_identical(spark, sf_dir):
-    """The Arrow-batched chunker (default) and the pure-expression
-    plan produce bit-identical corpora on the test corpus — including
-    the edge docs (empty/whitespace text dropped, short tails kept)."""
+def test_dedup_paragraphs_chunker_edge_docs(spark, sf_dir):
+    """The Arrow-batched chunker on the test corpus plus edge docs:
+    empty and whitespace-only texts produce no chunks and drop out,
+    a doc shorter than one chunk is kept whole, and runs of spaces
+    collapse to single separators."""
     from omicidx_gh_etl_spark.operators import dedup
     from omicidx_gh_etl_spark.queries.tables import load_table
 
@@ -1500,15 +1267,18 @@ def test_dedup_paragraphs_engines_identical(spark, sf_dir):
         "doc_id long, text string",
     )
     d = d.unionByName(edge)
-    arrow = dedup.dedup_paragraphs(d, "text", "doc_id", engine="arrow")
-    sql = dedup.dedup_paragraphs(d, "text", "doc_id", engine="sql")
-    a = {(r["doc_id"], r["text"]) for r in arrow.collect()}
-    b = {(r["doc_id"], r["text"]) for r in sql.collect()}
-    assert a == b
-    assert 90001 not in {x[0] for x in a} and 90002 not in {x[0] for x in a}
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        dedup.dedup_paragraphs(d, "text", "doc_id", engine="duck")
+    chunks = {
+        r["doc_id"]: (r["pos"], r["para"])
+        for r in dedup.paragraph_chunks(d, "text", "doc_id")
+        .filter(F.col("doc_id") > 90000).collect()
+    }
+    assert chunks == {90003: (0, "one two"), 90004: (0, "padded spaces")}
+    out = {r["doc_id"]: r["text"]
+           for r in dedup.dedup_paragraphs(d, "text", "doc_id").collect()}
+    assert 90001 not in out and 90002 not in out
+    assert out[90003] == "one two"
+    assert out[90004] == "padded spaces"
+    assert len(out) > 2  # the corpus docs survive alongside the edges
 
 
 def test_dedup_paragraphs_converges_on_corpus(spark, sf_dir):

@@ -21,8 +21,8 @@ Two claims, both guaranteed by construction and therefore stable:
 The corpus is a deterministic perturbed-replica family (each base
 embedding replicated with a fixed ±lattice perturbation, so replicas
 are genuine near neighbors with spread); ground truth is the exact
-brute cosine (arrow gemm engine, pytest-pinned bit-identical to the
-sql engine elsewhere). Measured on 200k vectors (recall@10, 40
+brute cosine (``_brute_topk``, the path the registered recall and kNN
+queries run). Measured on 200k vectors (recall@10, 40
 probes): IVF with 100 cells went 0.72 -> 0.87 -> 0.94 -> 0.99 -> 1.00
 over nprobe 1 -> 16 at ~2x the search cost; multi-probe LSH gave
 0.90 / 0.82 / 0.77 at 4 / 8 / 12 hyperplanes. This test pins the
@@ -79,7 +79,7 @@ def _recall(got, truth):
 def _truth(corpus, probes):
     rows = similarity._brute_topk(
         corpus, probes.selectExpr("q_id", "qv AS qvd"), K + 1,
-        "vec_id", "q_id", engine="arrow",
+        "vec_id", "q_id",
     ).collect()
     return _sets(
         [

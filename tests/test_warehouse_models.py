@@ -549,47 +549,26 @@ def test_cli_sql_over_views(spark, data_root, tmp_path, capsys):
     assert "|n  |" in out or "| n " in out or "|8  |" in out  # table output
 
 
-# -- SNAPSHOT_TABLE materialization ----------------------------------------
+# -- model kinds -------------------------------------------------------------
 
 
-def test_snapshot_table_materialization_versions_and_rollback(spark, tmp_path):
-    """SNAPSHOT_TABLE models: each warehouse run commits a version;
-    history is time-travelable, a bad build rolls back metadata-only,
-    and resolve() always reads through the manifest."""
-    from omicidx_gh_etl_spark.engine import SnapshotTable
-    from omicidx_gh_etl_spark.models.registry import ModelRegistry
+def test_registry_rejects_unknown_model_kind():
+    """Only the kinds WarehouseRunner materializes register. An unknown
+    kind would otherwise fall through _materialize's TABLE branch:
+    sqlmesh's ``FULL``, or a lower-case ``table``, would silently build
+    a plain parquet table."""
+    from omicidx_gh_etl_spark.models.registry import MODEL_KINDS, ModelRegistry
 
     reg = ModelRegistry()
-    state = {"val": 1}
-
-    @reg.model(name="mart.snap_demo", layer="mart", kind="SNAPSHOT_TABLE")
-    def snap_demo(resolve, ctx):
-        return ctx.spark.range(0, 3).withColumn("v", F.lit(state["val"]))
-
-    def fresh_runner():
-        return WarehouseRunner(
-            spark=spark,
-            registry=reg,
-            data_root=str(tmp_path),
-            warehouse_root=str(tmp_path / "wh"),
+    for kind in ("FULL", "table", "VIEWS", ""):
+        with pytest.raises(ValueError, match="unknown kind"):
+            reg.model(name=f"mart.bad_{kind}", layer="mart", kind=kind)(
+                lambda resolve, ctx: None
+            )
+    assert reg.names() == []
+    for kind in MODEL_KINDS:
+        reg.model(name=f"mart.ok_{kind.lower()}", layer="mart", kind=kind)(
+            lambda resolve, ctx: None
         )
-
-    r1 = fresh_runner().run(
-        start_ds="2024-01-01", end_ds="2024-01-02", select=["mart.snap_demo"]
-    )
-    assert [(r.status, r.error) for r in r1] == [("success", None)]
-    state["val"] = 2
-    fresh_runner().run(
-        start_ds="2024-01-03", end_ds="2024-01-04", select=["mart.snap_demo"]
-    )
-
-    table = SnapshotTable(str(tmp_path / "wh" / "mart" / "snap_demo"))
-    assert table.versions() == [0, 1]
-    assert table.snapshot(1).n_rows == 3
-    assert {r["v"] for r in table.read(spark).collect()} == {2}
-    assert {r["v"] for r in table.read(spark, 0).collect()} == {1}  # time travel
-
-    # bad publish? roll back, and a fresh runner resolves the old build
-    table.rollback(0)
-    df = fresh_runner().resolve("mart.snap_demo")
-    assert {r["v"] for r in df.collect()} == {1}
+    assert len(reg.names()) == 3
+    assert {m.kind for _, m in REGISTRY.items()} <= set(MODEL_KINDS)
