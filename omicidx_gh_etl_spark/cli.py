@@ -117,11 +117,11 @@ def cmd_deploy(args: argparse.Namespace) -> int:
     """Full deploy pipeline (reference ``deploy all``,
     warehouse_cli.py:539-...): catalog.json + remote-views DB, and with
     ``--upload-plan`` also the upload manifest the transfer step would
-    execute (the offline half of the reference's upload stage)."""
+    execute (the offline half of the reference's upload stage). Starts
+    no Spark session: the catalog is read from parquet footers."""
     from .engine import build_catalog_json, build_remote_views_db, write_catalog_json
 
-    spark = _spark(args)
-    cat = build_catalog_json(spark, args.export_root, base_url=args.base_url)
+    cat = build_catalog_json(None, args.export_root, base_url=args.base_url)
     out = args.out or f"{args.export_root}/catalog.json"
     write_catalog_json(cat, out)
     db = f"{args.export_root}/remote_views.duckdb"

@@ -8,20 +8,35 @@ rollup) — and the deploy-time ``catalog.json`` artifact
 (DEPLOYMENT.md:73-83: name, path, row count, schema per published
 table; engine-neutral so DuckDB/Spark consumers both work).
 
-Scale: footer reads are metadata-only (no data pages). They run
-distributed — the file list is parallelized across executors and each
-task reads only footers via pyarrow. At 100 TB / ~100k files this is
-seconds, not hours, and never touches row data.
+Scale: footer reads are metadata-only (no data pages). The row-group
+scans run distributed — the file list is fanned out across executors
+and each task reads only footers via pyarrow. At 100 TB / ~100k files
+this is seconds, not hours, and never touches row data. ``catalog.json``
+reads the footers of the published tables on the driver, with no Spark
+at all: schemas and row counts are footer metadata.
 """
 
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+import re
+from datetime import date, datetime, timezone
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    DataType,
+    DateType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..sources.readers import fan_out
 
@@ -249,38 +264,101 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def _footer_row_count(table_dir: Path) -> int:
-    """Rows of a parquet table directory, summed from its part files'
-    footers (the reference's ``parquet_metadata`` row counts). Files
-    Spark would not read — any path component that is hidden by
-    :func:`_hidden`, like ``_SUCCESS`` or ``_temporary/`` — are skipped."""
-    import pyarrow.parquet as pq
+# the Spark schema Spark's parquet writer stores in every footer
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_INTEGRAL = re.compile(r"[+-]?\d+")
+_DOUBLE = re.compile(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?")
+_DATE = re.compile(r"\d{4}-\d{2}-\d{2}")
+_NUMERIC = [IntegerType(), LongType(), DoubleType()]
 
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in table_dir.rglob("*")
+
+def _partition_value_type(raw: str) -> DataType:
+    """The type Spark infers for one ``col=raw`` directory value: int,
+    bigint, double, date, else string. Spark further types an integer
+    beyond bigint or a value like ``1e5`` as decimal, a timestamp-shaped
+    value as timestamp and the null partition as void; here those come
+    out as double or string. No registered export partitions its output
+    (only tests write partitioned exports), so only these five types are
+    followed."""
+    if _INTEGRAL.fullmatch(raw) and -(2**63) <= int(raw) < 2**63:
+        return IntegerType() if -(2**31) <= int(raw) < 2**31 else LongType()
+    if _DOUBLE.fullmatch(raw):
+        return DoubleType()
+    if _DATE.fullmatch(raw):
+        try:
+            date.fromisoformat(raw)
+            return DateType()
+        except ValueError:
+            pass
+    return StringType()
+
+
+def _wider_partition_type(a: DataType, b: DataType) -> DataType:
+    """One partition column's type over values typed ``a`` and ``b``:
+    the wider numeric type, else string."""
+    if a == b:
+        return a
+    if a in _NUMERIC and b in _NUMERIC:
+        return max(a, b, key=_NUMERIC.index)
+    return StringType()
+
+
+def _footer_schema(md) -> StructType:
+    """A part file's schema as Spark infers it: the Spark schema in the
+    footer when Spark wrote the file, else the arrow schema converted."""
+    spark_json = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        return StructType.fromJson(json.loads(spark_json))
+    return from_arrow_schema(md.schema.to_arrow_schema(), prefer_timestamp_ntz=True)
+
+
+def _footer_table(table_dir: Path) -> tuple[int, StructType]:
+    """Rows and schema of a parquet table directory, from its part files'
+    footers only (the reference's ``parquet_metadata``), as
+    ``spark.read.parquet(table_dir)`` reports them: the first part
+    file's schema, then the hive partition columns typed as Spark infers
+    them. Files Spark would not read — any path component that is hidden
+    by :func:`_hidden`, like ``_SUCCESS`` or ``_temporary/`` — are
+    skipped."""
+    files = sorted(
+        f for f in table_dir.rglob("*")
         if f.is_file() and not any(map(_hidden, f.relative_to(table_dir).parts))
     )
+    if not files:
+        raise ValueError(f"{table_dir}: no data files to take a schema from")
+    mds = [pq.ParquetFile(f).metadata for f in files]
+    partitions: dict[str, DataType] = {}
+    for f in files:
+        for part in f.relative_to(table_dir).parts[:-1]:
+            col, _, raw = part.partition("=")
+            t = _partition_value_type(raw)
+            partitions[col] = _wider_partition_type(partitions.get(col, t), t)
+    # a partition column that is also a data column keeps its place
+    fields = {f.name: f for f in _footer_schema(mds[0]).fields}
+    fields.update((c, StructField(c, t)) for c, t in partitions.items())
+    return sum(md.num_rows for md in mds), StructType(list(fields.values()))
 
 
 def build_catalog_json(
-    spark: SparkSession,
+    spark: SparkSession | None,
     export_root: str,
     base_url: str = "",
     version: str = "1",
 ) -> dict:
     """The deploy artifact: one entry per published table with path,
     row count and schema (DEPLOYMENT.md:73-83, EXPORT_DEPLOYMENT.md:288-302).
-    ``base_url`` prefixes paths for remote (HTTPS/S3) consumers."""
+    ``base_url`` prefixes paths for remote (HTTPS/S3) consumers.
+
+    No Spark: row counts and schemas come from the part-file footers
+    (:func:`_footer_table`), so ``deploy`` starts no JVM. ``spark`` is
+    ignored; it stays only for callers that pass it positionally."""
     tables = {}
     root = Path(export_root)
     for tdir in sorted(p for p in root.iterdir() if p.is_dir()) if root.exists() else []:
-        # the schema via Spark keeps a partitioned layout's partition
-        # columns; the row count is footer metadata, no Spark job
-        schema = spark.read.parquet(str(tdir)).schema
+        rows, schema = _footer_table(tdir)
         tables[tdir.name] = {
             "path": f"{base_url}{tdir.name}" if base_url else str(tdir),
-            "row_count": _footer_row_count(tdir),
+            "row_count": rows,
             "schema": {f.name: f.dataType.simpleString() for f in schema.fields},
         }
     return {

@@ -32,7 +32,19 @@ warehouse_cli.py:64-90,192-205):
   filter value), kind, time column and dependencies;
 - lineage: ``meta.model_lineage`` (model → dependency edges) and
   ``meta.model_docs``, through the same store;
-- export materializations after build (EXPORT_DEPLOYMENT.md:199-237).
+- audits inside the DAG, blocking (engine/audits.py; sqlmesh audits):
+  a row audit's bad-row count is a ``count_if`` column on the write's
+  ``observe``, so it costs no job and covers exactly the rows written;
+  a set audit runs in the model's pool task right after the write, over
+  the window just written (the whole table for TABLE). A failing audit
+  fails its model: its export is skipped, ``fail_fast`` starts no
+  downstream model (without it, a downstream model that reads the
+  failed one fails), and ``backfill`` leaves the interval unrecorded.
+  The rejected rows stay in the table until a re-run replaces them.
+  ``audit_results`` holds the run's results, and ``meta.model_audits``
+  gets one file per run, keyed by ``run_id``;
+- export materializations after build and audits
+  (EXPORT_DEPLOYMENT.md:199-237).
 
 Scale notes: VIEW models never materialize — downstream models see the
 logical plan, so Catalyst pushes bronze's date filters *through* the
@@ -59,6 +71,7 @@ from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..models.registry import Model, ModelContext, ModelRegistry
+from .audits import AUDITS, AuditResult, evaluate, record_audits, result
 from .dag import topo_sort, upstream_closure
 from .state import StateTable
 
@@ -83,6 +96,10 @@ class RunResult:
     error: str | None = None
 
 
+class AuditFailure(Exception):
+    """A blocking audit found offending rows in what its model wrote."""
+
+
 @dataclass
 class WarehouseRunner:
     spark: SparkSession
@@ -91,7 +108,8 @@ class WarehouseRunner:
     warehouse_root: str  # materialized tables + meta live here
     export_root: str | None = None
     _cache: dict[str, DataFrame] = field(default_factory=dict)
-    audit_results: list = field(default_factory=list)
+    audit_results: list[AuditResult] = field(default_factory=list)
+    _audited: dict[str, list[AuditResult]] = field(default_factory=dict)
 
     # -- planning ----------------------------------------------------------
 
@@ -117,7 +135,6 @@ class WarehouseRunner:
         end_ds: str | None = None,
         select: list[str] | None = None,
         fail_fast: bool = True,
-        run_audits_after: bool = True,
     ) -> list[RunResult]:
         end_ds = end_ds or date.today().isoformat()
         ctx = ModelContext(
@@ -126,6 +143,7 @@ class WarehouseRunner:
         )
         run_id = uuid.uuid4().hex[:12]
         self._cache.clear()
+        self._audited.clear()
         order = self.plan(select)
         edges, planned = self.registry.dependency_edges(), set(order)
         waiting = {name: set(edges[name]) & planned for name in order}
@@ -154,14 +172,9 @@ class WarehouseRunner:
         self._record_runs(run_id, results)
         self._record_lineage(run_id)
         self._record_docs(run_id)
-        if run_audits_after:
-            from .audits import AUDITS, run_audits
-
-            ok_models = [r.model for r in results if r.status == "success"]
-            self.audit_results = run_audits(
-                AUDITS, lambda n: self.resolve(n, ctx), ok_models,
-                self.warehouse_root,
-            )
+        self.audit_results = [a for n in order for a in self._audited.get(n, ())]
+        if self.audit_results:
+            record_audits(self.warehouse_root, self.audit_results, run_id)
         return results
 
     def _run_model(self, m: Model, ctx: ModelContext) -> RunResult:
@@ -181,6 +194,11 @@ class WarehouseRunner:
         else the (lazily built) logical plan."""
         if name in self._cache:
             return self._cache[name]
+        # a model that failed an audit this run is not read downstream:
+        # its table on disk holds the rows the audit rejected
+        failed = [r.audit for r in self._audited.get(name, ()) if r.status == "fail"]
+        if failed:
+            raise AuditFailure(f"{name} failed audit(s) {', '.join(failed)} this run")
         m = self.registry.get(name)
         path = self._table_path(m)
         if m.kind != "VIEW" and Path(path).exists():
@@ -202,47 +220,60 @@ class WarehouseRunner:
 
     def _materialize(self, m: Model, ctx: ModelContext) -> int | None:
         df = m.build(lambda dep: self.resolve(dep, ctx), ctx)
+        audits = AUDITS.for_model(m.name)
         rows: int | None = None
+        observed: dict = {}
         if m.kind == "VIEW":
             # zero-copy: register and cache the plan; Catalyst inlines it
             df.createOrReplaceTempView(m.name.replace(".", "__"))
-            self._cache[m.name] = df
-        elif m.kind == "INCREMENTAL_BY_TIME_RANGE":
-            assert m.time_column, f"{m.name}: incremental model needs time_column"
+            table = written = df
+        else:  # TABLE or INCREMENTAL_BY_TIME_RANGE (register admits no other kind)
+            incremental = m.kind == "INCREMENTAL_BY_TIME_RANGE"
+            assert not incremental or m.time_column, f"{m.name}: incremental model needs time_column"
             path = self._table_path(m)
+            # rows and row-audit counts piggyback on the write job
+            # (df.observe): no second scan over what was just written
+            metrics = [F.count(F.lit(1)).alias("rows")]
+            metrics += [
+                F.count_if(a.predicate()).alias(f"audit:{a.name}") for a in audits if a.predicate
+            ]
+            if incremental:
+                metrics.append(F.collect_set(m.time_column).alias("written"))
             obs = Observation()
-            (
-                df.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.collect_set(m.time_column).alias("written"),
+            writer = df.observe(obs, *metrics).write.mode("overwrite").option("compression", "zstd")
+            if incremental:
+                writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
+                    m.time_column
                 )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .option("compression", "zstd")
-                .partitionBy(m.time_column)
-                .parquet(path)
-            )
-            metrics = obs.get
-            rows = metrics["rows"]
-            self._drop_unwritten_partitions(path, m.time_column, metrics["written"], ctx)
+            writer.parquet(path)
+            observed = obs.get
+            rows = observed["rows"]
+            if incremental:
+                self._drop_unwritten_partitions(path, m.time_column, observed["written"], ctx)
             # read back with the plan's schema: an interval with ZERO
             # rows (routine in daily backfills) writes no part files,
             # and a schema-less read of the empty dataset fails with
             # UNABLE_TO_INFER_SCHEMA
-            self._cache[m.name] = self.spark.read.schema(df.schema).parquet(path)
-        else:  # TABLE (ModelRegistry.register admits no other kind)
-            path = self._table_path(m)
-            # row metric piggybacks on the write job (df.observe) — no
-            # second count scan over what was just written
-            obs = Observation()
-            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).option("compression", "zstd").parquet(path)
-            rows = obs.get["rows"]
-            self._cache[m.name] = self.spark.read.schema(df.schema).parquet(path)
+            table = written = self.spark.read.schema(df.schema).parquet(path)
+            if incremental:
+                written = table.filter(
+                    F.col(m.time_column).between(
+                        F.lit(ctx.start_ds).cast("date"), F.lit(ctx.end_ds).cast("date")
+                    )
+                )
+        self._audited[m.name] = results = [
+            result(a, observed[f"audit:{a.name}"]) if a.predicate and observed
+            else evaluate(a, written)
+            for a in audits
+        ]
+        failed = [r for r in results if r.status == "fail"]
+        if failed:
+            raise AuditFailure("; ".join(
+                f"audit {r.audit} failed on {r.model}: {r.bad_rows} bad row(s)" for r in failed
+            ))
+        self._cache[m.name] = table
         if m.export is not None and self.export_root is not None:
-            self._export(m, self._cache[m.name])
+            self._export(m, table)
         return rows
 
     @staticmethod
@@ -374,7 +405,6 @@ class WarehouseRunner:
                 start_ds=iv.start.isoformat(),
                 end_ds=iv.end.isoformat(),
                 select=[model],
-                run_audits_after=False,
             )
             ok = all(r.status == "success" for r in results)
             if ok:

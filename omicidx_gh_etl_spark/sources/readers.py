@@ -18,6 +18,7 @@ every file footer; at very large file counts prefer a pinned schema.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -93,15 +94,14 @@ def read_csv(
 def fan_out(spark: SparkSession, paths: list[str]) -> DataFrame:
     """One-column ``path string`` DataFrame over driver-listed ``paths``.
 
-    The file list is split into ``min(len(paths), defaultParallelism)``
-    partitions by ``parallelize`` — no shuffle, so the per-file work
-    (parse, decompress, footer read) runs in the first and only stage
-    instead of behind a round-robin exchange. ``paths`` must be
+    The list becomes a driver-local relation (``createDataFrame`` over an
+    arrow table): its scan is a ``LocalTableScan`` split into
+    ``min(len(paths), defaultParallelism)`` partitions, with no shuffle
+    and no Python worker, so the per-file work (parse, decompress,
+    footer read) runs in the first and only stage. ``paths`` must be
     non-empty; callers return their own empty schema first.
     """
-    sc = spark.sparkContext
-    n = min(len(paths), sc.defaultParallelism)
-    return spark.createDataFrame(sc.parallelize([(p,) for p in paths], n), "path string")
+    return spark.createDataFrame(pa.table({"path": pa.array(paths, pa.string())}))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

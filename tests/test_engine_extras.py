@@ -71,6 +71,101 @@ def test_catalog_json_row_count_from_footers_skips_what_spark_skips(spark, tmp_p
     assert entry["schema"] == {"id": "bigint", "day": "int"}
 
 
+def _spark_schema(spark, tdir) -> dict:
+    return {f.name: f.dataType.simpleString() for f in spark.read.parquet(str(tdir)).schema}
+
+
+def test_catalog_json_schema_matches_spark_for_date_partitions_and_nested_columns(spark, tmp_path):
+    """catalog.json reads schemas from footers, not from Spark; they must
+    equal what ``spark.read.parquet`` infers, for a table partitioned by
+    a date column and for nested struct, array and map columns."""
+    from pyspark.sql import functions as F
+
+    export = tmp_path / "export"
+    days = spark.range(12).withColumn("day", F.date_add(F.lit("2024-01-30").cast("date"),
+                                                       (F.col("id") % 4).cast("int")))
+    days.write.partitionBy("day").parquet(str(export / "by_day"))
+    spark.range(5).select(
+        "id",
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("s"),
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id").cast("double")).alias("m"),
+        F.array(F.struct(F.col("id").alias("n"))).alias("arr_of_struct"),
+        F.current_timestamp().alias("ts"),
+        F.lit(1.5).cast("decimal(10,2)").alias("dec"),
+    ).write.parquet(str(export / "nested"))
+
+    cat = build_catalog_json(None, str(export))["tables"]
+    for name in ("by_day", "nested"):
+        assert cat[name]["schema"] == _spark_schema(spark, export / name), name
+    assert cat["by_day"]["schema"]["day"] == "date"
+    assert cat["by_day"]["row_count"] == 12
+    assert cat["nested"]["schema"]["m"] == "map<string,double>"
+
+
+def test_catalog_json_infers_partition_types_as_spark_does(spark, tmp_path):
+    """Footers written by pyarrow (no Spark schema in them) under
+    partition directories typed int, bigint, double, date and string,
+    with numeric widening and the fall-back to string."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = pa.table({
+        "n": pa.array([1], pa.int64()),
+        "s": pa.array(["a"], pa.string()),
+        "ts_utc": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us", tz="UTC")),
+        "ts_local": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us")),
+        "d": pa.array([dt.date(2024, 1, 1)], pa.date32()),
+        "f": pa.array([1.0], pa.float32()),
+        "xs": pa.array([[1, 2]], pa.list_(pa.int32())),
+    })
+    cases = {
+        "ints": ["1", "-3", "01"],
+        "bigints": ["1", "3000000000"],
+        "doubles": ["1", "1.5"],
+        "dates": ["2024-01-01", "2024-12-31"],
+        "not_dates": ["2024-1-1", "2024-02-30"],
+        "mixed": ["2024-01-01", "1"],
+        "strings": ["a", "true"],
+    }
+    export = tmp_path / "export"
+    for name, values in cases.items():
+        for i, v in enumerate(values):
+            d = export / name / f"p={v}" / f"q={i}"
+            d.mkdir(parents=True)
+            pq.write_table(part, d / "part-0.parquet")
+
+    cat = build_catalog_json(None, str(export))["tables"]
+    for name in cases:
+        assert cat[name]["schema"] == _spark_schema(spark, export / name), name
+        assert cat[name]["row_count"] == len(cases[name])
+    assert [cat[n]["schema"]["p"] for n in ("ints", "bigints", "doubles", "dates", "mixed")] == [
+        "int", "bigint", "double", "date", "string"]
+
+
+def test_deploy_starts_no_spark_session(spark, tmp_path, monkeypatch, capsys):
+    import argparse
+    import json
+
+    from omicidx_gh_etl_spark import cli
+
+    def no_spark(args):
+        raise AssertionError("deploy started a Spark session")
+
+    export = tmp_path / "export"
+    spark.range(4).write.parquet(str(export / "mart_y"))
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    ns = argparse.Namespace(export_root=str(export), base_url="", out=None,
+                            upload_plan=False, cpus=8, cmd="deploy")
+    assert cli.cmd_deploy(ns) == 0
+    res = json.loads(capsys.readouterr().out)
+    assert res["tables"] == 1 and res["views"] == ["mart_y"]
+    cat = json.loads((export / "catalog.json").read_text())
+    assert cat["tables"]["mart_y"]["row_count"] == 4
+
+
 def test_upload_manifest_matches_catalog(spark, tmp_path, capsys):
     """`upload --dry-run` (reference warehouse_cli.py:452-548): the
     manifest must cover exactly the catalog.json tables' files plus the

@@ -1,5 +1,5 @@
-"""``readers.fan_out``: the shuffle-free file-list fan-out shared by the
-extractors and the parquet-metadata catalog scans."""
+"""``readers.fan_out``: the shuffle-free, Python-worker-free file-list
+fan-out shared by the extractors and the parquet-metadata catalog scans."""
 
 from collections import Counter
 
@@ -17,4 +17,6 @@ def test_fan_out_partitions_without_shuffle(spark, n_paths):
     assert df.rdd.getNumPartitions() == min(n_paths, cores)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+    # a driver-local relation: no Python-RDD stage feeds the file list
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert Counter(r["path"] for r in df.collect()) == Counter(paths)

@@ -36,7 +36,7 @@ def _tiny_runner(spark, wh) -> WarehouseRunner:
 
 
 def _run_tiny(runner: WarehouseRunner) -> None:
-    res = runner.run(start_ds="2024-01-01", end_ds="2024-01-01", run_audits_after=False)
+    res = runner.run(start_ds="2024-01-01", end_ds="2024-01-01")
     assert [r.status for r in res] == ["success"]
 
 
@@ -117,3 +117,52 @@ def test_commit_cut_before_rename_is_invisible(spark, tmp_path, monkeypatch):
     assert ds.dataset(str(wh / "meta" / "model_runs"), format="parquet").count_rows() == 1
     left = store.missing_intervals("m", D(2024, 1, 1), D(2024, 1, 2))
     assert [i.start for i in left] == [D(2024, 1, 2)]
+
+
+def test_model_audits_carry_the_run_id_and_read_files_from_before_it(spark, tmp_path,
+                                                                    monkeypatch):
+    """``meta.model_audits`` gets one file per run whose rows carry the
+    run's ``run_id``; a file written before the column existed still
+    reads, with a null ``run_id``."""
+    from pyspark.sql import functions as F
+
+    from omicidx_gh_etl_spark.engine import runner as runner_mod
+    from omicidx_gh_etl_spark.engine.audits import AUDITS_SCHEMA, AuditRegistry
+
+    wh = tmp_path / "wh"
+    audits_dir = wh / "meta" / "model_audits"
+    old_ts = dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc)
+    state.StateTable(
+        audits_dir, "audit string, model string, status string, bad_rows long, ran_at timestamp"
+    ).append([("old_audit", "mart.tiny", "pass", 0, old_ts)])
+
+    reg = AuditRegistry()
+
+    @reg.row_audit("no_negative_id", "mart.tiny")
+    def _neg():
+        return F.col("id") < 0
+
+    @reg.audit("unique_id", "mart.tiny")
+    def _unique(df):
+        return df.groupBy("id").count().filter("count > 1")
+
+    monkeypatch.setattr(runner_mod, "AUDITS", reg)
+    runner = _tiny_runner(spark, wh)
+    _run_tiny(runner)
+    _run_tiny(runner)
+
+    assert len(list(audits_dir.glob("*.parquet"))) == 3  # the old file + one per run
+    table = state.StateTable(audits_dir, AUDITS_SCHEMA).read()
+    assert table.schema.names[0] == "run_id"
+    rows = sorted(table.to_pylist(), key=lambda r: r["ran_at"])
+    assert rows[0] == {"run_id": None, "audit": "old_audit", "model": "mart.tiny",
+                       "status": "pass", "bad_rows": 0, "ran_at": old_ts}
+    run_ids = set(state.StateTable(wh / "meta" / "model_runs", MODEL_RUNS_SCHEMA)
+                  .read(["run_id"])["run_id"].to_pylist())
+    assert len(run_ids) == 2
+    by_run: dict[str, list] = {}
+    for r in rows[1:]:
+        by_run.setdefault(r["run_id"], []).append((r["audit"], r["status"], r["bad_rows"]))
+    assert set(by_run) == run_ids
+    for got in by_run.values():
+        assert sorted(got) == [("no_negative_id", "pass", 0), ("unique_id", "pass", 0)]
