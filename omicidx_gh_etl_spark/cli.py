@@ -275,14 +275,11 @@ def cmd_extract(args: argparse.Namespace) -> int:
     write_parquet(
         df, args.output, max_records_per_file=args.block_size, compression="zstd"
     )
-    from .engine.catalog import scan_parquet_metadata
-    from pyspark.sql import functions as F
+    from pathlib import Path
 
-    n = (
-        scan_parquet_metadata(spark, args.output)
-        .agg(F.coalesce(F.sum("num_rows"), F.lit(0)).alias("n"))
-        .collect()[0]["n"]
-    )
+    from .engine.catalog import footer_rows
+
+    n = footer_rows(Path(args.output))
     print(json.dumps({"source": args.source, "records": n, "output": args.output}))
     return 0
 

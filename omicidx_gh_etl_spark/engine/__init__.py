@@ -4,11 +4,10 @@ from .catalog import (
     catalog_global_stats,
     catalog_per_table_stats,
     scan_parquet_metadata,
-    write_catalog,
     write_catalog_json,
 )
 from .catalog import prune_files, scan_column_stats, skipping_read
-from .dag import DagCycleError, downstream_closure, topo_sort, upstream_closure
+from .dag import DagCycleError, topo_sort, upstream_closure
 from .incr_agg import refresh_aggregate
 from .intervals import Interval, IntervalStore, daily_intervals, monthly_intervals
 from .merge import (
@@ -24,14 +23,12 @@ from .snapshots import Snapshot, SnapshotConflictError, SnapshotTable
 __all__ = [
     "topo_sort",
     "upstream_closure",
-    "downstream_closure",
     "DagCycleError",
     "WarehouseRunner",
     "RunResult",
     "scan_parquet_metadata",
     "catalog_global_stats",
     "catalog_per_table_stats",
-    "write_catalog",
     "build_catalog_json",
     "build_remote_views_db",
     "write_catalog_json",

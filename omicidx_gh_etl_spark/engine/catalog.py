@@ -9,8 +9,10 @@ rollup) — and the deploy-time ``catalog.json`` artifact
 table; engine-neutral so DuckDB/Spark consumers both work).
 
 Scale: footer reads are metadata-only (no data pages). The row-group
-scans run distributed — the file list is fanned out across executors
-and each task reads only footers via pyarrow. At 100 TB / ~100k files
+scans run distributed — ``readers.map_records`` fans the file list
+(:func:`data_files`, Spark's listing rule) out across executors, each
+task reads only footers via pyarrow, and rows leave in frames of at
+most ``readers.BATCH_ROWS``. At 100 TB / ~100k files
 this is seconds, not hours, and never touches row data. ``catalog.json``
 reads the footers of the published tables on the driver, with no Spark
 at all: schemas and row counts are footer metadata.
@@ -21,6 +23,7 @@ from __future__ import annotations
 import json
 import re
 from datetime import date, datetime, timezone
+from functools import partial
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -38,55 +41,73 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.readers import fan_out
+from ..sources.readers import map_records
 
-ROWGROUP_SCHEMA = (
-    "file_name string, row_group_id int, num_rows long, "
-    "total_byte_size long, num_columns int"
+ROWGROUP_SCHEMA = StructType(
+    [
+        StructField("file_name", StringType()),
+        StructField("row_group_id", IntegerType()),
+        StructField("num_rows", LongType()),
+        StructField("total_byte_size", LongType()),
+        StructField("num_columns", IntegerType()),
+    ]
 )
+
+
+def _row_groups(path: str):
+    md = pq.ParquetFile(path).metadata
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        yield (path, rg, g.num_rows, g.total_byte_size, md.num_columns)
 
 
 def scan_parquet_metadata(spark: SparkSession, root: str) -> DataFrame:
-    """Row-group-level stats for every parquet file under ``root``.
+    """Row-group-level stats for every parquet data file under ``root``
+    (:func:`data_files`).
 
     Equivalent of DuckDB ``parquet_metadata('<root>/**/*.parquet')``
-    (catalog.py:43-58). Footer reads are fanned out over executors with
-    mapInPandas — the driver only lists paths.
+    (catalog.py:43-58). Footer reads are fanned out over executors by
+    ``readers.map_records`` — the driver only lists paths.
     """
-    files = sorted(str(p) for p in Path(root).rglob("*.parquet") if p.is_file())
-    if not files:
-        return spark.createDataFrame([], ROWGROUP_SCHEMA)
-    paths_df = fan_out(spark, files)
-
-    def _read_footers(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for path in pdf["path"]:
-                md = pq.ParquetFile(path).metadata
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    out.append(
-                        (path, rg, g.num_rows, g.total_byte_size, md.num_columns)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "file_name", "row_group_id", "num_rows",
-                    "total_byte_size", "num_columns",
-                ],
-            )
-
-    return paths_df.mapInPandas(_read_footers, ROWGROUP_SCHEMA)
+    files = [str(f) for f in data_files(Path(root))]
+    return map_records(spark, files, _row_groups, ROWGROUP_SCHEMA)
 
 
-COLSTATS_SCHEMA = (
-    "file_name string, row_group_id int, column string, "
-    "min_num double, max_num double, min_str string, max_str string, "
-    "null_count long, num_rows long"
+COLSTATS_SCHEMA = StructType(
+    [
+        StructField("file_name", StringType()),
+        StructField("row_group_id", IntegerType()),
+        StructField("column", StringType()),
+        StructField("min_num", DoubleType()),
+        StructField("max_num", DoubleType()),
+        StructField("min_str", StringType()),
+        StructField("max_str", StringType()),
+        StructField("null_count", LongType()),
+        StructField("num_rows", LongType()),
+    ]
 )
+
+
+def _stat_cells(path: str, wanted: set[str] | None):
+    md = pq.ParquetFile(path).metadata
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            cc = g.column(ci)
+            name = cc.path_in_schema
+            if wanted is not None and name not in wanted:
+                continue
+            st = cc.statistics
+            mn = mx = None
+            mns = mxs = None
+            nulls = None
+            if st is not None and st.has_min_max:
+                mn, mx = _stat_num(st.min), _stat_num(st.max)
+                if mn is None:
+                    mns, mxs = _stat_str(st.min), _stat_str(st.max)
+            if st is not None and st.has_null_count:
+                nulls = st.null_count
+            yield (path, rg, name, mn, mx, mns, mxs, nulls, g.num_rows)
 
 
 def scan_column_stats(
@@ -106,50 +127,11 @@ def scan_column_stats(
     Same execution shape as :func:`scan_parquet_metadata`: driver lists
     paths, executors read only footers.
     """
-    files = sorted(str(p) for p in Path(root).rglob("*.parquet") if p.is_file())
-    if not files:
-        return spark.createDataFrame([], COLSTATS_SCHEMA)
-    paths_df = fan_out(spark, files)
+    files = [str(f) for f in data_files(Path(root))]
     wanted = set(columns) if columns else None
-
-    def _stat_cells(path, md):
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                cc = g.column(ci)
-                name = cc.path_in_schema
-                if wanted is not None and name not in wanted:
-                    continue
-                st = cc.statistics
-                mn = mx = None
-                mns = mxs = None
-                nulls = None
-                if st is not None and st.has_min_max:
-                    mn, mx = _stat_num(st.min), _stat_num(st.max)
-                    if mn is None:
-                        mns, mxs = _stat_str(st.min), _stat_str(st.max)
-                if st is not None and st.has_null_count:
-                    nulls = st.null_count
-                yield (path, rg, name, mn, mx, mns, mxs, nulls, g.num_rows)
-
-    def _read_stats(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for path in pdf["path"]:
-                md = pq.ParquetFile(path).metadata
-                out.extend(_stat_cells(path, md))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "file_name", "row_group_id", "column", "min_num",
-                    "max_num", "min_str", "max_str", "null_count", "num_rows",
-                ],
-            )
-
-    return paths_df.mapInPandas(_read_stats, COLSTATS_SCHEMA)
+    return map_records(
+        spark, files, partial(_stat_cells, wanted=wanted), COLSTATS_SCHEMA
+    )
 
 
 def _stat_num(v) -> float | None:
@@ -222,7 +204,7 @@ def skipping_read(
         stats = scan_column_stats(spark, root, [column])
     files = prune_files(stats, column, lo, hi)
     if not files:
-        first = next(iter(Path(root).rglob("*.parquet")), None)
+        first = next(iter(data_files(Path(root))), None)
         schema = spark.read.parquet(str(first)).schema if first else None
         return spark.createDataFrame([], schema)
     return spark.read.parquet(*files)
@@ -253,15 +235,27 @@ def catalog_per_table_stats(meta: DataFrame) -> DataFrame:
     )
 
 
-def write_catalog(meta: DataFrame, out_path: str) -> None:
-    """Persist the row-group catalog (catalog.py:70-81 COPY TO)."""
-    meta.write.mode("overwrite").option("compression", "zstd").parquet(out_path)
-
-
 def _hidden(name: str) -> bool:
     """Spark's listing rule: ``_``/``.`` names are not data, except
     partition directories (``_col=v``)."""
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def data_files(root: Path) -> list[Path]:
+    """The parquet data files of the directory ``root``, sorted: every
+    ``*.parquet`` file with no path component below ``root`` hidden by
+    :func:`_hidden`. Writer leftovers (``_SUCCESS``, ``_temporary/``,
+    ``.part-*``) are not data. Empty for a missing ``root``."""
+    return sorted(
+        f for f in root.rglob("*.parquet")
+        if f.is_file() and not any(map(_hidden, f.relative_to(root).parts))
+    )
+
+
+def footer_rows(root: Path) -> int:
+    """Rows in the parquet directory ``root``, summed from its data
+    files' footers on the driver: no Spark job, no data pages read."""
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in data_files(root))
 
 
 # the Spark schema Spark's parquet writer stores in every footer
@@ -317,13 +311,9 @@ def _footer_table(table_dir: Path) -> tuple[int, StructType]:
     footers only (the reference's ``parquet_metadata``), as
     ``spark.read.parquet(table_dir)`` reports them: the first part
     file's schema, then the hive partition columns typed as Spark infers
-    them. Files Spark would not read — any path component that is hidden
-    by :func:`_hidden`, like ``_SUCCESS`` or ``_temporary/`` — are
-    skipped."""
-    files = sorted(
-        f for f in table_dir.rglob("*")
-        if f.is_file() and not any(map(_hidden, f.relative_to(table_dir).parts))
-    )
+    them. Only :func:`data_files` are read, so files Spark would not
+    read, like ``_SUCCESS`` or ``_temporary/``, are skipped."""
+    files = data_files(table_dir)
     if not files:
         raise ValueError(f"{table_dir}: no data files to take a schema from")
     mds = [pq.ParquetFile(f).metadata for f in files]
@@ -383,9 +373,9 @@ def build_upload_manifest(
 ) -> dict:
     """Deploy-upload planner — the file/byte manifest the reference's
     ``deploy upload`` prints before (or instead of, with ``--dry-run``)
-    uploading to R2/S3 (warehouse_cli.py:452-548): every ``**/*.parquet``
-    under the export root mapped to ``<data_prefix>/<relative path>``,
-    plus the catalog.json and remote-views DB artifacts when present.
+    uploading to R2/S3 (warehouse_cli.py:452-548): every parquet data
+    file under the export root (:func:`data_files`) mapped to
+    ``<data_prefix>/<relative path>``, plus the catalog.json and remote-views DB artifacts when present.
 
     The actual object-store transfer is transport-specific and
     untestable offline; the manifest IS the upload contract — a caller
@@ -400,9 +390,7 @@ def build_upload_manifest(
         # a typo'd root must not read as a clean "nothing to upload"
         warnings.append(f"export root not found: {root}")
     if data:
-        for p in sorted(root.glob("**/*.parquet")):
-            if not p.is_file():
-                continue
+        for p in data_files(root):
             rel = p.relative_to(root)
             files.append(
                 {

@@ -45,20 +45,3 @@ def upstream_closure(edges: dict[str, tuple[str, ...]], targets: list[str]) -> s
         seen.add(node)
         stack.extend(edges.get(node, ()))
     return seen
-
-
-def downstream_closure(edges: dict[str, tuple[str, ...]], targets: list[str]) -> set[str]:
-    """targets plus everything that (transitively) depends on them."""
-    rev: dict[str, set[str]] = {}
-    for node, deps in edges.items():
-        for d in deps:
-            rev.setdefault(d, set()).add(node)
-    seen: set[str] = set()
-    stack = list(targets)
-    while stack:
-        node = stack.pop()
-        if node in seen:
-            continue
-        seen.add(node)
-        stack.extend(rev.get(node, ()))
-    return seen

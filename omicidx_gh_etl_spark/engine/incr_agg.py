@@ -28,6 +28,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import data_files
 from .merge import publish_parquet
 
 # (init over raw rows, merge over partial states)
@@ -65,7 +66,7 @@ def refresh_aggregate(
         ]
     )
     target = Path(state_dir)
-    if target.exists() and any(target.rglob("*.parquet")):
+    if data_files(target):
         state = spark.read.schema(partial.schema).parquet(str(target))
         combined = state.unionByName(partial)
     else:

@@ -38,6 +38,44 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import data_files, footer_rows
+
+
+def _latest_versions(
+    combined: DataFrame,
+    keys: list[str],
+    order_cols: list[str],
+    delete_col: str | None,
+) -> DataFrame:
+    """The one latest-version-wins plan: per key, the payload of the
+    version that sorts last by ``order_cols`` (a ``max_by`` aggregate),
+    in ``combined``'s column order; keys whose winner is a tombstone
+    (``delete_col`` true) are dropped, and so is ``delete_col``."""
+    columns = combined.columns
+    payload = [c for c in columns if c not in keys]
+    merged = (
+        combined.groupBy(*keys)
+        .agg(F.max_by(F.struct(*payload), F.struct(*order_cols)).alias("__winner"))
+        .select(*keys, "__winner.*")
+        # restore the input column order
+        .select(*columns)
+    )
+    if delete_col is not None:
+        merged = merged.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
+            delete_col
+        )
+    return merged
+
+
+def _null_filled(base: DataFrame, updates: DataFrame) -> DataFrame:
+    """A stored snapshot read in ``updates``' columns. A tombstone merge
+    commits WITHOUT delete_col, so any update-side column the snapshot
+    lacks is filled with typed nulls."""
+    for c in updates.columns:
+        if c not in base.columns:
+            base = base.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
+    return base.select(*updates.columns)
+
 
 def merge_upsert(
     spark: SparkSession,
@@ -54,30 +92,13 @@ def merge_upsert(
     count. Creates the target if absent.
     """
     target = Path(target_dir)
-    if target.exists() and any(target.rglob("*.parquet")):
+    if data_files(target):
         # pin the schema so an empty/partial target can't drift it
         base = spark.read.schema(updates.schema).parquet(str(target))
         combined = base.unionByName(updates)
     else:
         combined = updates
-
-    payload = [c for c in updates.columns if c not in keys]
-    merged = (
-        combined.groupBy(*keys)
-        .agg(
-            F.max_by(
-                F.struct(*payload), F.struct(*order_cols)
-            ).alias("__winner")
-        )
-        .select(*keys, "__winner.*")
-        # restore the input column order
-        .select(*updates.columns)
-    )
-    if delete_col is not None:
-        merged = merged.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
-
+    merged = _latest_versions(combined, keys, order_cols, delete_col)
     return publish_parquet(spark, merged, target)
 
 
@@ -90,14 +111,8 @@ def publish_parquet(spark: SparkSession, df: DataFrame, target: Path) -> int:
     # row count from the just-written footers (metadata-only), not a
     # re-read count() of the data. The target is a driver-local Path
     # (the whole function renames via the local filesystem), so a
-    # plain pyarrow loop beats launching a Spark job for it.
-    import pyarrow.parquet as pq
-
-    n = sum(
-        pq.ParquetFile(str(f)).metadata.num_rows
-        for f in tmp.rglob("*.parquet")
-        if f.is_file()
-    )
+    # driver-side footer sum beats launching a Spark job for it.
+    n = footer_rows(tmp)
     old = target.parent / f"{target.name}.__old_{uuid.uuid4().hex[:8]}"
     if target.exists():
         target.rename(old)
@@ -127,27 +142,10 @@ def merge_into_snapshot(
     """
     spark = updates.sparkSession
     if table.latest_version() is not None:
-        base = table.read(spark)
-        # a tombstone merge commits WITHOUT delete_col — null-fill any
-        # update-side column the stored snapshot lacks
-        for c in updates.columns:
-            if c not in base.columns:
-                base = base.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
-        combined = base.select(*updates.columns).unionByName(updates)
+        combined = _null_filled(table.read(spark), updates).unionByName(updates)
     else:
         combined = updates
-
-    payload = [c for c in updates.columns if c not in keys]
-    merged = (
-        combined.groupBy(*keys)
-        .agg(F.max_by(F.struct(*payload), F.struct(*order_cols)).alias("__winner"))
-        .select(*keys, "__winner.*")
-        .select(*updates.columns)
-    )
-    if delete_col is not None:
-        merged = merged.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-            delete_col
-        )
+    merged = _latest_versions(combined, keys, order_cols, delete_col)
     return table.commit_overwrite(
         merged, note=note or f"merge {len(keys)}-key upsert", meta=meta
     )
@@ -181,24 +179,10 @@ def merge_into_snapshot_partitions(
     affected = [r[0] for r in updates.select(partition_col).distinct().collect()]
     if table.latest_version() is not None:
         base = table.read(spark, partition_filter={partition_col: affected})
-        for c in updates.columns:
-            if c not in base.columns:
-                base = base.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
-        combined = base.select(*updates.columns).unionByName(updates)
+        combined = _null_filled(base, updates).unionByName(updates)
     else:
         combined = updates
-
-    payload = [c for c in updates.columns if c not in keys]
-    merged = (
-        combined.groupBy(*keys)
-        .agg(F.max_by(F.struct(*payload), F.struct(*order_cols)).alias("__winner"))
-        .select(*keys, "__winner.*")
-        .select(*updates.columns)
-    )
-    if delete_col is not None:
-        merged = merged.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-            delete_col
-        )
+    merged = _latest_versions(combined, keys, order_cols, delete_col)
     return table.commit_replace_partitions(
         merged,
         partition_by=partition_col,

@@ -68,14 +68,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply engine runtime confs to an externally-created session.
-
-    The driver hands ``queries()`` callables a session we did not build;
-    pin the confs that affect result *semantics* (timezone) — never
-    change cluster-shape confs on a borrowed session.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

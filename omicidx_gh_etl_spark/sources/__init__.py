@@ -9,16 +9,13 @@ from .ncbi_extract import (
     extract_pubmed,
     parse_xml_strings,
 )
-from .readers import read_csv, read_ndjson, read_parquet_glob, read_table, read_tables
+from .readers import read_csv, read_table
 from .rest_source import RestPagesDataSource
 from .writers import write_ndjson, write_parquet
 
 __all__ = [
-    "read_parquet_glob",
-    "read_ndjson",
     "read_csv",
     "read_table",
-    "read_tables",
     "write_parquet",
     "write_ndjson",
     "RestPagesDataSource",

@@ -6,10 +6,12 @@ and one OpenCitations zip whose single ``open_citation_collection.csv``
 member becomes csv.gz (/root/reference/omicidx_etl/etl/icite.py:47-75)
 — driver-side, one file at a time, via the local filesystem.
 
-Spark-first shape: the ARCHIVE LIST is a DataFrame; ``mapInPandas``
-opens each archive executor-side and streams matching members'
-decompressed LINES out as rows — no temp extraction, no driver
-bottleneck, one task per archive. The Python surface is deliberately
+Spark-first shape: ``readers.map_records`` fans the ARCHIVE LIST out
+in one ``mapInPandas``; each archive is opened executor-side and its
+matching members' decompressed LINES stream out as rows, in frames of
+at most ``readers.BATCH_ROWS`` lines — no temp extraction, no driver
+bottleneck, one task per archive, and an archive that decompresses to
+tens of GB is never held whole. The Python surface is deliberately
 just "decompress + iterate lines"; turning lines into typed columns
 happens declaratively (``from_json`` / ``from_csv``) so the parse
 itself runs JVM-side in whole-stage codegen and Catalyst can prune
@@ -27,14 +29,13 @@ import io
 import tarfile
 import zipfile
 from collections.abc import Iterator
-from pathlib import Path
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .readers import fan_out
+from .readers import list_inputs, map_records
 
 LINES_SCHEMA = T.StructType(
     [
@@ -78,34 +79,10 @@ def archive_member_lines(
 ) -> DataFrame:
     """Distributed member expansion: one task per archive, rows are the
     decompressed text lines of every matching member."""
-    if isinstance(paths, str):
-        base = Path(paths)
-        paths = sorted(
-            str(p)
-            for pat in ("*.tar", "*.tar.gz", "*.tgz", "*.zip")
-            for p in base.glob(pat)
-        )
-    if not paths:
-        return spark.createDataFrame([], LINES_SCHEMA)
-    files_df = fan_out(spark, paths)
-
-    def _expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # bounded-size output batches: an archive decompresses to tens
-        # of GB of lines, so the generator is drained in 50k-line
-        # chunks instead of materializing a whole archive at once.
-        cols = [f.name for f in LINES_SCHEMA.fields]
-        buf: list[tuple] = []
-        for pdf in batches:
-            for path in pdf["path"]:
-                for row in _member_lines(path, member_suffix):
-                    buf.append(row)
-                    if len(buf) >= 50_000:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=cols)
-
-    return files_df.mapInPandas(_expand, LINES_SCHEMA)
+    files = list_inputs(paths, ("*.tar", "*.tar.gz", "*.tgz", "*.zip"))
+    return map_records(
+        spark, files, partial(_member_lines, suffix=member_suffix), LINES_SCHEMA
+    )
 
 
 def read_archive_jsonl(

@@ -18,13 +18,20 @@ reference's own warehouse consumes
 src_ncbi_bioproject.sql:8-19) via the StructTypes in
 ``schemas/biosample.py``.
 
-Spark-first shape (same as xml_extract.py): the FILE LIST is the
-DataFrame; ``mapInPandas`` fans per-file generator parses across
-executors, Arrow-batched under the enforced schema — one task per
-file, no driver bottleneck, so a full-corpus backfill (36k pubmed
-files) is cluster-parallel. Record-dict normalization (None→[] for
-list fields) mirrors the reference's schema-consistency contract
-(sra/extract.py:283-288).
+One table, ``_KINDS``, names each kind's record element tag, record
+builder and schema. Both entry points read it: :func:`extract_records`
+streams files (``_stream_elements``, O(record) memory) and
+:func:`parse_xml_strings` parses a column of XML documents.
+
+Spark-first shape (same as every extractor): ``readers.map_records``
+fans the inputs out in one ``mapInPandas`` — one task per file up to
+cluster parallelism, no shuffle, no driver bottleneck, so a
+full-corpus backfill (36k pubmed files) is cluster-parallel — and
+returns rows under the enforced schema in frames of at most
+``readers.BATCH_ROWS`` rows, so one file of tens of millions of
+records never sits whole in a worker. Record-dict normalization
+(None→[] for list fields) mirrors the reference's schema-consistency
+contract (sra/extract.py:283-288).
 """
 
 from __future__ import annotations
@@ -32,15 +39,14 @@ from __future__ import annotations
 import gzip
 import json
 import xml.etree.ElementTree as ET
-from collections.abc import Callable, Iterator
-from pathlib import Path
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas.biosample import NCBI_BIOPROJECT_SCHEMA, NCBI_BIOSAMPLE_SCHEMA
-from .readers import fan_out
+from .readers import list_inputs, map_records
 
 PUBMED_MEDLINE_SCHEMA = T.StructType(
     [
@@ -180,23 +186,20 @@ def biosample_record(elem: ET.Element) -> dict:
     }
 
 
-def _biosample_elements(root: ET.Element) -> Iterator[dict]:
-    for elem in root.iter("BioSample"):
-        yield _normalize(biosample_record(elem), NCBI_BIOSAMPLE_SCHEMA)
-
-
-def biosample_records(path: str) -> Iterator[dict]:
-    """<BioSampleSet> file → record dicts (BioSampleParser surface)."""
-    for elem in _stream_elements(path, "BioSample"):
-        yield _normalize(biosample_record(elem), NCBI_BIOSAMPLE_SCHEMA)
-
-
 # -- BioProject --------------------------------------------------------------
 
 
-def bioproject_record(elem: ET.Element) -> dict:
+def bioproject_record(elem: ET.Element) -> dict | None:
     """One ``<Project>`` package element → the reference's record dict
-    (columns of raw.src_ncbi_bioproject)."""
+    (columns of raw.src_ncbi_bioproject), or None for an outer wrapper.
+
+    The real format nests ``<Project><Project>…``: only the inner element
+    owns a direct ``<ProjectID>``, so each package yields exactly one
+    record. A streamed outer wrapper ends after its inner record was
+    parsed and cleared, so it too has no direct ProjectID and is
+    skipped."""
+    if elem.find("./ProjectID") is None:
+        return None
     archive = elem.find(".//ProjectID/ArchiveID")
     descr = elem.find(".//ProjectDescr")
 
@@ -222,30 +225,6 @@ def bioproject_record(elem: ET.Element) -> dict:
             u.text.strip() for u in elem.iter("URL") if u.text and u.text.strip()
         ],
     }
-
-
-def _bioproject_elements(root: ET.Element) -> Iterator[dict]:
-    for elem in root.iter("Project"):
-        # the real format nests <Project><Project>…: the outer wrapper
-        # has no direct ProjectID child — parse only the inner record
-        # element so each project yields exactly one row.
-        if elem.find("./ProjectID") is None:
-            continue
-        yield _normalize(bioproject_record(elem), NCBI_BIOPROJECT_SCHEMA)
-
-
-def bioproject_records(path: str) -> Iterator[dict]:
-    """<PackageSet> file → record dicts (BioProjectParser surface).
-
-    Streaming nesting note: the inner <Project> (the one owning a
-    direct ProjectID) ends BEFORE its outer wrapper, gets parsed and
-    cleared — so when the outer <Project> end-event fires it no longer
-    has a direct ProjectID child and is skipped, exactly one row per
-    package."""
-    for elem in _stream_elements(path, "Project"):
-        if elem.find("./ProjectID") is None:
-            continue
-        yield _normalize(bioproject_record(elem), NCBI_BIOPROJECT_SCHEMA)
 
 
 # -- PubMed medline ----------------------------------------------------------
@@ -320,95 +299,61 @@ def pubmed_record(elem: ET.Element) -> dict:
     }
 
 
-def _pubmed_elements(root: ET.Element) -> Iterator[dict]:
-    for elem in root.iter("PubmedArticle"):
-        yield _normalize(pubmed_record(elem), PUBMED_MEDLINE_SCHEMA)
-
-
-def pubmed_records(path: str) -> Iterator[dict]:
-    """<PubmedArticleSet> file → record dicts; ``source_file`` mirrors
-    the reference's ``_read_from`` provenance column
-    (etl/pubmed.py:98-99)."""
-    for elem in _stream_elements(path, "PubmedArticle"):
-        rec = _normalize(pubmed_record(elem), PUBMED_MEDLINE_SCHEMA)
-        rec["source_file"] = path
-        yield rec
-
-
 # -- distributed extraction --------------------------------------------------
 
-_PARSERS: dict[str, tuple[Callable[[str], Iterator[dict]], T.StructType]] = {
-    "biosample": (biosample_records, NCBI_BIOSAMPLE_SCHEMA),
-    "bioproject": (bioproject_records, NCBI_BIOPROJECT_SCHEMA),
-    "pubmed": (pubmed_records, PUBMED_MEDLINE_SCHEMA),
+# kind → (record element tag, record builder, output schema), shared by
+# the file path and the XML-string path
+_KINDS: dict[str, tuple[str, Callable[[ET.Element], dict | None], T.StructType]] = {
+    "biosample": ("BioSample", biosample_record, NCBI_BIOSAMPLE_SCHEMA),
+    "bioproject": ("Project", bioproject_record, NCBI_BIOPROJECT_SCHEMA),
+    "pubmed": ("PubmedArticle", pubmed_record, PUBMED_MEDLINE_SCHEMA),
 }
+
+
+def _records(
+    kind: str, elements: Iterable[ET.Element], source_file: str | None
+) -> Iterator[dict]:
+    """Normalized record dicts of ``kind`` from its record elements.
+    ``source_file`` fills the schema's provenance column where it has
+    one (pubmed's ``_read_from``, etl/pubmed.py:98-99)."""
+    _, build, schema = _KINDS[kind]
+    for elem in elements:
+        rec = build(elem)
+        if rec is not None:
+            yield _normalize({**rec, "source_file": source_file}, schema)
+
+
+def _file_records(kind: str, path: str) -> Iterator[dict]:
+    return _records(kind, _stream_elements(path, _KINDS[kind][0]), path)
+
+
+def _document_records(kind: str, xml: str | None) -> Iterator[dict]:
+    return _records(kind, ET.fromstring(xml).iter(_KINDS[kind][0]) if xml else (), None)
 
 
 def extract_records(
     spark: SparkSession, kind: str, paths: list[str] | str
 ) -> DataFrame:
     """Distributed XML extraction for ``kind`` in
-    {'biosample','bioproject','pubmed'}: one task per file, generator
-    parse executor-side, Arrow-batched rows under the enforced schema."""
-    records_fn, schema = _PARSERS[kind]
-    if isinstance(paths, str):
-        base = Path(paths)
-        paths = sorted(
-            str(p) for pat in ("*.xml", "*.xml.gz") for p in base.glob(pat)
-        )
-    if not paths:
-        return spark.createDataFrame([], schema)
-    files_df = fan_out(spark, paths)
-    cols = [f.name for f in schema.fields]
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # bounded-size output batches: one file can hold tens of
-        # millions of records (biosample_set.xml.gz), so buffering a
-        # whole file's rows before yielding would defeat the streaming
-        # parse. 5k rows ≈ a few MB per Arrow batch.
-        buf: list[dict] = []
-        for pdf in batches:
-            for path in pdf["path"]:
-                for rec in records_fn(path):
-                    buf.append(rec)
-                    if len(buf) >= 5000:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=cols)
-
-    return files_df.mapInPandas(_parse, schema)
-
-
-_ELEMENT_PARSERS: dict[str, tuple[Callable, T.StructType]] = {
-    "biosample": (_biosample_elements, NCBI_BIOSAMPLE_SCHEMA),
-    "bioproject": (_bioproject_elements, NCBI_BIOPROJECT_SCHEMA),
-    "pubmed": (_pubmed_elements, PUBMED_MEDLINE_SCHEMA),
-}
+    {'biosample','bioproject','pubmed'}: one task per file, streaming
+    parse executor-side, rows under the enforced schema
+    (``readers.map_records``)."""
+    files = list_inputs(paths, ("*.xml", "*.xml.gz"))
+    return map_records(spark, files, partial(_file_records, kind), _KINDS[kind][2])
 
 
 def parse_xml_strings(df: DataFrame, xml_col: str, kind: str) -> DataFrame:
-    """Parse an XML-document STRING column through the same per-element
-    record parsers (records may be 1:N per document). Used where the
+    """Parse an XML-document STRING column through the same per-kind
+    record table (records may be 1:N per document). Used where the
     XML arrives as payload rows rather than files — REST/queue bodies,
     or the registry's oracle-checked parser queries (each document
     built deterministically from a testdata table so a SQL engine can
-    regex-extract the same fields). mapInPandas keeps the parse
-    Arrow-batched and executor-side, same as the file path."""
-    elements_fn, schema = _ELEMENT_PARSERS[kind]
-    cols = [f.name for f in schema.fields]
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                rec
-                for xml in pdf[xml_col]
-                if xml
-                for rec in elements_fn(ET.fromstring(xml))
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(xml_col).mapInPandas(_parse, schema)
+    regex-extract the same fields). Same ``readers.map_records`` path
+    as the files: Arrow-batched and executor-side."""
+    return map_records(
+        df.sparkSession, df.select(xml_col), partial(_document_records, kind),
+        _KINDS[kind][2],
+    )
 
 
 def extract_biosamples(spark: SparkSession, paths: list[str] | str) -> DataFrame:

@@ -6,11 +6,12 @@ attributes are repeatable ``!Entity_key = value`` lines
 (the surface the reference gets from GEOparse's
 ``_parse_single_entity_soft``, geo/extract.py:125-127).
 
-Same Spark shape as ``xml_extract``: file list fans out across
-executors via ``mapInPandas``, each file streams line-by-line through
-a generator (SOFT files are read sequentially — no DOM, constant
-memory even for multi-GB family files), rows come back Arrow-batched
-under an enforced schema. Repeated keys aggregate into arrays;
+Same Spark shape as ``xml_extract``: ``readers.map_records`` fans the
+file list out across executors in one ``mapInPandas``, each file
+streams line-by-line through a generator (SOFT files are read
+sequentially — no DOM, constant memory even for multi-GB family
+files), and rows come back under an enforced schema in frames of at
+most ``readers.BATCH_ROWS`` rows. Repeated keys aggregate into arrays;
 ``characteristics`` lines split on the first ``:`` into tag/value
 structs (the reference's flattened attribute-pair convention,
 ebi_biosample/extract.py:154-159).
@@ -20,13 +21,11 @@ from __future__ import annotations
 
 import gzip
 from collections.abc import Iterator
-from pathlib import Path
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .readers import fan_out
+from .readers import list_inputs, map_records
 
 SOFT_RECORD_SCHEMA = T.StructType(
     [
@@ -113,22 +112,7 @@ def _records(path: str) -> Iterator[dict]:
 
 
 def extract_soft(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Distributed SOFT extraction (same fan-out contract as
-    ``xml_extract.extract_experiments``)."""
-    if isinstance(paths, str):
-        base = Path(paths)
-        paths = sorted(
-            str(p) for pat in ("*.soft", "*.soft.gz", "*.txt", "*.txt.gz")
-            for p in base.glob(pat)
-        )
-    if not paths:
-        return spark.createDataFrame([], SOFT_RECORD_SCHEMA)
-    files_df = fan_out(spark, paths)
-    cols = [f.name for f in SOFT_RECORD_SCHEMA.fields]
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [r for p in pdf["path"] for r in _records(p)]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files_df.mapInPandas(_parse, SOFT_RECORD_SCHEMA)
+    """Distributed SOFT extraction (same ``readers.map_records`` contract
+    as ``xml_extract.extract_experiments``)."""
+    files = list_inputs(paths, ("*.soft", "*.soft.gz", "*.txt", "*.txt.gz"))
+    return map_records(spark, files, _records, SOFT_RECORD_SCHEMA)

@@ -48,11 +48,14 @@ def test_catalog_json(spark, tmp_path):
 
 def test_catalog_json_row_count_from_footers_skips_what_spark_skips(spark, tmp_path):
     """Row counts come from footers; files Spark does not read (``_SUCCESS``,
-    ``_temporary/``, hidden part files) are not counted, and the schema
-    keeps the partition column."""
+    ``_temporary/``, hidden part files) are not counted, by catalog.json
+    nor by the row-group scan, nor uploaded, and the schema keeps the
+    partition column."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
+
+    from omicidx_gh_etl_spark.engine.catalog import build_upload_manifest
 
     tdir = tmp_path / "export" / "events"
     spark.range(20).withColumn("day", (F.col("id") % 3).cast("string")).write.partitionBy(
@@ -66,7 +69,10 @@ def test_catalog_json_row_count_from_footers_skips_what_spark_skips(spark, tmp_p
 
     entry = build_catalog_json(spark, str(tmp_path / "export"))["tables"]["events"]
     df = spark.read.parquet(str(tdir))
-    assert entry["row_count"] == df.count() == 20
+    meta_rows = scan_parquet_metadata(spark, str(tdir)).agg(F.sum("num_rows")).first()[0]
+    assert entry["row_count"] == df.count() == meta_rows == 20
+    manifest = build_upload_manifest(str(tmp_path / "export"), catalog=False, database=False)
+    assert {f["local"] for f in manifest["files"]} == {str(p) for p in tdir.glob("day=*/part-*")}
     assert entry["schema"] == {f.name: f.dataType.simpleString() for f in df.schema.fields}
     assert entry["schema"] == {"id": "bigint", "day": "int"}
 
