@@ -22,8 +22,8 @@ its export, its downstream models (with ``fail_fast``) and ``backfill``'s
 interval record are skipped, and a re-run picks the interval up again.
 
 :func:`run_audits` is the whole-table evaluator behind ``cli.py audit``:
-it runs every audit of the given models over the resolved tables, one
-Spark job per audit, a row audit as a filter. Every result lands in
+it runs every audit of the given models over the resolved tables
+(:func:`evaluate`), a row audit as a filter. Every result lands in
 ``meta.model_audits`` (run id, audit, model, status, bad-row count):
 one pyarrow-written parquet file per call or per runner run, renamed
 into place by the small-state store (engine/state.py), no Spark job.
@@ -117,10 +117,15 @@ def result(a: Audit, bad_rows: int) -> AuditResult:
 
 
 def evaluate(a: Audit, df: DataFrame, evidence_limit: int = 20) -> AuditResult:
-    """One audit over ``df``: one Spark job. ``evidence_limit`` caps the
-    offending rows counted (0 counts them all)."""
+    """One audit over ``df``. ``evidence_limit`` caps the offending rows
+    counted (0 counts them all).
+
+    The capped count is ``take``, not ``limit(n).count()``: Spark names
+    each limit operator's codegen variable from a global counter, so the
+    latter generates new source (a compile) on every call; ``take``
+    reuses its compiled classes and runs one job fewer."""
     bad = a.build(df)
-    return result(a, bad.limit(evidence_limit + 1).count() if evidence_limit else bad.count())
+    return result(a, len(bad.take(evidence_limit + 1)) if evidence_limit else bad.count())
 
 
 def record_audits(

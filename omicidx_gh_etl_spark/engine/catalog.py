@@ -341,10 +341,13 @@ def build_catalog_json(
 
     No Spark: row counts and schemas come from the part-file footers
     (:func:`_footer_table`), so ``deploy`` starts no JVM. ``spark`` is
-    ignored; it stays only for callers that pass it positionally."""
+    ignored; it stays only for callers that pass it positionally.
+    Hidden directories (:func:`_hidden`: ``_temporary/``, ``.staging/``)
+    are writer leftovers, not tables."""
     tables = {}
     root = Path(export_root)
-    for tdir in sorted(p for p in root.iterdir() if p.is_dir()) if root.exists() else []:
+    tdirs = root.iterdir() if root.exists() else ()
+    for tdir in sorted(p for p in tdirs if p.is_dir() and not _hidden(p.name)):
         rows, schema = _footer_table(tdir)
         tables[tdir.name] = {
             "path": f"{base_url}{tdir.name}" if base_url else str(tdir),

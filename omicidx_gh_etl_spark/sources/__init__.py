@@ -9,13 +9,12 @@ from .ncbi_extract import (
     extract_pubmed,
     parse_xml_strings,
 )
-from .readers import read_csv, read_table
+from .readers import read_csv
 from .rest_source import RestPagesDataSource
 from .writers import write_ndjson, write_parquet
 
 __all__ = [
     "read_csv",
-    "read_table",
     "write_parquet",
     "write_ndjson",
     "RestPagesDataSource",

@@ -116,8 +116,3 @@ def map_records(
         yield from record_batches(values, records, names)
 
     return inputs.mapInPandas(_map, schema)
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic test table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -38,6 +38,24 @@ def test_audit_pass_and_fail(spark, tmp_path):
     assert meta.count() == 2
 
 
+def test_set_audit_count_is_capped_and_reuses_its_code(spark, compiles):
+    """``evaluate`` caps the bad rows at ``evidence_limit + 1``, and a
+    second call over the same frame compiles nothing: a limit operator
+    takes its codegen names from a global counter, so a capped
+    ``limit(n).count()`` compiled new source on every call."""
+    from omicidx_gh_etl_spark.engine.audits import evaluate
+
+    unique = next(a for a in AUDITS.all() if a.name == "assert_unique_accession")
+    ids = spark.range(30).select(F.col("id").cast("string").alias("accession"))
+    df = ids.unionAll(ids)  # 30 duplicated accessions
+    first = evaluate(unique, df)
+    before = compiles()
+    again = evaluate(unique, df)
+    assert compiles() - before == 0
+    assert (first.status, first.bad_rows) == (again.status, again.bad_rows) == ("fail", 21)
+    assert evaluate(unique, df, evidence_limit=0).bad_rows == 30
+
+
 def test_builtin_audits_registered():
     names = {a.name for a in AUDITS.all()}
     assert "assert_accession_not_null" in names

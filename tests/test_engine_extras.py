@@ -151,6 +151,25 @@ def test_catalog_json_infers_partition_types_as_spark_does(spark, tmp_path):
         "int", "bigint", "double", "date", "string"]
 
 
+def test_catalog_json_skips_hidden_directories(tmp_path):
+    """Writer leftovers under the export root (``_temporary/`` with a
+    part file, an empty ``.staging/``) are not tables: the same listing
+    rule as ``data_files``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    export = tmp_path / "export"
+    part = pa.table({"n": pa.array([1, 2], pa.int64())})
+    for d in (export / "mart", export / "_temporary" / "0"):
+        d.mkdir(parents=True)
+        pq.write_table(part, d / "part-9.parquet")
+    (export / ".staging").mkdir()
+
+    cat = build_catalog_json(None, str(export))["tables"]
+    assert list(cat) == ["mart"]
+    assert cat["mart"]["row_count"] == 2
+
+
 def test_deploy_starts_no_spark_session(spark, tmp_path, monkeypatch, capsys):
     import argparse
     import json

@@ -45,3 +45,29 @@ def test_sketch_error_bounds(spark, sf_dir):
     qrows = REGISTRY["sketch_approx_quantiles"].builder(spark, sf_dir).collect()
     assert qrows and {r["quantile"] for r in qrows} == {0.5, 0.95}
     assert all(r["approx_in_band"] for r in qrows)
+
+
+# One registered query per operator family: the warm-pass mix of
+# ``perfbench/workloads.py`` (QUERY_MIX), named here so the test does not
+# import the benchmark.
+WARM_MIX = (
+    "mart_denormalized", "agg_multikey_pricing", "dedup_latest_by_key",
+    "dedup_exact", "dedup_minhash_lsh", "similarity_topk",
+    "similarity_ivf_search", "text_winnow_fingerprints",
+    "range_join_events_windows", "sessionize_events",
+    "sketch_heavy_hitters", "interval_coalesce_user_spans",
+)
+
+
+def test_warm_query_pass_compiles_nothing(spark, compiles, sf_gate):
+    """The mix compiles ~160 classes; a second pass over it must find
+    every one in the session's codegen cache."""
+
+    def run_mix():
+        for name in WARM_MIX:
+            REGISTRY[name].builder(spark, sf_gate).write.format("noop").mode("overwrite").save()
+
+    run_mix()
+    before = compiles()
+    run_mix()
+    assert compiles() - before == 0

@@ -288,6 +288,27 @@ def test_incremental_rerun_is_idempotent(spark, runner):
     assert n1 == n2 == 3
 
 
+def test_rerun_compiles_nothing_and_writes_no_crc(spark, runner, compiles, tmp_path):
+    """A second run reuses every class the first one compiled (the
+    session's codegen cache holds the working set, and the set audit
+    generates the same source each call), and the writes leave no
+    ``.crc`` checksum sidecars."""
+    # every model this data root feeds, the set-audited accessions included
+    select = [
+        "geometadb.gsm", "geometadb.gse", "geometadb.gpl", "geometadb.gse_gsm",
+        "geometadb.gse_gpl", "geometadb.geo_supplemental_files",
+        "bronze.stg_ebi_biosample", "bronze.stg_sra_accessions",
+        "bronze.stg_sra_experiments", "bronze.stg_sra_studies", "bronze.stg_sra_samples",
+    ]
+    first = runner.run("2006-08-01", "2024-01-31", select=select)
+    assert [r.status for r in first] == ["success"] * len(first), first
+    before = compiles()
+    second = runner.run("2006-08-01", "2024-01-31", select=select)
+    assert [r.status for r in second] == ["success"] * len(first), second
+    assert compiles() - before == 0
+    assert not list((tmp_path / "warehouse").rglob("*.crc"))
+
+
 # -- geometadb golden tests ------------------------------------------------
 
 
