@@ -85,9 +85,21 @@ def cmd_run(args: argparse.Namespace) -> int:
     return 1 if failed else 0
 
 
+def _run_history(args: argparse.Namespace) -> list[dict]:
+    """The last ``args.limit`` rows of ``meta.model_runs``, newest
+    first, read without a Spark session."""
+    from .engine import WarehouseRunner
+    from .models import REGISTRY
+
+    runner = WarehouseRunner(
+        spark=None, registry=REGISTRY,
+        data_root=args.data_root, warehouse_root=args.warehouse_root,
+    )
+    return runner.run_history(limit=args.limit).to_pylist()
+
+
 def cmd_history(args: argparse.Namespace) -> int:
-    runner = _runner(args)
-    for r in runner.run_history(limit=args.limit).collect():
+    for r in _run_history(args):
         print(
             f"{r['started_at']} {r['status']:8s} {r['model']:40s} "
             f"{r['seconds']:8.2f}s hash={r['plan_hash']}"
@@ -308,44 +320,27 @@ def cmd_curate(args: argparse.Namespace) -> int:
 def cmd_status(args: argparse.Namespace) -> int:
     """Pipeline status dashboard (reference: omicidx_etl/status.py) —
     success rate, per-model durations, and recent failures, computed
-    from ``meta.model_runs`` instead of ad-hoc metrics JSON files."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    runner = _runner(args)
-    # a fresh warehouse has no meta/model_runs directory yet — that is
-    # the normal first-use state, not an error
-    if not (Path(args.warehouse_root) / "meta" / "model_runs").exists():
+    from ``meta.model_runs`` instead of ad-hoc metrics JSON files.
+    Starts no Spark session: the runs are a few rows in the
+    small-state store."""
+    runs = _run_history(args)
+    if not runs:
         print("no runs recorded")
         return 0
-    runs = runner.run_history(limit=args.limit)
-    if runs.isEmpty():
-        print("no runs recorded")
-        return 0
-    summary = (
-        runs.groupBy("model")
-        .agg(
-            F.count("*").alias("runs"),
-            F.sum(F.when(F.col("status") == "success", 1).otherwise(0)).alias("ok"),
-            F.round(F.avg("seconds"), 2).alias("avg_s"),
-            F.round(F.max("seconds"), 2).alias("max_s"),
-            F.max("started_at").alias("last_run"),
-            F.max_by("status", "started_at").alias("last_status"),
-        )
-        .orderBy("model")
-    )
-    rows = summary.collect()
-    total = sum(r["runs"] for r in rows)
-    ok = sum(r["ok"] for r in rows)
-    print(f"runs: {total}  success: {ok}  rate: {ok / total:.1%}")
-    for r in rows:
+    by_model: dict[str, list[dict]] = {}
+    for r in runs:  # newest first, so a model's first row is its last run
+        by_model.setdefault(r["model"], []).append(r)
+    ok = sum(r["status"] == "success" for r in runs)
+    print(f"runs: {len(runs)}  success: {ok}  rate: {ok / len(runs):.1%}")
+    failed = False
+    for model, rs in sorted(by_model.items()):
+        last, seconds = rs[0], [r["seconds"] for r in rs]
         print(
-            f"  {r['last_status']:8s} {r['model']:40s} "
-            f"runs={r['runs']:<4d} avg={r['avg_s']:8.2f}s "
-            f"max={r['max_s']:8.2f}s last={r['last_run']}"
+            f"  {last['status']:8s} {model:40s} "
+            f"runs={len(rs):<4d} avg={sum(seconds) / len(rs):8.2f}s "
+            f"max={max(seconds):8.2f}s last={last['started_at']}"
         )
-    failed = [r for r in rows if r["last_status"] != "success"]
+        failed |= last["status"] != "success"
     return 1 if failed else 0
 
 

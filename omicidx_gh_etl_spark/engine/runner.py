@@ -66,6 +66,7 @@ from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
@@ -89,7 +90,7 @@ MODEL_DOCS_SCHEMA = (
 @dataclass
 class RunResult:
     model: str
-    status: str  # success | failed | skipped
+    status: str  # success | failed
     seconds: float
     rows_affected: int | None
     plan_hash: str
@@ -354,14 +355,16 @@ class WarehouseRunner:
         ]
         self._meta_append("model_docs", rows, MODEL_DOCS_SCHEMA)
 
-    def run_history(self, limit: int = 20) -> DataFrame:
-        """meta.model_runs, newest first (warehouse_cli.py:192-205)."""
-        path = str(Path(self.warehouse_root) / "meta" / "model_runs")
-        return (
-            self.spark.read.parquet(path)
-            .orderBy(F.desc("started_at"), F.asc("model"))
-            .limit(limit)
-        )
+    def run_history(self, limit: int = 20) -> pa.Table:
+        """meta.model_runs, newest first (warehouse_cli.py:192-205), read
+        through the small-state store: no Spark job, and no session
+        needed (empty before the first run)."""
+        runs = StateTable(
+            Path(self.warehouse_root) / "meta" / "model_runs", MODEL_RUNS_SCHEMA
+        ).read()
+        return runs.sort_by(
+            [("started_at", "descending"), ("model", "ascending")]
+        ).slice(0, limit)
 
     # -- incremental backfill ---------------------------------------------
 

@@ -2,14 +2,7 @@ from .ann_ingest import make_ann_ingest_batch_fn, stream_ann_ingest
 from .dedup import dedup_stream, run_dedup_stream
 from .join import attribution_join_stream, run_attribution_join_stream
 from .stateful import run_sessionize_stream, sessionize_stream
-from .upsert_sink import (
-    make_snapshot_batch_fn,
-    make_snapshot_partition_batch_fn,
-    run_events_upsert_stream,
-    stream_upsert,
-    stream_upsert_snapshot,
-)
-from .tws import run_sessionize_stream_tws, sessionize_stream_tws
+from .upsert_sink import make_snapshot_partition_batch_fn
 from .windows import (
     run_streaming_session_counts,
     run_streaming_window_counts,
@@ -26,15 +19,9 @@ __all__ = [
     "run_streaming_session_counts",
     "sessionize_stream",
     "run_sessionize_stream",
-    "sessionize_stream_tws",
-    "run_sessionize_stream_tws",
     "dedup_stream",
     "run_dedup_stream",
     "attribution_join_stream",
     "run_attribution_join_stream",
-    "stream_upsert",
-    "run_events_upsert_stream",
-    "make_snapshot_batch_fn",
     "make_snapshot_partition_batch_fn",
-    "stream_upsert_snapshot",
 ]

@@ -1,5 +1,5 @@
-"""Streaming upsert sink: ``foreachBatch`` + merge-upsert — continuous
-CDC apply into a parquet target.
+"""Streaming CDC sink: ``foreachBatch`` → partition-scoped merges into a
+versioned snapshot table, exactly once per micro-batch.
 
 The reference's late-update story (re-extracted days re-deliver
 changed records, dedup deferred downstream —
@@ -9,88 +9,28 @@ MERGED into the published table, latest-version-wins, instead of
 appended and deduplicated later.
 
 ``foreachBatch`` is the idiomatic bridge: each micro-batch arrives as
-a plain batch DataFrame, so the batch ``merge_upsert`` operator (and
-its argmax/partial-agg plan) is reused verbatim — one code path for
-backfill and streaming. Epoch ids are recorded so a replayed batch
-(restart between sink write and checkpoint commit) re-merges
-idempotently: merging the same updates twice is a no-op by
-construction (latest-version-wins is idempotent on identical input).
+a plain batch DataFrame, so the batch
+``merge_into_snapshot_partitions`` operator is reused verbatim — one
+merge path for backfill and streaming. Each applied batch commits one
+time-travelable table version and records ``(txn_id, epoch_id)`` in
+that version's ``meta``, so a replayed epoch (restart between sink
+write and checkpoint commit) is skipped without touching data
+(:func:`_should_skip`).
 
-Scale: each merge rewrites the target (see merge.py's notes — compose
-with date partitioning for big targets); state is the streaming
-engine's source offsets only, so the sink itself holds nothing in
-memory between batches.
+Scale: per batch the work is O(touched partitions + batch); state is
+the streaming engine's source offsets only, so the sink itself holds
+nothing in memory between batches. ``streaming_ann_ingest`` runs this
+sink through :func:`~.ann_ingest.make_ann_ingest_batch_fn`, and
+``streaming/neardup.py`` shares its replay guard.
 """
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from ..engine.merge import merge_upsert
-from .source import events_stream
-
-
-def stream_upsert(
-    df: DataFrame,
-    target_dir: str,
-    keys: list[str],
-    order_cols: list[str],
-    delete_col: str | None = None,
-    query_name: str | None = None,
-):
-    """Attach an upsert sink to a streaming DataFrame; returns the
-    started StreamingQuery. Each micro-batch is merged into
-    ``target_dir`` latest-version-wins."""
-    applied: list[int] = []
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_upsert(
-            batch.sparkSession,
-            target_dir,
-            batch,
-            keys=keys,
-            order_cols=order_cols,
-            delete_col=delete_col,
-        )
-        applied.append(epoch_id)
-
-    q = (
-        df.writeStream.outputMode("update")
-        .queryName(query_name or f"upsert_{uuid.uuid4().hex[:10]}")
-        .foreachBatch(_apply)
-        .start()
-    )
-    q._applied_epochs = applied  # test hook: which epochs merged
-    return q
-
-
-def run_events_upsert_stream(
-    spark: SparkSession,
-    source_path: str,
-    target_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Drive an events change-stream into a parquet target keyed by
-    event_id, (ts, value) as the version order; returns the final
-    merged table. Bounded-source test harness for the sink."""
-    stream = events_stream(spark, source_path, max_files_per_trigger)
-    q = stream_upsert(
-        stream, target_dir, keys=["event_id"], order_cols=["ts_us", "value"]
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(target_dir)
-
-
-# --------------------------------------------------------------------------
-# Exactly-once variant: foreachBatch → versioned snapshot commits
-# --------------------------------------------------------------------------
+from ..engine.merge import merge_into_snapshot_partitions
 
 
 def _should_skip(table, txn_id: str | None, epoch_id: int) -> bool:
@@ -115,76 +55,6 @@ def _should_skip(table, txn_id: str | None, epoch_id: int) -> bool:
     )
 
 
-def make_snapshot_batch_fn(
-    table,
-    keys: list[str],
-    order_cols: list[str],
-    delete_col: str | None = None,
-    txn_id: str | None = None,
-):
-    """Build the ``foreachBatch`` function for streaming upserts into a
-    :class:`~..engine.snapshots.SnapshotTable` with exactly-once batch
-    application.
-
-    The streaming engine guarantees at-least-once ``foreachBatch``
-    delivery: on restart between sink write and checkpoint commit, the
-    last epoch is REPLAYED. The merge itself is idempotent on identical
-    input, but replay still costs a full rewrite — and a non-idempotent
-    sink (append) would duplicate. The fix is the table-format
-    transaction pattern (Delta's txnAppId/txnVersion): every commit
-    records ``(txn_id, epoch_id)`` in the snapshot's ``meta``; a batch
-    whose epoch ≤ the last committed epoch OF THE SAME ``txn_id`` is
-    skipped entirely (see :func:`_should_skip` for why the id scoping
-    is load-bearing).
-
-    ``txn_id`` should be stable across restarts of the same logical
-    stream — derive it from the checkpoint location (or StreamingQuery
-    ``id``). Defaults to a fresh uuid per sink build: replays within
-    one process are still skipped; after a restart the guard
-    disengages and correctness falls back to merge idempotency.
-    """
-    from ..engine.merge import merge_into_snapshot
-
-    txn_id = txn_id or f"txn_{uuid.uuid4().hex[:12]}"
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if _should_skip(table, txn_id, epoch_id):
-            return  # replayed batch — already durable in the log
-        merge_into_snapshot(
-            table,
-            batch,
-            keys=keys,
-            order_cols=order_cols,
-            delete_col=delete_col,
-            note=f"stream epoch {epoch_id}",
-            meta={"epoch_id": epoch_id, "txn_id": txn_id},
-        )
-
-    return _apply
-
-
-def stream_upsert_snapshot(
-    df: DataFrame,
-    table,
-    keys: list[str],
-    order_cols: list[str],
-    delete_col: str | None = None,
-    query_name: str | None = None,
-):
-    """Attach an exactly-once snapshot upsert sink to a streaming
-    DataFrame; each micro-batch becomes one table version (time
-    travel over the ingest history comes free)."""
-    q = (
-        df.writeStream.outputMode("update")
-        .queryName(query_name or f"snap_upsert_{uuid.uuid4().hex[:10]}")
-        .foreachBatch(make_snapshot_batch_fn(table, keys, order_cols, delete_col))
-        .start()
-    )
-    return q
-
-
 def make_snapshot_partition_batch_fn(
     table,
     keys: list[str],
@@ -193,25 +63,30 @@ def make_snapshot_partition_batch_fn(
     delete_col: str | None = None,
     txn_id: str | None = None,
 ):
-    """Partition-scoped exactly-once ``foreachBatch``: each micro-batch
-    merges into ONLY the partitions it touches
-    (`merge_into_snapshot_partitions`), with the same txn-scoped
-    epoch replay guard as :func:`make_snapshot_batch_fn`.
+    """Build the ``foreachBatch`` function for exactly-once streaming
+    upserts into a :class:`~..engine.snapshots.SnapshotTable`: each
+    micro-batch merges into ONLY the partitions it touches
+    (`merge_into_snapshot_partitions`) and commits one table version.
 
-    This is the steady-state 100 TB streaming-CDC shape: per batch,
-    work is O(touched partitions + batch), the table's full history
-    stays time-travelable, and a replayed epoch is skipped without
-    touching data.
+    The streaming engine guarantees at-least-once ``foreachBatch``
+    delivery: on restart between sink write and checkpoint commit, the
+    last epoch is REPLAYED. A batch whose epoch ≤ the last committed
+    epoch OF THE SAME ``txn_id`` is skipped entirely (see
+    :func:`_should_skip` for why the id scoping is load-bearing).
+
+    ``txn_id`` should be stable across restarts of the same logical
+    stream — derive it from the checkpoint location (or StreamingQuery
+    ``id``). Defaults to a fresh uuid per sink build: replays within
+    one process are still skipped; after a restart the guard
+    disengages and correctness falls back to merge idempotency.
     """
-    from ..engine.merge import merge_into_snapshot_partitions
-
     txn_id = txn_id or f"txn_{uuid.uuid4().hex[:12]}"
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
         if _should_skip(table, txn_id, epoch_id):
-            return
+            return  # replayed batch — already durable in the log
         merge_into_snapshot_partitions(
             table,
             batch,

@@ -69,7 +69,7 @@ def _failing_registry(slow_failure: bool = False):
 def _recorded_runs(runner) -> list[tuple]:
     return sorted(
         (r["model"], r["status"], r["rows_affected"])
-        for r in runner.run_history(limit=100).collect()
+        for r in runner.run_history(limit=100).to_pylist()
     )
 
 

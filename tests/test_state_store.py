@@ -55,7 +55,8 @@ def test_interval_store_compares_model_names_as_values(tmp_path):
 def test_run_history_reads_the_declared_model_runs_schema(spark, tmp_path):
     runner = _tiny_runner(spark, tmp_path / "wh")
     _run_tiny(runner)
-    assert runner.run_history().schema == StructType.fromDDL(MODEL_RUNS_SCHEMA)
+    runs_dir = tmp_path / "wh" / "meta" / "model_runs"
+    assert runner.run_history().schema == state.StateTable(runs_dir, MODEL_RUNS_SCHEMA).schema
 
 
 def test_model_runs_mixing_spark_and_store_files_reads_everywhere(spark, tmp_path, capsys):
@@ -91,6 +92,39 @@ def test_model_runs_mixing_spark_and_store_files_reads_everywhere(spark, tmp_pat
     assert "runs: 2  success: 2" in out and "mart.tiny" in out
 
 
+def test_history_and_status_read_the_store_without_spark(spark, tmp_path, capsys,
+                                                         monkeypatch):
+    """``run_history`` is newest first and cut to ``limit``, and the
+    ``history`` and ``status`` commands read it without a Spark session."""
+    wh = tmp_path / "wh"
+    runner = _tiny_runner(spark, wh)
+    _run_tiny(runner)
+    _run_tiny(runner)
+    runs = state.StateTable(wh / "meta" / "model_runs", MODEL_RUNS_SCHEMA).read()
+    newest = max(runs["started_at"].to_pylist())
+    assert runner.run_history(limit=1)["started_at"].to_pylist() == [newest]
+    assert runner.run_history().num_rows == 2
+
+    def no_spark(args):
+        raise AssertionError(f"{args.cmd} started a Spark session")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    ns = argparse.Namespace(
+        cmd="history", cpus=8, data_root=str(wh), warehouse_root=str(wh),
+        export_root=None, select=None, limit=1,
+    )
+    assert cli.cmd_history(ns) == 0
+    (line,) = capsys.readouterr().out.splitlines()
+    assert line.startswith(str(newest)) and "success" in line and "mart.tiny" in line
+    ns.cmd, ns.limit = "status", 100
+    assert cli.cmd_status(ns) == 0
+    out = capsys.readouterr().out
+    assert "runs: 2  success: 2  rate: 100.0%" in out and "mart.tiny" in out
+    ns.warehouse_root = str(tmp_path / "fresh")
+    assert cli.cmd_status(ns) == 0
+    assert capsys.readouterr().out == "no runs recorded\n"
+
+
 def test_commit_cut_before_rename_is_invisible(spark, tmp_path, monkeypatch):
     wh = tmp_path / "wh"
     runner = _tiny_runner(spark, wh)
@@ -112,7 +146,7 @@ def test_commit_cut_before_rename_is_invisible(spark, tmp_path, monkeypatch):
         assert [p.name for p in d.glob(".part-*.tmp")], d
 
     assert spark.read.parquet(str(wh / "intervals")).count() == 1
-    assert runner.run_history().count() == 1
+    assert runner.run_history().num_rows == 1
     assert ds.dataset(str(wh / "intervals"), format="parquet", partitioning="hive").count_rows() == 1
     assert ds.dataset(str(wh / "meta" / "model_runs"), format="parquet").count_rows() == 1
     left = store.missing_intervals("m", D(2024, 1, 1), D(2024, 1, 2))

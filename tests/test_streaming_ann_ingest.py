@@ -133,6 +133,7 @@ def test_stream_ann_ingest_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
+    built = idx.postings.latest_version()
     q = stream_ann_ingest(stream, idx, txn_id="stream-e2e")
     try:
         q.processAllAvailable()
@@ -140,3 +141,5 @@ def test_stream_ann_ingest_end_to_end(spark, tmp_path):
         q.stop()
     got = {r["vec_id"] for r in idx.postings.read(spark).collect()}
     assert got == set(VECS) | set(BATCH1) | set(BATCH2)
+    # one index version per micro-batch (one file per trigger)
+    assert idx.postings.latest_version() == built + 2

@@ -121,165 +121,6 @@ def test_streaming_dedup_drops_redelivered_records(spark, sf_dir):
     assert out.select("event_id").distinct().count() == n_events
 
 
-# ---- transformWithStateInPandas twin (tws.py) ------------------------
-# The e2e path needs protobuf (absent here; see tws.PROTOBUF_AVAILABLE)
-# so the processor's fold/timer logic is unit-tested against stub state
-# primitives, and the e2e equivalence test self-skips.
-
-import pandas as pd
-
-from omicidx_gh_etl_spark.streaming import tws
-
-
-class _StubValueState:
-    def __init__(self):
-        self.value = None
-
-    def exists(self):
-        return self.value is not None
-
-    def get(self):
-        return self.value
-
-    def update(self, v):
-        self.value = tuple(v)
-
-    def clear(self):
-        self.value = None
-
-
-class _StubHandle:
-    def __init__(self):
-        self.state = _StubValueState()
-        self.timers: set[int] = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, ms):
-        self.timers.add(ms)
-
-    def deleteTimer(self, ms):
-        self.timers.discard(ms)
-
-
-class _ExpiredInfo:
-    def __init__(self, ms):
-        self._ms = ms
-
-    def getExpiryTimeInMs(self):
-        return self._ms
-
-
-def _feed(proc, rows):
-    """rows: (event_id, ts_us, value) → emitted closed sessions."""
-    pdf = pd.DataFrame(
-        {
-            "event_id": [r[0] for r in rows],
-            "ts_us": [r[1] for r in rows],
-            "value": [r[2] for r in rows],
-        }
-    )
-    out = list(proc.handleInputRows((7,), iter([pdf]), None))
-    return pd.concat(out) if out else pd.DataFrame(columns=tws._OUT_COLS)
-
-
-def test_tws_processor_gap_close_and_state():
-    gap = 30 * 60 * 1_000_000
-    proc = tws.SessionizeProcessor(gap, use_timers=True)
-    h = _StubHandle()
-    proc.init(h)
-    t0 = 1_700_000_000_000_000
-    # batch 1: one session, nothing closed, timer registered at last+gap
-    out = _feed(proc, [(1, t0, 1.0), (2, t0 + 60_000_000, 2.0)])
-    assert out.empty
-    assert h.state.value == (t0, t0 + 60_000_000, 2, 3.0)
-    assert h.timers == {proc._expiry_ms(t0 + 60_000_000)}
-    # batch 2: an event past the gap closes session 1, re-arms the timer
-    out = _feed(proc, [(3, t0 + 2 * gap, 5.0)])
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert (r["user_id"], r["session_start_us"], r["session_end_us"]) == (
-        7, t0, t0 + 60_000_000,
-    )
-    assert r["n_events"] == 2 and r["total_value"] == pytest.approx(3.0)
-    assert h.timers == {proc._expiry_ms(t0 + 2 * gap)}  # old timer deleted
-
-
-def test_tws_processor_timer_emits_and_evicts():
-    gap = 30 * 60 * 1_000_000
-    proc = tws.SessionizeProcessor(gap, use_timers=True)
-    h = _StubHandle()
-    proc.init(h)
-    t0 = 1_700_000_000_000_000
-    _feed(proc, [(1, t0, 1.0)])
-    expiry = proc._expiry_ms(t0)
-    out = list(proc.handleExpiredTimer((7,), None, _ExpiredInfo(expiry)))
-    assert len(out) == 1 and out[0].iloc[0]["n_events"] == 1
-    assert h.state.value is None  # evicted
-    # a second (stale) firing emits nothing
-    assert list(proc.handleExpiredTimer((7,), None, _ExpiredInfo(expiry))) == []
-
-
-def test_tws_unavailable_raises_cleanly(spark):
-    if tws.PROTOBUF_AVAILABLE:
-        pytest.skip("protobuf present: covered by the e2e test")
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        tws.sessionize_stream_tws(spark, "/tmp/nope.parquet")
-
-
-def test_tws_matches_applyinpandaswithstate(spark, sf_dir):
-    """e2e equivalence of the transformWithState sessionizer against
-    the applyInPandasWithState twin over the real events table. With
-    protobuf present this runs the genuine engine path; without it,
-    the REAL SessionizeProcessor is driven through the bounded replay
-    harness (micro-batches, watermark, per-key state) — the processor
-    under test is identical either way."""
-    old = run_sessionize_stream(spark, f"{sf_dir}/events.parquet")
-    if tws.PROTOBUF_AVAILABLE:
-        new = tws.run_sessionize_stream_tws(spark, f"{sf_dir}/events.parquet")
-    else:
-        new = tws.replay_sessionize_tws(spark, f"{sf_dir}/events.parquet")
-    assert {tuple(r) for r in old.collect()} == {tuple(r) for r in new.collect()}
-    assert new.count() > 0
-
-
-def test_tws_replay_timer_eviction_end_to_end(spark, tmp_path):
-    """The tws timer/eviction path end-to-end through the replay
-    harness, mirroring the applyInPandasWithState eviction scenario:
-    two micro-batches, user 2's much-later events advance the
-    watermark past user 1's session_end + gap, and the TIMER (not a
-    later user-1 event) emits and evicts user 1's session; user 2's
-    open session stays in state. Output must equal the
-    applyInPandasWithState twin run over the same two-batch source."""
-    src = tmp_path / "events"
-    src.mkdir()
-    t0 = 1_700_000_000_000_000
-    hour = 3_600_000_000
-    _write_events(str(src / "b1.parquet"), [(1, t0, 1, 1.0), (2, t0 + 60_000_000, 1, 2.0)])
-    time.sleep(0.05)
-    _write_events(str(src / "b2.parquet"), [(3, t0 + 10 * hour, 2, 5.0)])
-
-    out = tws.replay_sessionize_tws(
-        spark, str(src), timers=True, watermark="10 minutes",
-        max_files_per_trigger=1,
-    )
-    rows = {r["user_id"]: r for r in out.collect()}
-    assert 1 in rows and 2 not in rows
-    assert rows[1]["session_start_us"] == t0
-    assert rows[1]["session_end_us"] == t0 + 60_000_000
-    assert rows[1]["n_events"] == 2
-    assert rows[1]["total_value"] == pytest.approx(3.0)
-    # and the twin operator agrees row for row on the same source
-    twin = run_sessionize_stream(
-        spark, str(src), timeout=True, watermark="10 minutes",
-        max_files_per_trigger=1,
-    )
-    assert {tuple(r) for r in out.collect()} == {
-        tuple(r) for r in twin.collect()
-    }
-
-
 # ---- stream-stream attribution join (join.py) ------------------------
 
 def _write_typed_events(
@@ -326,106 +167,6 @@ def test_stream_join_matches_across_micro_batches(spark, tmp_path):
     assert rows == [(1, 2, 1, t0, t0 + 10 * minute, 9.5)]
 
 
-# ---- foreachBatch upsert sink (upsert_sink.py) -----------------------
-
-def test_stream_upsert_sink_merges_micro_batches(spark, tmp_path):
-    """Change stream → merged parquet: a later-version redelivery in a
-    later micro-batch replaces the earlier row; unrelated keys append;
-    final state is latest-version-wins across ALL batches."""
-    from omicidx_gh_etl_spark.streaming import run_events_upsert_stream
-
-    src = tmp_path / "changes"
-    src.mkdir()
-    t0 = 1_700_000_000_000_000
-    # batch 1: ids 1, 2   batch 2: id 1 updated (later ts), id 3 new
-    _write_events(str(src / "b1.parquet"), [(1, t0, 10, 1.0), (2, t0, 20, 2.0)])
-    time.sleep(0.05)
-    _write_events(
-        str(src / "b2.parquet"), [(1, t0 + 5_000_000, 10, 9.0), (3, t0, 30, 3.0)]
-    )
-    final = run_events_upsert_stream(
-        spark, str(src), str(tmp_path / "tgt"), max_files_per_trigger=1
-    )
-    # the shared source normalizes ts → timestamp + ts_us epoch micros
-    got = {r["event_id"]: (r["ts_us"], r["value"]) for r in final.collect()}
-    assert got == {
-        1: (t0 + 5_000_000, 9.0),
-        2: (t0, 2.0),
-        3: (t0, 3.0),
-    }
-
-
-# ---- exactly-once snapshot upsert sink (upsert_sink.py) ---------------
-
-def test_snapshot_batch_fn_exactly_once_replay(spark, tmp_path):
-    """Replayed epochs (at-least-once foreachBatch) are skipped: one
-    table version per applied epoch, replay is a no-op, and ingest
-    history stays time-travelable."""
-    from omicidx_gh_etl_spark.engine import SnapshotTable
-    from omicidx_gh_etl_spark.streaming import make_snapshot_batch_fn
-
-    table = SnapshotTable(str(tmp_path / "tbl"))
-    fn = make_snapshot_batch_fn(table, keys=["id"], order_cols=["ver"])
-
-    def b(rows):
-        return spark.createDataFrame(rows, "id long, val string, ver long")
-
-    fn(b([(1, "a", 1), (2, "b", 1)]), 0)
-    fn(b([(1, "a2", 2)]), 1)
-    assert table.latest_version() == 1
-    assert table.snapshot(1).meta["epoch_id"] == 1
-    assert table.snapshot(1).meta["txn_id"]  # txn-scoped guard
-
-    # restart replays epoch 1 → must not create a new version
-    fn(b([(1, "a2", 2)]), 1)
-    assert table.latest_version() == 1
-    # stale epoch likewise
-    fn(b([(9, "x", 9)]), 0)
-    assert table.latest_version() == 1
-
-    # fresh epoch applies
-    fn(b([(3, "c", 3)]), 2)
-    assert {r["id"]: r["val"] for r in table.read(spark).collect()} == {
-        1: "a2", 2: "b", 3: "c",
-    }
-    # time travel over ingest history
-    assert {r["id"] for r in table.read(spark, 0).collect()} == {1, 2}
-
-    # a NEW checkpoint restarts epochs at 0 — a different txn must NOT
-    # be treated as a replay (the unscoped-guard data-loss case)
-    from omicidx_gh_etl_spark.streaming import make_snapshot_batch_fn as mk
-    fn2 = mk(table, keys=["id"], order_cols=["ver"])
-    fn2(b([(4, "d", 1)]), 0)
-    assert {r["id"] for r in table.read(spark).collect()} == {1, 2, 3, 4}
-
-
-def test_stream_upsert_snapshot_end_to_end(spark, tmp_path):
-    from omicidx_gh_etl_spark.engine import SnapshotTable
-    from omicidx_gh_etl_spark.streaming import stream_upsert_snapshot
-    from omicidx_gh_etl_spark.streaming.source import events_stream
-
-    src = tmp_path / "changes"
-    src.mkdir()
-    t0 = 1_700_000_000_000_000
-    _write_events(str(src / "b1.parquet"), [(1, t0, 10, 1.0), (2, t0, 20, 2.0)])
-    time.sleep(0.05)
-    _write_events(str(src / "b2.parquet"), [(1, t0 + 5_000_000, 10, 9.0)])
-
-    stream = events_stream(spark, str(src / "*"), max_files_per_trigger=1)
-    table = SnapshotTable(str(tmp_path / "tbl"))
-    q = stream_upsert_snapshot(
-        stream, table, keys=["event_id"], order_cols=["ts_us", "value"]
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {r["event_id"]: r["value"] for r in table.read(spark).collect()}
-    assert got == {1: 9.0, 2: 2.0}
-    assert len(table.history()) == 2  # one version per micro-batch
-
-
 # ---- native streaming session windows (windows.py) --------------------
 
 def test_streaming_session_window_equals_batch(spark, sf_dir):
@@ -444,9 +185,14 @@ def test_streaming_session_window_equals_batch(spark, sf_dir):
     assert got == want
 
 
+# ---- exactly-once partition-scoped CDC sink (upsert_sink.py) ---------
+
 def test_snapshot_partition_batch_fn_scopes_rewrites(spark, tmp_path):
     """Partitioned streaming CDC: a batch touching one day rewrites
-    only that day's files; other days carry over byte-identical."""
+    only that day's files; other days carry over byte-identical. The
+    replay guard is scoped by ``txn_id``: a replayed or stale epoch of
+    the same sink is skipped, while a new sink (a new checkpoint, whose
+    epochs restart at 0) is applied."""
     from omicidx_gh_etl_spark.engine import SnapshotTable
     from omicidx_gh_etl_spark.streaming.upsert_sink import (
         make_snapshot_partition_batch_fn,
@@ -472,9 +218,29 @@ def test_snapshot_partition_batch_fn_scopes_rewrites(spark, tmp_path):
     assert {r["id"]: r["val"] for r in table.read(spark).collect()} == {
         1: "a2", 2: "b",
     }
+    assert snap.meta["epoch_id"] == 1 and snap.meta["txn_id"]
+    # each applied batch is a version: the ingest history time-travels
+    assert {r["id"]: r["val"] for r in table.read(spark, 0).collect()} == {
+        1: "a", 2: "b",
+    }
     # replayed epoch is a no-op
     fn(b([(1, "d1", "a2", 2)]), 1)
     assert table.latest_version() == 1
+    # a stale epoch likewise
+    fn(b([(9, "d3", "x", 9)]), 0)
+    assert table.latest_version() == 1
+    assert {r["id"] for r in table.read(spark).collect()} == {1, 2}
+
+    # a NEW sink restarts epochs at 0: a different txn must NOT be
+    # treated as a replay (the unscoped-guard data-loss case)
+    fn2 = make_snapshot_partition_batch_fn(
+        table, keys=["id"], order_cols=["ver"], partition_col="day"
+    )
+    fn2(b([(4, "d1", "d", 1)]), 0)
+    assert table.latest_version() == 2
+    assert {r["id"]: r["val"] for r in table.read(spark).collect()} == {
+        1: "a2", 2: "b", 4: "d",
+    }
 
 
 def test_events_stream_starts_on_empty_source(spark, tmp_path):

@@ -24,8 +24,11 @@ from omicidx_gh_etl_spark.schemas import (
     GEO_PLATFORM_SCHEMA,
     GEO_SAMPLE_SCHEMA,
     GEO_SERIES_SCHEMA,
+    NCBI_BIOPROJECT_SCHEMA,
+    NCBI_BIOSAMPLE_SCHEMA,
     SRA_ACCESSIONS_SCHEMA,
     SRA_EXPERIMENT_SCHEMA,
+    SRA_RUN_SCHEMA,
 )
 
 D = dt.date
@@ -191,10 +194,42 @@ def data_root(spark, tmp_path_factory):
         acc_row("SRP2", "STUDY", TS(2024, 1, 10, 0, 0)),
         acc_row("SRS1", "SAMPLE", TS(2024, 1, 10, 0, 0)),
         acc_row("SRS2", "SAMPLE", TS(2024, 1, 10, 0, 0)),
+        acc_row("SRR1", "RUN", TS(2024, 1, 12, 0, 0)),
     ]
     spark.createDataFrame(acc_rows, SRA_ACCESSIONS_SCHEMA).coalesce(1).write.parquet(
         str(root / "sra" / "sra_accessions.parquet")
     )
+
+    def run_row(acc, experiment):
+        base = {f.name: None for f in SRA_RUN_SCHEMA.fields}
+        base.update(accession=acc, experiment_accession=experiment, total_spots=10,
+                    identifiers=[], attributes=[], files=[], reads=[],
+                    base_counts=[], qualities=[])
+        return base
+
+    spark.createDataFrame(
+        [run_row("SRR1", "SRX1"), run_row("SRR2", "SRX2")], SRA_RUN_SCHEMA
+    ).coalesce(1).write.parquet(str(root / "sra" / "xFull-run-1.parquet"))
+
+    # --- NCBI biosample + bioproject (parquet, sources/ncbi_extract.py) ---
+    def ncbi_row(schema, **over):
+        base = {f.name: None for f in schema.fields}
+        base.update({f.name: [] for f in schema.fields if f.dataType.typeName() == "array"})
+        base.update(over)
+        return base
+
+    spark.createDataFrame(
+        [ncbi_row(NCBI_BIOSAMPLE_SCHEMA, accession="SAMN1", title="sample one",
+                  last_update="2024-01-12T08:30:00.000", taxon_id=9606),
+         ncbi_row(NCBI_BIOSAMPLE_SCHEMA, accession="SAMN2", title="out-of-window",
+                  last_update="2025-05-01T00:00:00.000")],
+        NCBI_BIOSAMPLE_SCHEMA,
+    ).coalesce(1).write.parquet(str(root / "biosample" / "biosample-1.parquet"))
+    spark.createDataFrame(
+        [ncbi_row(NCBI_BIOPROJECT_SCHEMA, accession="PRJNA1", title="project one",
+                  release_date="2024-01-11T00:00:00Z")],
+        NCBI_BIOPROJECT_SCHEMA,
+    ).coalesce(1).write.parquet(str(root / "biosample" / "bioproject-1.parquet"))
     return str(root)
 
 
@@ -376,11 +411,60 @@ def test_mart_and_run_tracking(spark, runner):
     assert rows["SRX1"]["study_title"] == "study one"
     assert rows["SRX1"]["organism"] == "Homo sapiens"
     assert rows["SRX2"]["organism"] == "Mus musculus"
-    hist = runner.run_history(limit=50).collect()
+    hist = runner.run_history(limit=50).to_pylist()
     assert {r["model"] for r in hist} >= {"mart.sra_metadata",
                                           "bronze.stg_sra_experiments"}
     assert all(r["status"] == "success" for r in hist)
     assert all(r["plan_hash"] for r in hist)
+
+
+_NCBI_GLOBS = {
+    "raw.src_ncbi_biosample": "biosample/biosample-*.parquet",
+    "raw.src_ncbi_bioproject": "biosample/bioproject-*.parquet",
+    "bronze.stg_ncbi_biosample": "biosample/biosample-*.parquet",
+    "bronze.stg_ncbi_bioproject": "biosample/bioproject-*.parquet",
+}
+
+
+def test_full_registry_run_succeeds(spark, runner):
+    """No ``select``: the fixture feeds every raw source, so every
+    registered model builds."""
+    results = runner.run(start_ds="2001-01-01", end_ds="2024-12-31")
+    assert len(results) == len(REGISTRY.names()) == 29
+    assert [r for r in results if r.status != "success"] == []
+    assert {r.model for r in results} == set(REGISTRY.names())
+    built = {
+        m: {r["accession"] for r in runner.resolve(m).select("accession").collect()}
+        for m in ("bronze.stg_sra_runs", "bronze.stg_ncbi_biosample",
+                  "bronze.stg_ncbi_bioproject")
+    }
+    assert built == {"bronze.stg_sra_runs": {"SRR1"},
+                     "bronze.stg_ncbi_biosample": {"SAMN1"},
+                     "bronze.stg_ncbi_bioproject": {"PRJNA1"}}
+
+
+def test_absent_source_fails_its_raw_views_and_their_downstream(spark, data_root, tmp_path):
+    """A raw view over a source directory that does not exist fails its
+    run (Spark's PATH_NOT_FOUND), rather than reading empty. With
+    ``fail_fast=False`` exactly the NCBI raw views and the models built
+    on them fail, each naming the missing glob; every other model
+    succeeds."""
+    import shutil
+
+    root = tmp_path / "no_biosample"
+    shutil.copytree(data_root, root, ignore=shutil.ignore_patterns("biosample"))
+    assert not (root / "biosample").exists() and (root / "sra").is_dir()
+    runner = WarehouseRunner(
+        spark=spark, registry=REGISTRY, data_root=str(root),
+        warehouse_root=str(tmp_path / "warehouse"),
+    )
+    results = runner.run(start_ds="2001-01-01", end_ds="2024-12-31", fail_fast=False)
+    assert len(results) == 29
+    failed = {r.model: r.error for r in results if r.status != "success"}
+    assert set(failed) == set(_NCBI_GLOBS)
+    for model, error in failed.items():
+        assert f"{root}/{_NCBI_GLOBS[model]}" in error, (model, error)
+    assert {r.status for r in results if r.model not in failed} == {"success"}
 
 
 # -- CLI consumer contract -------------------------------------------------
