@@ -42,12 +42,15 @@ def _spark(args: argparse.Namespace):
     return get_spark(app_name=f"warehouse-{args.cmd}", cpus=args.cpus)
 
 
-def _runner(args: argparse.Namespace):
+def _runner(args: argparse.Namespace, spark):
+    """The warehouse runner over ``args``' roots. Verbs that read only
+    the registry and the state store pass ``spark=None`` and start no
+    JVM."""
     from .engine import WarehouseRunner
     from .models import REGISTRY
 
     return WarehouseRunner(
-        spark=_spark(args),
+        spark=spark,
         registry=REGISTRY,
         data_root=args.data_root,
         warehouse_root=args.warehouse_root,
@@ -56,14 +59,9 @@ def _runner(args: argparse.Namespace):
 
 
 def cmd_plan(args: argparse.Namespace) -> int:
-    from .engine import topo_sort
     from .models import REGISTRY
 
-    if args.select:
-        plan = _runner(args).plan(select=args.select)
-    else:
-        plan = topo_sort(REGISTRY.dependency_edges())
-    for i, name in enumerate(plan, 1):
+    for i, name in enumerate(_runner(args, None).plan(select=args.select), 1):
         m = REGISTRY.get(name)
         extra = f" [{m.kind}" + (f", time={m.time_column}" if m.time_column else "") + "]"
         print(f"{i:3d}. {name}{extra}")
@@ -71,7 +69,7 @@ def cmd_plan(args: argparse.Namespace) -> int:
 
 
 def cmd_run(args: argparse.Namespace) -> int:
-    runner = _runner(args)
+    runner = _runner(args, _spark(args))
     results = runner.run(
         start_ds=args.start, end_ds=args.end, select=args.select or None,
         fail_fast=not args.no_fail_fast,
@@ -88,14 +86,7 @@ def cmd_run(args: argparse.Namespace) -> int:
 def _run_history(args: argparse.Namespace) -> list[dict]:
     """The last ``args.limit`` rows of ``meta.model_runs``, newest
     first, read without a Spark session."""
-    from .engine import WarehouseRunner
-    from .models import REGISTRY
-
-    runner = WarehouseRunner(
-        spark=None, registry=REGISTRY,
-        data_root=args.data_root, warehouse_root=args.warehouse_root,
-    )
-    return runner.run_history(limit=args.limit).to_pylist()
+    return _runner(args, None).run_history(limit=args.limit).to_pylist()
 
 
 def cmd_history(args: argparse.Namespace) -> int:
@@ -350,7 +341,7 @@ def cmd_audit(args: argparse.Namespace) -> int:
     from .models import REGISTRY
     from .models.registry import ModelContext
 
-    runner = _runner(args)
+    runner = _runner(args, _spark(args))
     models = args.select or sorted({a.model for a in AUDITS.all()})
     ctx = ModelContext(
         spark=runner.spark, data_root=args.data_root,
@@ -374,7 +365,7 @@ def cmd_sql(args: argparse.Namespace) -> int:
     from .models import REGISTRY
     from .models.registry import ModelContext
 
-    runner = _runner(args)
+    runner = _runner(args, _spark(args))
     ctx = ModelContext(
         spark=runner.spark, data_root=args.data_root,
         start_ds="2001-01-01", end_ds="2100-01-01",
@@ -396,7 +387,7 @@ def cmd_backfill(args: argparse.Namespace) -> int:
     """Per-interval incremental materialization (sqlmesh plan/run)."""
     from datetime import date
 
-    runner = _runner(args)
+    runner = _runner(args, _spark(args))
     start = date.fromisoformat(args.start)
     end = date.fromisoformat(args.end)
     if args.dry_run:
@@ -456,7 +447,7 @@ def cmd_describe(args: argparse.Namespace) -> int:
         print(f"export:      {m.export.path} ({m.export.compression})")
     if m.doc:
         print(f"doc:         {m.doc}")
-    runner = _runner(args)
+    runner = _runner(args, _spark(args))
     ctx = ModelContext(
         spark=runner.spark, data_root=args.data_root,
         start_ds="2001-01-01", end_ds="2100-01-01",

@@ -6,18 +6,12 @@ from .catalog import (
     scan_parquet_metadata,
     write_catalog_json,
 )
-from .catalog import prune_files, scan_column_stats, skipping_read
 from .dag import DagCycleError, topo_sort, upstream_closure
 from .incr_agg import refresh_aggregate
 from .intervals import Interval, IntervalStore, daily_intervals, monthly_intervals
-from .merge import (
-    merge_into_snapshot,
-    merge_into_snapshot_partitions,
-    merge_upsert,
-    publish_parquet,
-)
+from .merge import merge_into_snapshot_partitions, publish_parquet
 from .runner import RunResult, WarehouseRunner
-from .scd import scd2_apply, scd2_as_of
+from .scd import scd2_apply
 from .snapshots import Snapshot, SnapshotConflictError, SnapshotTable
 
 __all__ = [
@@ -36,16 +30,10 @@ __all__ = [
     "IntervalStore",
     "daily_intervals",
     "monthly_intervals",
-    "scan_column_stats",
-    "prune_files",
-    "skipping_read",
-    "merge_upsert",
-    "merge_into_snapshot",
     "merge_into_snapshot_partitions",
     "publish_parquet",
     "refresh_aggregate",
     "scd2_apply",
-    "scd2_as_of",
     "SnapshotTable",
     "Snapshot",
     "SnapshotConflictError",

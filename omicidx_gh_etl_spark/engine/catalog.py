@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import re
 from datetime import date, datetime, timezone
-from functools import partial
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -71,143 +70,6 @@ def scan_parquet_metadata(spark: SparkSession, root: str) -> DataFrame:
     """
     files = [str(f) for f in data_files(Path(root))]
     return map_records(spark, files, _row_groups, ROWGROUP_SCHEMA)
-
-
-COLSTATS_SCHEMA = StructType(
-    [
-        StructField("file_name", StringType()),
-        StructField("row_group_id", IntegerType()),
-        StructField("column", StringType()),
-        StructField("min_num", DoubleType()),
-        StructField("max_num", DoubleType()),
-        StructField("min_str", StringType()),
-        StructField("max_str", StringType()),
-        StructField("null_count", LongType()),
-        StructField("num_rows", LongType()),
-    ]
-)
-
-
-def _stat_cells(path: str, wanted: set[str] | None):
-    md = pq.ParquetFile(path).metadata
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            cc = g.column(ci)
-            name = cc.path_in_schema
-            if wanted is not None and name not in wanted:
-                continue
-            st = cc.statistics
-            mn = mx = None
-            mns = mxs = None
-            nulls = None
-            if st is not None and st.has_min_max:
-                mn, mx = _stat_num(st.min), _stat_num(st.max)
-                if mn is None:
-                    mns, mxs = _stat_str(st.min), _stat_str(st.max)
-            if st is not None and st.has_null_count:
-                nulls = st.null_count
-            yield (path, rg, name, mn, mx, mns, mxs, nulls, g.num_rows)
-
-
-def scan_column_stats(
-    spark: SparkSession, root: str, columns: list[str] | None = None
-) -> DataFrame:
-    """Per-column min/max footer statistics, one row per
-    (file, row group, column) — the data-skipping index.
-
-    This is what table formats (Delta/Iceberg) persist as file-level
-    stats; parquet already has it in every footer, so the catalog just
-    surfaces it. Numeric/temporal minima go to ``min_num``/``max_num``
-    (temporals as epoch micros), strings to ``min_str``/``max_str``;
-    columns whose chunks carry no statistics yield a row with nulls —
-    :func:`prune_files` treats those files as always-matching
-    (skipping must be conservative, never wrong).
-
-    Same execution shape as :func:`scan_parquet_metadata`: driver lists
-    paths, executors read only footers.
-    """
-    files = [str(f) for f in data_files(Path(root))]
-    wanted = set(columns) if columns else None
-    return map_records(
-        spark, files, partial(_stat_cells, wanted=wanted), COLSTATS_SCHEMA
-    )
-
-
-def _stat_num(v) -> float | None:
-    """Numeric/temporal statistic → double (temporal = epoch micros)."""
-    from datetime import date, datetime
-
-    if isinstance(v, bool) or not isinstance(v, (int, float, datetime, date)):
-        return None
-    if isinstance(v, datetime):
-        return v.timestamp() * 1e6 if v.tzinfo else (
-            (v - datetime(1970, 1, 1)).total_seconds() * 1e6
-        )
-    if isinstance(v, date):
-        return (v - date(1970, 1, 1)).days * 86_400e6
-    return float(v)
-
-
-def _stat_str(v) -> str | None:
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-    return v if isinstance(v, str) else None
-
-
-def prune_files(
-    stats: DataFrame,
-    column: str,
-    lo=None,
-    hi=None,
-) -> list[str]:
-    """Files that MAY contain ``column`` values in ``[lo, hi]`` per the
-    footer stats — the data-skipping core. A file is pruned only when
-    EVERY row group's [min, max] provably misses the bound; missing
-    statistics keep the file (conservative). Numeric/temporal bounds
-    compare on ``min_num``/``max_num`` (pass temporals as epoch
-    micros), strings on ``min_str``/``max_str``."""
-    is_str = isinstance(lo, str) or isinstance(hi, str)
-    mn = F.col("min_str" if is_str else "min_num")
-    mx = F.col("max_str" if is_str else "max_num")
-    overlaps = F.lit(True)
-    if lo is not None:
-        overlaps = overlaps & (mx >= F.lit(lo))
-    if hi is not None:
-        overlaps = overlaps & (mn <= F.lit(hi))
-    keep = (
-        stats.filter(F.col("column") == column)
-        .filter(mn.isNull() | mx.isNull() | overlaps)
-        .select("file_name")
-        .distinct()
-    )
-    return sorted(r["file_name"] for r in keep.collect())
-
-
-def skipping_read(
-    spark: SparkSession,
-    root: str,
-    column: str,
-    lo=None,
-    hi=None,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Read only the files whose footer stats admit ``column ∈ [lo,
-    hi]``. Callers still apply the exact row filter — this prunes I/O,
-    not rows (exactly what partition pruning does for directories,
-    extended to unpartitioned files via min/max). Pass a cached
-    ``stats`` catalog to amortize footer scans across queries."""
-    if stats is None:
-        stats = scan_column_stats(spark, root, [column])
-    files = prune_files(stats, column, lo, hi)
-    if not files:
-        first = next(iter(data_files(Path(root))), None)
-        schema = spark.read.parquet(str(first)).schema if first else None
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(*files)
 
 
 def catalog_global_stats(meta: DataFrame) -> DataFrame:

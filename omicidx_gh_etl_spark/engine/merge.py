@@ -1,12 +1,14 @@
-"""Merge-upsert: apply an update batch to a parquet target,
-latest-version-wins — batch CDC without a table format.
+"""CDC apply: merge an update batch into a snapshot table,
+latest-version-wins, plus the write-new → swap parquet publication.
 
 The reference defers this exact problem downstream: re-extracted days
 re-fetch updated records and "downstream processing must deduplicate
 by accession + update timestamp"
 (/root/reference/omicidx_etl/ebi_biosample/README.md "Known Issues
-#4"). This makes the apply step a first-class operator: target ∪
-updates → arg-max per key → atomically republished.
+#4"). :func:`merge_into_snapshot_partitions` makes the apply step a
+first-class operator: the affected partitions of a
+:class:`~.snapshots.SnapshotTable` ∪ updates → arg-max per key →
+committed as a new snapshot version.
 
 Scale design:
 - The version resolution is a ``max_by(payload, version)`` AGGREGATE,
@@ -14,15 +16,13 @@ Scale design:
   partition to one candidate row per key before the single shuffle
   (the same argmax-over-window choice as ``dedup_latest_by_key`` —
   the exchange carries |keys| rows, not |rows| sorted).
-- The rewrite cost is the whole target — correct for the reference's
-  <100 GB envelope; at 100 TB the target should be date-partitioned
-  and merged per affected partition (compose with
-  ``runner``'s dynamic partition overwrite), or held in a table
-  format (Delta/Iceberg) whose MERGE INTO is this same plan plus
-  file-level pruning.
-- Publication is write-new → swap, so readers never see a half
-  merge; the swap is atomic only on a real filesystem (object-store
-  deployments should publish to a versioned path and flip a pointer).
+- Only the partitions the updates touch are read and rewritten, so
+  the cost is O(affected partitions + updates), independent of table
+  size.
+- :func:`publish_parquet` publishes a plain parquet directory by
+  write-new → swap, so readers never see a half write; the swap is
+  atomic only on a real filesystem (object-store deployments should
+  publish to a versioned path and flip a pointer).
 
 Soft deletes: a boolean ``delete_col`` on updates tombstones a key —
 if the winning version is a tombstone the key is dropped from the
@@ -38,7 +38,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import data_files, footer_rows
+from .catalog import footer_rows
 
 
 def _latest_versions(
@@ -77,31 +77,6 @@ def _null_filled(base: DataFrame, updates: DataFrame) -> DataFrame:
     return base.select(*updates.columns)
 
 
-def merge_upsert(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    delete_col: str | None = None,
-) -> int:
-    """Merge ``updates`` into the parquet directory ``target_dir``.
-
-    ``order_cols`` order versions ascending (later = wins); include a
-    unique tiebreak column for total order. Returns the merged row
-    count. Creates the target if absent.
-    """
-    target = Path(target_dir)
-    if data_files(target):
-        # pin the schema so an empty/partial target can't drift it
-        base = spark.read.schema(updates.schema).parquet(str(target))
-        combined = base.unionByName(updates)
-    else:
-        combined = updates
-    merged = _latest_versions(combined, keys, order_cols, delete_col)
-    return publish_parquet(spark, merged, target)
-
-
 def publish_parquet(spark: SparkSession, df: DataFrame, target: Path) -> int:
     """Write-new → swap publication (readers never see a half write;
     atomic on a real filesystem — see module docstring for object
@@ -122,35 +97,6 @@ def publish_parquet(spark: SparkSession, df: DataFrame, target: Path) -> int:
     return n
 
 
-def merge_into_snapshot(
-    table,
-    updates: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-    delete_col: str | None = None,
-    note: str = "",
-    meta: dict | None = None,
-):
-    """Merge ``updates`` into a :class:`~.snapshots.SnapshotTable` —
-    the same latest-version-wins plan as :func:`merge_upsert`, but the
-    result lands as a new snapshot version instead of an in-place swap.
-
-    This upgrades CDC apply from "readers see latest" to "readers pin a
-    version": a bad update batch is undone with ``table.rollback()``
-    (metadata-only) instead of recomputing, and audits can diff any two
-    versions. Returns the committed snapshot.
-    """
-    spark = updates.sparkSession
-    if table.latest_version() is not None:
-        combined = _null_filled(table.read(spark), updates).unionByName(updates)
-    else:
-        combined = updates
-    merged = _latest_versions(combined, keys, order_cols, delete_col)
-    return table.commit_overwrite(
-        merged, note=note or f"merge {len(keys)}-key upsert", meta=meta
-    )
-
-
 def merge_into_snapshot_partitions(
     table,
     updates: DataFrame,
@@ -164,10 +110,11 @@ def merge_into_snapshot_partitions(
     """Partition-scoped CDC apply: merge ``updates`` into ONLY the
     partitions they touch, commit as a ``replace_partitions`` snapshot.
 
-    The 100 TB shape `merge_upsert`'s docstring promises: the base read
-    is manifest-pruned to affected partitions (untouched partitions'
-    files are never opened, let alone rewritten), so cost is
-    O(affected partitions + updates), independent of table size.
+    The base read is manifest-pruned to affected partitions (untouched
+    partitions' files are never opened, let alone rewritten), so cost
+    is O(affected partitions + updates), independent of table size.
+    ``order_cols`` order versions ascending (later = wins); include a
+    unique tiebreak column for total order.
 
     Constraint (standard for partitioned CDC): a key's partition value
     must be stable — an update that moves a key across partitions would

@@ -12,9 +12,9 @@ Scale shape: one union + one latest-state aggregate + one window pass
 per apply — the window partitions by the business key and orders by
 effective time, so each key's history is a single partition-local
 scan regardless of total table size. Unchanged keys' histories are
-rewritten only because the target is plain parquet (see merge.py's
-partitioning note — at 100 TB, partition by key-hash bucket and apply
-per affected bucket).
+rewritten only because the target is plain parquet (at 100 TB,
+partition by key-hash bucket and apply per affected bucket, as
+``merge.merge_into_snapshot_partitions`` does per partition).
 
 Change detection is by the tracked attribute columns: an update row
 whose attributes equal the key's current version is a no-op (no new
@@ -85,12 +85,3 @@ def scd2_apply(
         *attr_cols,
     )
 
-
-def scd2_as_of(history: DataFrame, ts) -> DataFrame:
-    """The rows current at time ``ts`` (point-in-time dimension read:
-    valid_from ≤ ts < valid_to)."""
-    t = F.lit(ts)
-    return history.filter(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    )

@@ -11,7 +11,7 @@ resolves the DAG, plans intervals, and materializes.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame

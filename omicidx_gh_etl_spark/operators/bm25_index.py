@@ -6,17 +6,16 @@ The text sibling of ``operators/ann_index.py``'s persisted IVF index,
 completing the index-once/query-many lifecycle for the lexical side
 (the deployment shape of the reference's remote marts —
 /root/reference/DEPLOYMENT.md:436-507: publish an artifact once, serve
-many cheap queries from it). ``bm25_build_index`` alone pins the
-postings with ``localCheckpoint`` — gone with the session, and every
-serve scans ALL postings. This module persists them the way a real
-text engine lays out its inverted index (Lucene's per-term postings
-files, the term-sharded layouts of distributed search systems):
+many cheap queries from it). The postings are persisted the way a
+real text engine lays out its inverted index (Lucene's per-term
+postings files, the term-sharded layouts of distributed search
+systems):
 
 - **build**: one corpus scan (tokenize → postings + per-doc lengths,
   materialized once), then the postings and the document-frequency
   table are written as Hive-bucketed managed tables keyed on ``term``
-  (``sources/layout.py::write_bucketed``), pre-shuffled so each bucket
-  is one sorted file. The 1-row corpus stats (n, avgdl) — which count
+  (:func:`_write_bucketed`), pre-shuffled so each bucket is one sorted
+  file. The 1-row corpus stats (n, avgdl) — which count
   token-less documents — land in a third tiny table.
 - **serve**: the query batch's distinct terms (the workload — small by
   contract, same as the probed-cell list in ``AnnIndex.search``) are
@@ -57,7 +56,6 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.layout import write_bucketed
 from .text import bm25_score_pruned_postings, tokens_sql
 
 
@@ -109,15 +107,8 @@ class Bm25Index:
         id_col: str,
         n_buckets: int = 32,
     ) -> None:
-        """ONE corpus tokenize pass → persisted index (r11 restructure;
-        guide §2.4 "two operations keyed the same way share one
-        exchange"). The former build derived postings/dfreq/stats via
-        ``bm25_build_index(materialize=True)`` — which tokenized the
-        corpus TWICE (postings and per-doc lengths are separate
-        lineages, each ``localCheckpoint``-pinned) — and then paid a
-        second term shuffle for the bucketed layout plus dfreq's own
-        aggregate + repartition: 2 tokenize passes, a checkpoint
-        write/read of the whole postings, 5 exchanges. Now:
+        """ONE corpus tokenize pass → persisted index (guide §2.4 "two
+        operations keyed the same way share one exchange"):
 
         - the (doc, term, dl) aggregate sits ABOVE an explicit
           ``repartition(n_buckets, term)`` — hashpartitioning(term)
@@ -131,24 +122,17 @@ class Bm25Index:
           exchange-free;
         - stats come from the narrow distinct (doc_id, __dl)
           projection of the postings plus the corpus row count
-          (token-less docs count toward n with dl=0, exactly as the
-          explode_outer path counted them; integer-valued doubles sum
-          exactly in any order, so sum/count is bit-identical to the
-          former avg()).
-
-        Measured against the former two-tokenize-pass build (2M docs,
-        256 buckets, interleaved A/B): build 35.1 s → 30.6 s first pass,
-        56.2 s → 27.5 s second pass (contended window), with all three
-        table hashes and the serve output identical (tests pin serve
-        equivalence).
+          (token-less docs count toward n with dl=0; integer-valued
+          doubles sum exactly in any order, so sum/count is
+          bit-identical to an avg()).
 
         Precondition: ``id_col`` is unique. The stats are the corpus row
         count and the summed lengths of the distinct ``(doc_id, __dl)``
         postings pairs, so with unique ids (token-less docs included)
-        ``(n, avgdl)`` equal :func:`bm25_build_index`'s. Duplicate ids
-        are not supported: their postings merge into one document while
-        ``n`` still counts each row, so scores differ from the one-shot
-        path (tests/test_operators.py pins both)."""
+        ``(n, avgdl)`` are the corpus's. Duplicate ids are not
+        supported: their postings merge into one document while ``n``
+        still counts each row, so scores differ from the one-shot
+        ``bm25_batch_topk`` (tests/test_operators.py pins both)."""
         for t in (self.postings_table, self.dfreq_table, self.stats_table):
             _drop_table_and_location(self.spark, t)
         toks = tokens_sql(f"coalesce(`{text_col}`, '')")
@@ -167,7 +151,7 @@ class Bm25Index:
             .agg(F.count("*").alias("tf"))
             .select("doc_id", "term", "__dl", "tf")
         )
-        write_bucketed(
+        _write_bucketed(
             postings,  # already hash(term)-partitioned — no re-shuffle
             self.postings_table,
             ["term"],
@@ -176,11 +160,11 @@ class Bm25Index:
         )
         p = self.spark.table(self.postings_table)
         # tf ≥ 1 always; the count(tf > 0) form keeps df arithmetic
-        # identical to the one-shot operators (see bm25_build_index)
+        # identical to the one-shot operators
         dfreq = p.groupBy("term").agg(
             F.count(F.when(F.col("tf") > 0, True)).alias("df")
         )
-        write_bucketed(
+        _write_bucketed(
             dfreq,  # bucketed scan → agg → write, all term-partitioned
             self.dfreq_table,
             ["term"],
@@ -259,6 +243,30 @@ class Bm25Index:
             {t: self._df_cache[t] for t in terms},
             n_docs, avgdl, "doc_id", k=k, k1=k1, b=b,
         )
+
+
+def _write_bucketed(
+    df: DataFrame,
+    table: str,
+    bucket_cols: list[str],
+    num_buckets: int = 32,
+    sort_cols: list[str] | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """Persist ``df`` as a Hive-bucketed (and optionally sorted)
+    managed table keyed for shuffle-free joins/aggregations on
+    ``bucket_cols``; read it back with ``spark.table`` (a plain path
+    read loses the bucket metadata the catalog holds).
+
+    ``num_buckets`` should be sized so one bucket of the LARGEST
+    co-bucketed table fits an executor's memory at target scale
+    (e.g. 30B-row accessions ≈ 3 TB → ≥ 4096 buckets); all tables
+    joined together must use the same count and keys.
+    """
+    w = df.write.format("parquet").bucketBy(num_buckets, *bucket_cols)
+    if sort_cols:
+        w = w.sortBy(*sort_cols)
+    w.mode(mode).saveAsTable(table)
 
 
 def _drop_table_and_location(spark: SparkSession, table: str) -> None:

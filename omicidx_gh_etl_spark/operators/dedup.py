@@ -16,9 +16,6 @@ string ops.
 - ``connected_components``   — min-label propagation (O(diameter) rounds)
 - ``connected_components_star`` — large-star/small-star contraction
                                (O(log² n) rounds on any topology)
-- ``latest_by_key``          — window dedup (the reference's documented gap:
-                               "deduplicate by accession + update timestamp",
-                               ebi_biosample/README.md Known Issues #4)
 
 Scale design: every pairwise step goes through an inverted index
 (explode → equi-join on shingle/band hash), so the shuffle keys are
@@ -241,9 +238,9 @@ def remove_duplicate_spans(
     CHAIN of partially-overlapping spans across ≥3 documents, a region
     whose keeper copy was itself excised by an earlier-doc pair can end
     up retained nowhere; and strongly periodic text collapses toward
-    one period. Where absolute span retention matters, iterate to a
-    fixpoint or verify with :func:`duplicate_span_runs` post-pass —
-    C4/Lee-style corpus prep accepts the single pass.
+    one period. Where absolute span retention matters, verify with a
+    :func:`duplicate_span_runs` post-pass — C4/Lee-style corpus prep
+    accepts the single pass.
 
     Plan: span detection as analyzed on :func:`duplicate_span_runs`;
     per-doc removal intervals are collect_list'd — bounded only
@@ -263,15 +260,6 @@ def remove_duplicate_spans(
         max_shingle_df=max_shingle_df,
         include_within_doc=True,
     )
-    return _excise_spans(df, spans, text_col, id_col)
-
-
-def _excise_spans(
-    df: DataFrame, spans: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
-    """Apply precomputed (d2, start2, len_tokens) removal spans to the
-    corpus — split out so the fixpoint variant can detect ONCE per
-    round instead of twice (probe + rewrite)."""
     ivs = (
         spans.select(
             F.col("d2").alias(id_col),
@@ -692,58 +680,6 @@ def paragraph_chunks(
     )
 
 
-def remove_duplicate_spans_fixpoint(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 8,
-    min_len: int = 12,
-    max_shingle_df: int | None = 50,
-    max_iters: int = 5,
-) -> DataFrame:
-    """Iterated :func:`remove_duplicate_spans` until no ≥``min_len``
-    duplicated span remains (or ``max_iters``). What it DELIVERS is
-    the no-duplicates postcondition a single pass cannot promise —
-    chained overlaps that a single pass leaves behind are cleaned up
-    over rounds. What it CANNOT do is restore content: iteration only
-    excises more, so a region the first pass already dropped
-    everywhere (the chained-retention caveat on
-    :func:`remove_duplicate_spans`) stays gone. Choose it when the
-    corpus must end duplicate-free, not to improve retention.
-
-    Iterative by nature (like k-means/connected components): one span
-    detection per round (materialized small, probed with ``isEmpty``,
-    reused for the rewrite); ``localCheckpoint`` truncates lineage
-    between rounds. Rounds needed equal the longest excision chain —
-    2 covers real corpora; adversarial periodic input can exhaust the
-    cap, in which case a ``UserWarning`` reports that duplicated
-    spans remain rather than silently violating the postcondition.
-    """
-    def _detect(d: DataFrame) -> DataFrame:
-        return duplicate_span_runs(
-            positional_shingles(d, text_col, id_col, n=n),
-            id_col, n=n, min_len=min_len,
-            max_shingle_df=max_shingle_df, include_within_doc=True,
-        )
-
-    cur = df.select(F.col(id_col), F.col(text_col))
-    for _ in range(max_iters):
-        spans = _detect(cur).localCheckpoint(eager=True)
-        if spans.isEmpty():
-            return cur
-        cur = _excise_spans(cur, spans, text_col, id_col).localCheckpoint(
-            eager=True
-        )
-    if not _detect(cur).isEmpty():
-        import warnings
-
-        warnings.warn(
-            f"span excision did not converge within {max_iters} rounds; "
-            f"duplicated spans of >= {min_len} tokens remain"
-        )
-    return cur
-
-
 def lsh_pairs_from_bands(
     band_sig: DataFrame,
     id_col: str,
@@ -1102,16 +1038,3 @@ def connected_components_star(
         "node", F.coalesce("component", "node").alias("component")
     )
 
-
-def latest_by_key(
-    df: DataFrame, key_cols: list[str], order_cols: list[Column]
-) -> DataFrame:
-    """Keep the latest record per key (window dedup).
-
-    ``order_cols`` must be a total order (include a unique tiebreak).
-    Reference gap: ebi_biosample/README.md "Known Issues #4".
-    """
-    w = W.partitionBy(*key_cols).orderBy(*order_cols)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") == 1
-    ).drop("__rn")

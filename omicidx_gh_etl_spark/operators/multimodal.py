@@ -11,9 +11,9 @@ Design (what a 100 TB multimodal pipeline needs from the engine):
   smaller ``files.maxPartitionBytes`` keep batch memory bounded.
 
 The image/audio codec libraries are not in this container, so
-``decode_image`` is a clearly-marked stub; ``extract_features`` uses a
-deterministic byte-level extractor so the Spark-side plumbing (schema,
-UDF signature, batch shape) is real and oracle-testable.
+``extract_features`` uses a deterministic byte-level extractor so the
+Spark-side plumbing (schema, UDF signature, batch shape) is real and
+oracle-testable.
 """
 
 from __future__ import annotations
@@ -50,35 +50,6 @@ def attach_binary_payload(
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """Decode an image payload to pixels.
-
-    STUB: pillow/opencv are not available in this container. The
-    surrounding Spark plumbing (binary column in, feature batch out)
-    is exercised by ``extract_features``.
-    """
-    raise NotImplementedError(
-        "image decode requires pillow/opencv; not available in this environment"
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("kind", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -88,47 +59,6 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def resize_images(
-    df: DataFrame, out_w: int, out_h: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Nearest-neighbor resize of raw grayscale image buffers
-    (payload = row-major bytes, meta.width × meta.height) to
-    ``out_w`` × ``out_h``.
-
-    The raw-buffer math is REAL (numpy over Arrow batches); only the
-    codec step (PNG/JPEG → buffer, :func:`decode_image`) is stubbed in
-    this container. Expected input rows carry ``payload`` and a
-    ``meta`` struct with width/height — the shape
-    :func:`attach_binary_payload` produces for text, extended with
-    image dims by the ingest job.
-
-    Scale: pure map (mapInPandas, no shuffle); output rows are
-    fixed-size (out_w × out_h), so downstream batches are uniform
-    regardless of input image sizes — the property batch training
-    loaders need.
-    """
-    import numpy as np
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for did, payload, meta in zip(
-                pdf[id_col], pdf["payload"], pdf["meta"]
-            ):
-                w, h = int(meta["width"]), int(meta["height"])
-                img = np.frombuffer(payload, dtype=np.uint8).reshape(h, w)
-                yi = (np.arange(out_h) * h // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * w // out_w).astype(np.int64)
-                resized = img[yi][:, xi]
-                out_rows.append(
-                    (did, resized.tobytes(), {"kind": meta["kind"],
-                                              "width": out_w, "height": out_h})
-                )
-            yield pd.DataFrame(out_rows, columns=["doc_id", "payload", "meta"])
-
-    return df.mapInPandas(_resize, RESIZED_SCHEMA)
-
-
 def sample_frames(
     df: DataFrame, every_n: int, frame_bytes: int, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -136,8 +66,8 @@ def sample_frames(
     payload (payload = concatenated ``frame_bytes``-sized frames) →
     one row per sampled frame (doc_id, frame_idx, frame).
 
-    Same contract as :func:`resize_images`: buffer math real, codec
-    stubbed. Scale: map-only fan-out; a row per sampled frame keeps
+    The buffer math is real; the codec step is not in this container.
+    Scale: map-only fan-out; a row per sampled frame keeps
     frames independently shufflable/joinable downstream (e.g. to a
     per-frame embedding stage).
     """

@@ -31,7 +31,7 @@ inequality join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BIN = "__bin"

@@ -47,17 +47,6 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def _cos_sql(a: str, b: str) -> str:
-    """cosine_sim_expr as ONE SQL string over named columns. Same
-    parsed expression; a string parse is one JVM call where the Column
-    composition is ~30 py4j round trips — used on the assembly-hot
-    paths (profiled: ivf_search spent 0.6 s/plan building Columns)."""
-    return (
-        f"({_dot_sql(a, b)} / "
-        f"(sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)})))"
-    )
-
-
 def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
@@ -305,8 +294,9 @@ def _probe_inline_sql(
 
 
 def _cos_pre_sql(a: str, b: str, anorm: str, bnorm: str) -> str:
-    """``_cos_sql`` with both norms HOISTED into named columns computed
-    once per row of their own side. Inside a k-candidate cross join the
+    """:func:`cosine_sim_expr` as ONE SQL string (one JVM parse where
+    the Column composition is ~30 py4j round trips), with both norms
+    HOISTED into named columns computed once per row of their own side. Inside a k-candidate cross join the
     naive form re-evaluates ``sqrt(dot(x,x))`` per PAIR — k× per
     vector against k centroids, |matched probes|× per posting. The
     hoisted norm is the identical expression over the same doubles, so
@@ -1572,47 +1562,6 @@ def _l2_assign(
     )
 
 
-def pq_fit(
-    emb: DataFrame,
-    m: int = 2,
-    k: int = 16,
-    dims: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 5,
-) -> DataFrame:
-    """Train PQ codebooks: split vectors into ``m`` contiguous
-    subspaces, k-means each → (subspace, centroid_id, cv).
-
-    PQ completes the ANN triad (IVF partitions the corpus, LSH buckets
-    it, PQ COMPRESSES it): each vector becomes ``m`` one-byte-ish
-    codes, so a billion-vector index fits in memory where raw floats
-    cannot — the standard recipe (IVF-PQ) composes both. Training
-    reuses :func:`kmeans_fit` per subspace on sliced vectors
-    (farthest-point seeding), so each subspace's rounds follow the
-    same one-shuffle-per-iteration plan.
-    """
-    if dims is None:
-        dims = len(emb.select(_as_double(vec_col).alias("v")).first()["v"])
-    assert dims % m == 0, f"dims {dims} not divisible by m={m}"
-    sub = dims // m
-    books = []
-    for s in range(m):
-        sliced = emb.select(
-            F.col(id_col),
-            F.slice(_as_double(vec_col), s * sub + 1, sub).alias("subv"),
-        )
-        cb = kmeans_fit(
-            sliced, k=k, max_iter=max_iter, id_col=id_col, vec_col="subv",
-            init="farthest", metric="l2",
-        )
-        books.append(cb.select(F.lit(s).alias("subspace"), "centroid_id", "cv"))
-    out = books[0]
-    for b in books[1:]:
-        out = out.unionByName(b)
-    return out
-
-
 def pq_encode(
     emb: DataFrame,
     codebooks: DataFrame,
@@ -1705,96 +1654,6 @@ def pq_search(
     w = W.partitionBy(query_id_col).orderBy(
         F.asc("adc_dist"), F.asc(id_col)
     )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(query_id_col, id_col, "adc_dist", "rk")
-    )
-
-
-def ivfpq_search(
-    emb: DataFrame,
-    coarse_centroids: DataFrame,
-    codes: DataFrame,
-    codebooks: DataFrame,
-    queries: DataFrame,
-    m: int,
-    dims: int,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "q_id",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """IVF-PQ: coarse cells bound WHICH vectors are scored, PQ codes
-    bound WHAT is read per vector — the composition behind
-    billion-scale ANN indexes (e.g. the classic IVFADC layout).
-
-    Plan: vectors carry a coarse cell (one broadcast argmax pass,
-    :func:`ivf_assign`); each query picks its ``nprobe`` nearest cells
-    (tiny broadcast cross join); the ADC scoring of :func:`pq_search`
-    then runs with an extra equi-join key — (cell ∈ probed cells) —
-    so the codes table is filtered map-side to candidate cells before
-    any distance math. Raw vectors are touched only by the offline
-    assign/encode passes, never at query time.
-
-    Simplification vs the literature: codes quantize the raw vectors,
-    not the cell residuals — residual encoding needs per-cell
-    codebooks (m × k × |cells| floats) and buys precision, not a
-    different plan shape; the join/broadcast structure is identical.
-    """
-    sub = dims // m
-    cells = ivf_assign(emb, coarse_centroids, id_col=id_col).select(
-        id_col, F.col("centroid_id").alias("cell")
-    )
-    coded = codes.join(cells, id_col)
-
-    q = queries.select(
-        F.col(query_id_col), _as_double(query_vec_col).alias("qv")
-    )
-    c = coarse_centroids.select(
-        F.col("centroid_id").alias("cell"), _as_double("cv").alias("ccv")
-    )
-    cell_sim = F.round(cosine_sim_expr(F.col("qv"), F.col("ccv")), 4)
-    wq = W.partitionBy(query_id_col).orderBy(
-        F.desc("cell_sim"), F.asc("cell")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(c))
-        .select(query_id_col, "cell", cell_sim.alias("cell_sim"))
-        .withColumn("prk", F.row_number().over(wq))
-        .filter(F.col("prk") <= nprobe)
-        .select(query_id_col, "cell")
-    )
-
-    subq = q.select(
-        query_id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("subspace"),
-                    F.slice("qv", s * sub + 1, sub).alias("sq"),
-                )
-                for s in range(m)
-            ])
-        ).alias("p"),
-    ).select(query_id_col, "p.subspace", "p.sq")
-    lut = subq.join(F.broadcast(codebooks), "subspace").select(
-        query_id_col,
-        "subspace",
-        F.col("centroid_id").alias("code"),
-        F.round(sqdist_expr(F.col("sq"), F.col("cv")), 6).alias("partial"),
-    )
-    # candidate filter (query × cell) and LUT both broadcast — the big
-    # codes table is filtered and scored without shuffling until the
-    # final per-(query, vector) sum
-    scored = (
-        coded.join(F.broadcast(probed), "cell")
-        .join(F.broadcast(lut), [query_id_col, "subspace", "code"])
-        .groupBy(query_id_col, id_col)
-        .agg(F.round(F.sum("partial"), 6).alias("adc_dist"))
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.asc("adc_dist"), F.asc(id_col))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
@@ -1917,7 +1776,7 @@ def covariance_matrix(
 ) -> DataFrame:
     """Sample covariance of the embedding columns → ``(i, j, cov)``,
     1-based indices — the distributed heavy half of PCA/whitening
-    (:func:`pca_fit` eigendecomposes it on the driver).
+    (the driver eigendecomposes the dim × dim result).
 
     Plan: :func:`covariance_state` (ONE corpus pass: gemm partials in
     long form, one map-side-combined groupBy — shuffle volume
@@ -1932,7 +1791,7 @@ def covariance_matrix(
 
     ``round_to`` exists for the cross-engine oracle (float sums
     associate differently across engines); pass ``None`` for full
-    precision (what :func:`pca_fit` uses). For an INCREMENTALLY
+    precision. For an INCREMENTALLY
     maintained covariance over a growing corpus, persist
     :func:`covariance_state` and refresh per delta instead of calling
     this over the whole history.
@@ -2014,162 +1873,6 @@ def covariance_from_state(
     join assembly is avoided)."""
     st = state.groupBy("i", "j").agg(F.sum("v").alias("v"))
     return _finish_cov(st, ddof, round_to)
-
-
-def pca_fit(
-    emb: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PCA model over the embedding column → one ``component`` row per
-    principal axis (1..k: ``eigenvalue`` + unit ``loading`` vector)
-    plus the ``component = 0`` row holding the column means (NULL
-    eigenvalue) — a self-contained model table
-    (:func:`pca_transform` consumes it), mirroring how
-    :func:`kmeans_fit` ships centroids.
-
-    The corpus never leaves the cluster: ONE :func:`covariance_state`
-    pass reduces it to dim² + dim + 1 moment rows, and only that state
-    is collected — the covariance AND the means derive from it
-    driver-side (full precision; the formula is the same
-    (ΣxxT − ΣxΣxᵀ/n)/(n−1) :func:`covariance_from_state` runs), so
-    driver state and eigendecomposition cost are O(dim²)/O(dim³),
-    corpus-size-independent (dim is 64-4096 in practice; numpy eigh on
-    ≤4096² is sub-minute). Deterministic: eigh of a fixed matrix,
-    descending eigenvalue order with index tiebreak, and each
-    loading's sign is fixed so its largest-magnitude coordinate
-    (lowest index on ties) is positive — reproducible model artifacts
-    for training-data lineage.
-    """
-    import numpy as np
-
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    rows = covariance_state(emb, vec_col).collect()
-    if not rows:
-        raise ValueError("no vectors to fit")
-    markers = [r for r in rows if r["i"] == 0]
-    if len(markers) != 1:
-        raise ValueError(
-            "covariance state mixes dims "
-            f"{sorted(r['j'] for r in markers)} — ragged input"
-        )
-    dim = markers[0]["j"]
-    n = markers[0]["v"] or 0.0
-    s = np.zeros(dim)
-    ss = np.zeros((dim, dim))
-    for r in rows:
-        if r["i"] == 0:
-            continue
-        elif r["j"] == 0:
-            s[r["i"] - 1] = r["v"]
-        else:
-            ss[r["i"] - 1, r["j"] - 1] = r["v"]
-    if n < 2:
-        raise ValueError(
-            f"pca_fit needs >= 2 non-null vectors, got {int(n)}"
-        )
-    mu = s / n
-    cov = (ss - np.outer(s, s) / n) / (n - 1)
-    evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(-evals, kind="stable")[: int(k)]
-    out = [(0, None, mu.tolist())]
-    for rank, idx in enumerate(order, start=1):
-        v = evecs[:, idx]
-        pivot = int(np.argmax(np.abs(v)))
-        if v[pivot] < 0:
-            v = -v
-        out.append((rank, float(evals[idx]), v.tolist()))
-    return emb.sparkSession.createDataFrame(
-        out, "component int, eigenvalue double, loading array<double>"
-    )
-
-
-def pca_transform(
-    emb: DataFrame,
-    model: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    whiten: bool = False,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """Project embeddings onto a :func:`pca_fit` model → ``(id,
-    proj array<double>)`` (k entries, component order). ``whiten=True``
-    scales each coordinate by 1/√eigenvalue — unit-covariance output,
-    the preconditioning step retrieval/clustering pipelines run before
-    cosine/L2 so no axis dominates.
-
-    Map-only: the k×dim model is driver-materialized (same bound as
-    broadcast centroids) and closed over; each Arrow batch is one
-    BLAS gemm (X − μ) @ Vᵀ. No shuffle, no corpus collect.
-    """
-    import numpy as np
-
-    rows = model.collect()
-    mu = None
-    comps: list[tuple[int, float | None, list[float]]] = []
-    for r in rows:
-        if r["component"] == 0:
-            mu = np.asarray(r["loading"], dtype=np.float64)
-        else:
-            comps.append((r["component"], r["eigenvalue"], r["loading"]))
-    if mu is None or not comps:
-        raise ValueError("model must hold component 0 (mean) and >= 1 axis")
-    comps.sort()
-    V = np.asarray([c[2] for c in comps], dtype=np.float64)
-    if whiten:
-        scale = np.asarray(
-            [1.0 / np.sqrt(c[1]) if c[1] and c[1] > 0 else 0.0
-             for c in comps]
-        )
-        V = V * scale[:, None]
-    dim = mu.size
-    id_field = emb.schema[id_col]
-
-    def _project(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            ids = b.column(0)
-            vecs = b.column(1)
-            if isinstance(vecs, pa.ChunkedArray):
-                vecs = vecs.combine_chunks()
-            flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=False
-            )
-            if vecs.null_count or not _uniform_lengths(vecs, dim):
-                raise ValueError("null or ragged vectors in pca_transform")
-            proj = (flat.reshape(n, dim) - mu) @ V.T
-            if round_to is not None:
-                # Spark/DuckDB round() is decimal HALF_UP (away from
-                # zero), NOT np.round's banker's HALF_EVEN — emulate it
-                # like _finish_cov so the surface stays oracle-pinnable;
-                # + 0.0 normalizes IEEE -0.0 for value-hash stability.
-                p = 10.0 ** int(round_to)
-                proj = np.sign(proj) * np.floor(np.abs(proj) * p + 0.5) / p
-                proj = proj + 0.0
-            yield pa.record_batch(
-                [ids, pa.array(proj.tolist())], names=[id_col, "proj"]
-            )
-
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    return (
-        emb.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), F.col(vec_col))
-        .mapInArrow(
-            _project,
-            StructType(
-                [
-                    StructField(id_col, id_field.dataType, id_field.nullable),
-                    StructField("proj", ArrayType(DoubleType()), False),
-                ]
-            ),
-        )
-    )
 
 
 def semantic_dedup(

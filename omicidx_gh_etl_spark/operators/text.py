@@ -7,8 +7,8 @@ All JVM-side expressions (no Python in the hot path):
 - ``quality_flag``       — length/diversity quality scoring
 - ``fingerprint``        — normalization + md5 document fingerprint
                            (whitespace-collapse canonicalization)
-- ``split_segments`` / ``segment_token_windows`` — document →
-  (id, seg_idx, segment) units for segment-level corpus operators
+- ``segment_token_windows`` — document → (id, seg_idx, segment) units
+  for segment-level corpus operators
 - ``remove_boilerplate_segments`` — CCNet/RefinedWeb-style removal of
   segments duplicated across many documents (headers, footers, nav
   bars), by corpus-wide segment document-frequency
@@ -102,23 +102,6 @@ def fingerprint_expr(text_col: str | Column) -> Column:
 
 def fingerprint(df: DataFrame, text_col: str, keep: list[str]) -> DataFrame:
     return df.select(*keep, fingerprint_expr(text_col).alias("fp"))
-
-
-def split_segments(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    delimiter: str = "\n",
-) -> DataFrame:
-    """Document → (id, seg_idx, segment) rows, one per delimiter-split
-    segment (line/paragraph). Map-side posexplode; empty segments are
-    kept (their positions matter for faithful reassembly)."""
-    return df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), delimiter)).alias(
-            "seg_idx", "segment"
-        ),
-    )
 
 
 def segment_token_windows(
@@ -974,153 +957,6 @@ def rrf_fuse(
     )
 
 
-def bm25_build_index(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    materialize: bool = True,
-):
-    """Build the FULL inverted index for BM25 serving → ``(postings,
-    dfreq, stats)`` — the index-once / serve-many lifecycle, the text
-    sibling of ``operators/ann_index.py``'s IVF build.
-
-    ``postings`` is ``(id, term, tf, dl)`` over EVERY corpus term (a
-    one-shot :func:`bm25_batch_topk` semi-filters to one query batch's
-    terms; an index must cover any future query); ``dfreq`` is
-    ``(term, df)``; ``stats`` is the 1-row ``(n, avgdl)`` corpus
-    scalars — note token-less documents still count toward both
-    (``explode_outer`` keeps them through the build).
-
-    Scale shape: the build is the honest one-time corpus scan — one
-    tokenization, one uniform-key (id, term) aggregate; with
-    ``materialize=True`` the postings are localCheckpoint-pinned so
-    ``dfreq`` and every subsequent serve read the materialized form.
-    The PERSISTED form is ``operators/bm25_index.py::Bm25Index``:
-    postings/dfreq written Hive-bucketed BY TERM, serve bucket-pruned
-    to the query terms (SelectedBucketsCount pinned in
-    tests/test_plans.py; at 2M docs the build measured 47.7 s vs
-    DuckDB's ORDER-BY-term build 76.7 s, one 20-query serve 0.52 s, and
-    build + 10 serves 0.68x DuckDB's total).
-    Per-batch serve cost (:func:`bm25_serve`) is postings-of-matching-
-    terms only, however many batches run — the same amortization
-    argument as the persisted ANN index (200k vectors, 150-probe batch:
-    3.2 s served vs 239 s ad-hoc DuckDB, build untimed on both sides).
-    """
-    toks = tokens_sql(f"coalesce(`{text_col}`, '')")
-    exploded = docs.selectExpr(
-        f"`{id_col}`", f"{toks} AS __t"
-    ).selectExpr(
-        f"`{id_col}`", "size(__t) AS __dl", "__t"
-    ).select(
-        F.col(id_col), F.col("__dl"), F.explode_outer("__t").alias("term")
-    )
-    postings = (
-        exploded.filter(F.col("term").isNotNull())
-        .groupBy(id_col, "term", "__dl")
-        .agg(F.count("*").alias("tf"))
-    )
-    dls = exploded.select(F.col(id_col), F.col("__dl")).distinct()
-    if materialize:
-        postings = postings.localCheckpoint(eager=True)
-        dls = dls.localCheckpoint(eager=True)
-    # df references tf (always ≥ 1, so count(tf>0) == count(*)) ON
-    # PURPOSE: with an unreferenced tf, column pruning rewrites the
-    # postings subtree under this re-aggregation into a distinct-only
-    # aggregate, the two subtrees no longer canonicalize equal, and
-    # AQE exchange/stage reuse cannot fire — the whole postings build
-    # would execute twice in the unmaterialized plan (measured on the
-    # 2M-doc RRF shape: 9.75 s with the double build, 3.56 s with the
-    # stage reused). Same trick in bm25_batch_topk.
-    dfreq = postings.groupBy("term").agg(
-        F.count(F.when(F.col("tf") > 0, True)).alias("df")
-    )
-    stats = dls.agg(
-        F.expr("count(*) AS __n"), F.expr("avg(__dl) AS __avgdl")
-    )
-    return postings, dfreq, stats
-
-
-def bm25_serve(
-    postings: DataFrame,
-    dfreq: DataFrame,
-    stats: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    q_id_col: str = "q_id",
-    q_term_col: str = "term",
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    pre_deduped: bool = False,
-) -> DataFrame:
-    """Serve a query batch against a PREBUILT BM25 index
-    (:func:`bm25_build_index`) → ``(q_id, id, score, rk)`` top-k per
-    query — identical scores to :func:`bm25_batch_topk` over the same
-    corpus (pytest-pinned), but the corpus is never re-tokenized:
-    the timed work is index-side only.
-
-    Plan: the distinct query-term set broadcasts as a LEFT-SEMI prune
-    on the postings scan (with term-partitioned/bucketed storage this
-    becomes partition pruning — the scan touches only the query
-    terms' postings); ``dfreq`` is semi-pruned the same way before
-    ITS broadcast (never broadcast the full vocabulary); the 1-row
-    stats cross-join, the per-(q_id, doc) score aggregate and the
-    rank-k window are the same shuffle-light tail as the one-shot
-    operator. ``queries`` is the workload, small by contract; NULL
-    terms are dropped (they can never match a token).
-
-    ``pre_deduped=True`` skips only the query-TERM distinct and ships
-    the term frame un-deduplicated into the LEFT-SEMI prunes (where
-    duplicates are harmless) — for callers that already deduped the
-    workload driver-side (the persisted-index serve path, which
-    collects the term list for its bucket-pruning IN filter anyway).
-    The (q_id, term) pair frame is ALWAYS deduplicated: it inner-joins
-    the postings, so a duplicate pair would double-count that term's
-    contribution into the score sum — a correctness hazard no caller
-    contract should be trusted to prevent. The pair distinct is the
-    cheap one (workload-sized, one tiny exchange); the qterms distinct
-    is the one the serve plan's exchange count actually cares about.
-    """
-    q = queries.select(
-        F.col(q_id_col).alias("q_id"), F.col(q_term_col).alias("term")
-    ).filter(F.col("term").isNotNull()).distinct()
-    qterms = q.select("term") if pre_deduped else q.select("term").distinct()
-    p = postings.join(F.broadcast(qterms), "term", "left_semi")
-    df_ = dfreq.join(F.broadcast(qterms), "term", "left_semi")
-    contrib = (
-        p.join(F.broadcast(q), "term")
-        .join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "q_id",
-            F.col(id_col),
-            (
-                F.log(
-                    1.0
-                    + (F.col("__n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                )
-                * (F.col("tf") * (k1 + 1.0))
-                / (
-                    F.col("tf")
-                    + k1 * (1.0 - b + b * F.col("__dl") / F.col("__avgdl"))
-                )
-            ).alias("part"),
-        )
-    )
-    # Catalyst's default 2-exchange tail, NOT _rank_scored_tail (r11,
-    # measured): the single-exchange tail was a wash here (interleaved
-    # min-of-5 at 500k docs x 20 queries: 1.293 s vs 1.270 s) because
-    # the one-shot path is tokenize-scan-bound — and unlike the serve
-    # path its contrib stream is corpus-scan-sized, so repartition(q_id)
-    # would cap the aggregate's parallelism at the batch's distinct-query
-    # count and forgo the map-side partial agg + WindowGroupLimit that
-    # bound the second exchange's traffic at scale. The serve kernel
-    # keeps the 1-exchange tail: its postings are term-pruned
-    # (workload-bounded by contract), where the exchange saved is a
-    # measured win.
-    return _default_rank_tail(contrib, id_col, k)
-
-
 def bm25_score_pruned_postings(
     postings: DataFrame,
     qpairs: list[tuple],
@@ -1137,10 +973,10 @@ def bm25_score_pruned_postings(
     id, score, rk)`` — the single-job serve kernel behind
     ``operators/bm25_index.py::Bm25Index.serve``.
 
-    The general :func:`bm25_serve` broadcasts three tiny query/metadata
-    frames; in local/driver terms each broadcast of a Python-built
-    frame (a LogicalRDD) costs its own Spark job before the serve
-    action runs — ~4 jobs where the IO needs 1. A persisted-index
+    Broadcasting the query, dfreq and stats frames instead would cost
+    one Spark job per broadcast of a Python-built frame (a LogicalRDD)
+    before the serve action runs — ~4 jobs where the IO needs 1. A
+    persisted-index
     server already holds the workload (``qpairs``), the matched-term
     document frequencies (``df_by_term``) and the corpus scalars
     (``n_docs``, ``avgdl``) ON THE DRIVER, so here they fold into the
@@ -1166,12 +1002,12 @@ def bm25_score_pruned_postings(
     coverage added for the VALUES experiment.
 
     Score arithmetic is the same JVM expression tree as
-    :func:`bm25_serve` (idf/tf-norm ops in the same order, round(·,4)
-    before ranking, id tiebreak), so results are bit-identical to the
-    one-shot ``bm25_batch_topk`` — pytest-pinned via the persisted
-    index's equivalence test. Terms absent from ``df_by_term`` (or
-    with df ≤ 0) cannot match any posting and are dropped from the
-    maps.
+    :func:`bm25_batch_topk` (idf/tf-norm ops in the same order,
+    round(·,4) before ranking, id tiebreak), so results are
+    bit-identical to the one-shot operator — pytest-pinned via the
+    persisted index's equivalence test. Terms absent from
+    ``df_by_term`` (or with df ≤ 0) cannot match any posting and are
+    dropped from the maps.
     """
     qids_by_term: dict = {}
     for q_id, t in sorted(set(qpairs)):
@@ -1382,8 +1218,8 @@ def bm25_batch_topk(
             ).alias("part"),
         )
     )
-    # default 2-exchange tail, same rationale as bm25_serve above: the
-    # one-shot contrib stream is corpus-scan-sized, so the 1-exchange
-    # tail's q_id-bounded parallelism is the wrong trade here
-    # (measured a wash: 1.293 s vs 1.270 s at 500k docs x 20 queries)
+    # default 2-exchange tail: the one-shot contrib stream is
+    # corpus-scan-sized, so the 1-exchange tail's q_id-bounded
+    # parallelism is the wrong trade here (measured a wash: 1.293 s vs
+    # 1.270 s at 500k docs x 20 queries)
     return _default_rank_tail(contrib, id_col, k)

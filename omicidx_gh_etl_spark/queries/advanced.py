@@ -274,8 +274,8 @@ COV_ORACLE_SQL = """
 )
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding covariance matrix — the distributed half of
-    PCA/whitening (operators/similarity.py::covariance_matrix;
-    pca_fit eigendecomposes it driver-side, O(dim²) state). One corpus
+    PCA/whitening (operators/similarity.py::covariance_matrix; an
+    eigendecomposition of it runs driver-side, O(dim²) state). One corpus
     pass: per-task long-form moment partials — each Arrow batch is one
     BLAS gemm, partial state dim+dim² doubles — then ONE map-side-
     combined groupBy (shuffle volume O(tasks · dim²), never
@@ -1025,8 +1025,8 @@ _Z_SCALE1 = (
 )
 def layout_zorder_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering value per event over
-    (user_id, day): the multi-dimensional sort key behind
-    sources/layout.py::zorder_write. Sorting files by zval gives BOTH
+    (user_id, day): one sort key for two-column clustering. Sorting
+    files by zval gives BOTH
     columns tight per-file min/max ranges, so predicates on either
     prune parquet row groups — the data-layout lever at 100 TB, where
     a scan-everything query is the thing you must never do.

@@ -523,8 +523,7 @@ def dedup_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries ~|keys| rows instead of every event, and the map-side sort
     (struct buffers plan as SortAggregate) keys on user_id alone, not
     the window's (user_id, ts, event_id) — ~1.7× faster at sf0.1 with
-    identical output. The generic window form lives in
-    ``operators.dedup.latest_by_key``.
+    identical output.
     """
     ev = load_events(spark, sf_dir)
     best = ev.groupBy("user_id").agg(

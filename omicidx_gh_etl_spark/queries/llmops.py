@@ -425,8 +425,8 @@ def text_remove_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     document is reassembled from its surviving segments in order. The
     synthetic corpus has no line structure, so segmentation is fixed
     10-token pseudo-paragraphs (``segment_token_windows``); real
-    corpora pass newline/sentence splits (``split_segments``) into the
-    same operator. 3 shuffles, all on uniform md5/doc keys — the plan
+    corpora pass newline/sentence splits (a ``posexplode`` of
+    ``split``) into the same operator. 3 shuffles, all on uniform md5/doc keys — the plan
     that survives 100 TB (see remove_boilerplate_segments)."""
     d = load_spread(spark, sf_dir, "documents", "doc_id")
     seg = text.segment_token_windows(d, "text", "doc_id", window=10)
@@ -1778,13 +1778,9 @@ def similarity_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     subspaces × 16 dims), so encode (rounded-L2 argmin, id tiebreak)
     and ADC search (broadcast LUT join + partial-sum top-5) are pure
     deterministic arithmetic the SQL oracle replays — the IVF family's
-    frozen-seed pattern applied to PQ. The ITERATIVE codebook training
-    (pq_fit — per-subspace k-means) stays property-pinned in pytest
-    (tests/test_operators.py): freezing moves the query into the
-    strict oracle gate without weakening what the operator library
-    supports. Plan unchanged from the trained-codebook form: codes
-    table joins a broadcast LUT map-side; raw vectors never move at
-    search time."""
+    frozen-seed pattern applied to PQ, which keeps the query in the
+    strict oracle gate. Plan: the codes table joins a broadcast LUT
+    map-side; raw vectors never move at search time."""
     e = load_spread(spark, sf_dir, "embeddings", "vec_id").filter(
         F.col("embedding").isNotNull()
     )

@@ -391,7 +391,7 @@ def scd2_user_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from one per-key window pass. The reference keeps latest-state
     only and defers update handling (ebi_biosample/README.md "Known
     Issues #4") — this is the versioned answer, and "state on date D"
-    becomes an as-of filter (scd2_as_of, pytest-pinned).
+    becomes an as-of filter (valid_from ≤ D < valid_to).
 
     Scale: one (key, ts) aggregate + one key-partitioned window — each
     key's history is partition-local regardless of table size."""

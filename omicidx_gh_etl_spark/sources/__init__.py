@@ -1,14 +1,5 @@
-from .archive_extract import (
-    archive_member_lines,
-    read_archive_csv,
-    read_archive_jsonl,
-)
-from .ncbi_extract import (
-    extract_bioprojects,
-    extract_biosamples,
-    extract_pubmed,
-    parse_xml_strings,
-)
+from .archive_extract import archive_member_lines, read_archive_jsonl
+from .ncbi_extract import extract_records, parse_xml_strings
 from .readers import read_csv
 from .rest_source import RestPagesDataSource
 from .writers import write_ndjson, write_parquet
@@ -20,9 +11,6 @@ __all__ = [
     "RestPagesDataSource",
     "archive_member_lines",
     "read_archive_jsonl",
-    "read_archive_csv",
-    "extract_biosamples",
-    "extract_bioprojects",
-    "extract_pubmed",
+    "extract_records",
     "parse_xml_strings",
 ]

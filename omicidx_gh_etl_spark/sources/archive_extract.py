@@ -13,7 +13,7 @@ at most ``readers.BATCH_ROWS`` lines — no temp extraction, no driver
 bottleneck, one task per archive, and an archive that decompresses to
 tens of GB is never held whole. The Python surface is deliberately
 just "decompress + iterate lines"; turning lines into typed columns
-happens declaratively (``from_json`` / ``from_csv``) so the parse
+happens declaratively (``from_json``) so the parse
 itself runs JVM-side in whole-stage codegen and Catalyst can prune
 columns.
 
@@ -101,21 +101,3 @@ def read_archive_jsonl(
     )
     return parsed.select("archive", "member", "r.*")
 
-
-def read_archive_csv(
-    spark: SparkSession,
-    paths: list[str] | str,
-    schema: str,
-    member_suffix: str = ".csv",
-    header: bool = True,
-) -> DataFrame:
-    """Typed records from csv members (the OpenCitations shape: a zip
-    whose one member is a headered csv, icite.py:67-75). ``from_csv``
-    parses JVM-side; the header line is dropped by position."""
-    lines = archive_member_lines(spark, paths, member_suffix)
-    if header:
-        lines = lines.filter(F.col("line_no") > 0)
-    parsed = lines.filter(F.length("line") > 0).select(
-        "archive", "member", F.from_csv("line", schema).alias("r")
-    )
-    return parsed.select("archive", "member", "r.*")

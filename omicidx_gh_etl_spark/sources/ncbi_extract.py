@@ -355,14 +355,3 @@ def parse_xml_strings(df: DataFrame, xml_col: str, kind: str) -> DataFrame:
         _KINDS[kind][2],
     )
 
-
-def extract_biosamples(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    return extract_records(spark, "biosample", paths)
-
-
-def extract_bioprojects(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    return extract_records(spark, "bioproject", paths)
-
-
-def extract_pubmed(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    return extract_records(spark, "pubmed", paths)

@@ -29,8 +29,7 @@ Constraint (standard partitioned-CDC, see merge.py): re-delivering a
 while the vector stays in the same cell; a cross-cell move would leave
 the old posting in its unread partition. Vector ingestion is
 append-mostly so this is the right default; true updates that may move
-cells should delete-then-insert or use the whole-table
-``merge_into_snapshot``.
+cells should delete-then-insert.
 
 Scale: per batch the work is O(batch + touched cells). Centroid drift
 is handled the way IVF systems handle it — a periodic offline

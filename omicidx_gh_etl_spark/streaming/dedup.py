@@ -12,8 +12,8 @@ Scale: state is one entry per key seen within the watermark horizon,
 partitioned by key across executors — unbounded streams run forever in
 bounded memory, which plain ``dropDuplicates`` (state = every key
 ever) does not. The dedup window is the watermark delay: duplicates
-farther apart than that are the batch layer's job
-(``operators.dedup.latest_by_key`` over the materialized table).
+farther apart than that are the batch layer's job (the argmax of
+the ``dedup_latest_by_key`` query over the materialized table).
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .source import events_stream
 

@@ -7,7 +7,7 @@ exploits for counters): each micro-batch of embedding rows reduces to a
 dim²+dim+1-row moment state — fixed-size REGARDLESS of batch size — and
 states combine by plain addition, so the driver-side merge state is
 bounded by the embedding dimension, never by the stream. A PCA/
-whitening model (``pca_fit``-style eigh over the merged state) can be
+whitening model (an eigh over the merged state) can be
 re-derived after any batch without ever rescanning history — the
 streaming analog of the O(delta) batch refresh
 (``covariance_from_state``).

@@ -8,7 +8,6 @@ import zipfile
 
 from omicidx_gh_etl_spark.sources.archive_extract import (
     archive_member_lines,
-    read_archive_csv,
     read_archive_jsonl,
 )
 
@@ -53,11 +52,14 @@ def test_zip_csv_member(spark, tmp_path):
             "citing,referenced\n11,22\n11,33\n44,22\n",
         )
         zf.writestr("notes.md", "not a csv\n")
-    df = read_archive_csv(
-        spark, str(tmp_path), "citing BIGINT, referenced BIGINT"
-    )
-    got = {(r["citing"], r["referenced"]) for r in df.collect()}
-    assert got == {(11, 22), (11, 33), (44, 22)}
+    lines = archive_member_lines(spark, str(tmp_path), member_suffix=".csv")
+    got = {(r["member"], r["line_no"], r["line"]) for r in lines.collect()}
+    assert got == {
+        ("open_citation_collection.csv", 0, "citing,referenced"),
+        ("open_citation_collection.csv", 1, "11,22"),
+        ("open_citation_collection.csv", 2, "11,33"),
+        ("open_citation_collection.csv", 3, "44,22"),
+    }
 
 
 def test_mixed_archives_and_empty(spark, tmp_path):

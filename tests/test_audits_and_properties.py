@@ -112,31 +112,6 @@ def test_shingle_count_property(spark, toks):
     assert got == want
 
 
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    rows=st.lists(
-        st.tuples(st.integers(0, 3), st.integers(0, 100)), min_size=1, max_size=15
-    )
-)
-def test_latest_by_key_property(spark, rows):
-    """latest_by_key picks exactly the max order-key row per key and is
-    idempotent."""
-    df = spark.createDataFrame(
-        [(k, v, i) for i, (k, v) in enumerate(rows)], "k int, v int, uid int"
-    )
-    out = dedup.latest_by_key(df, ["k"], [F.desc("v"), F.desc("uid")])
-    got = {(r["k"], r["v"], r["uid"]) for r in out.collect()}
-    want = {}
-    for i, (k, v) in enumerate(rows):
-        if k not in want or (v, i) > (want[k][1], want[k][2]):
-            want[k] = (k, v, i)
-    assert got == set(want.values())
-    # idempotent
-    again = dedup.latest_by_key(out, ["k"], [F.desc("v"), F.desc("uid")])
-    assert {(r["k"], r["v"], r["uid"]) for r in again.collect()} == got
-
-
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(texts=st.lists(st.text(alphabet="xy ", min_size=0, max_size=20),

@@ -418,143 +418,12 @@ def test_remote_views_db_roundtrip(spark, tmp_path):
         con.close()
 
 
-def test_column_stats_and_file_skipping(spark, tmp_path):
-    """Footer min/max catalog prunes files a range predicate cannot
-    touch, and the pruned read returns exactly the full-scan answer —
-    the data-skipping contract (conservative, never wrong)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from omicidx_gh_etl_spark.engine.catalog import (
-        prune_files,
-        scan_column_stats,
-        skipping_read,
-    )
-
-    root = tmp_path / "ds"
-    root.mkdir()
-    # 5 files, disjoint id ranges [0,99], [100,199], ... + a name column
-    for i in range(5):
-        ids = list(range(i * 100, i * 100 + 100))
-        pq.write_table(
-            pa.table(
-                {
-                    "id": pa.array(ids, pa.int64()),
-                    "name": pa.array([f"n{v:05d}" for v in ids]),
-                }
-            ),
-            str(root / f"part-{i}.parquet"),
-        )
-
-    stats = scan_column_stats(spark, str(root))
-    by_file = {
-        r["file_name"].rsplit("/", 1)[-1]: (r["min_num"], r["max_num"])
-        for r in stats.filter(F.col("column") == "id").collect()
-    }
-    assert by_file["part-0.parquet"] == (0.0, 99.0)
-    assert by_file["part-4.parquet"] == (400.0, 499.0)
-
-    # numeric range hitting files 1 and 2 only
-    kept = prune_files(stats, "id", lo=150, hi=250)
-    assert [f.rsplit("/", 1)[-1] for f in kept] == [
-        "part-1.parquet", "part-2.parquet",
-    ]
-    pruned = skipping_read(spark, str(root), "id", 150, 250, stats=stats)
-    assert len(pruned.inputFiles()) == 2
-    full = spark.read.parquet(str(root))
-    want = full.filter(F.col("id").between(150, 250))
-    got = pruned.filter(F.col("id").between(150, 250))
-    assert sorted(r["id"] for r in got.collect()) == sorted(
-        r["id"] for r in want.collect()
-    )
-
-    # string bounds prune on min_str/max_str
-    kept_s = prune_files(stats, "name", lo="n00350", hi="n00420")
-    assert [f.rsplit("/", 1)[-1] for f in kept_s] == [
-        "part-3.parquet", "part-4.parquet",
-    ]
-
-    # out-of-range → everything pruned, empty (schema-stable) read
-    assert prune_files(stats, "id", lo=10_000) == []
-    assert skipping_read(spark, str(root), "id", 10_000, stats=stats).count() == 0
-
-
-def test_merge_upsert_cdc_semantics(spark, tmp_path):
-    """Latest-version-wins upsert with tombstones, stale-update
-    no-ops, inserts, and idempotent re-apply."""
-    from omicidx_gh_etl_spark.engine.merge import merge_upsert
-
-    target = str(tmp_path / "tbl")
-    schema = "k long, v string, version long, deleted boolean"
-    base = spark.createDataFrame(
-        [(1, "a0", 0, False), (2, "b0", 0, False), (3, "c0", 0, False)], schema
-    )
-    n = merge_upsert(spark, target, base, ["k"], ["version"], "deleted")
-    assert n == 3
-
-    updates = spark.createDataFrame(
-        [
-            (1, "a1", 1, False),   # newer version wins
-            (2, "b-stale", -1, False),  # older version loses
-            (3, "c1", 1, True),    # tombstone deletes the key
-            (4, "d0", 0, False),   # brand-new key inserts
-        ],
-        schema,
-    )
-    merge_upsert(spark, target, updates, ["k"], ["version"], "deleted")
-    got = {r["k"]: (r["v"], r["version"]) for r in spark.read.parquet(target).collect()}
-    assert got == {1: ("a1", 1), 2: ("b0", 0), 4: ("d0", 0)}
-    assert "deleted" not in spark.read.parquet(target).columns
-
-    # re-applying the same batch is a no-op (idempotent apply)...
-    # except tombstoned key 3 re-inserts? No: its winner is still the
-    # tombstone, so it stays deleted.
-    before = got
-    # the target no longer carries version/deleted; re-merge needs the
-    # full update schema — rebuild target rows at their current version
-    merge_upsert(
-        spark,
-        target + "2",
-        spark.createDataFrame(
-            [(k, v, ver, False) for k, (v, ver) in before.items()], schema
-        ),
-        ["k"], ["version"], "deleted",
-    )
-    again = {r["k"]: (r["v"], r["version"]) for r in spark.read.parquet(target + "2").collect()}
-    assert again == before
-
-
-def test_merge_upsert_chains_onto_merged_target(spark, tmp_path):
-    """A merged target (tombstone column dropped) accepts further
-    merges: the pinned-schema read nulls the absent delete column and
-    treats it as not-deleted."""
-    from omicidx_gh_etl_spark.engine.merge import merge_upsert
-
-    target = str(tmp_path / "tbl")
-    schema = "k long, v string, version long, deleted boolean"
-    merge_upsert(
-        spark,
-        target,
-        spark.createDataFrame([(1, "a0", 0, False)], schema),
-        ["k"], ["version"], "deleted",
-    )
-    merge_upsert(
-        spark,
-        target,
-        spark.createDataFrame([(1, "a1", 1, False), (2, "b0", 0, False)], schema),
-        ["k"], ["version"], "deleted",
-    )
-    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    assert got == {1: "a1", 2: "b0"}
-
-
 def test_scd2_apply_versions_and_as_of(spark):
     """SCD2 lifecycle: init → update (closes old version) → no-op
     redelivery (minted nothing) → late splice; point-in-time reads."""
     from pyspark.sql import functions as F
 
-    from omicidx_gh_etl_spark.engine.scd import scd2_apply, scd2_as_of
+    from omicidx_gh_etl_spark.engine.scd import scd2_apply
 
     upd = spark.createDataFrame(
         [("A", 100, "active"), ("B", 100, "active")],
@@ -590,11 +459,15 @@ def test_scd2_apply_versions_and_as_of(spark):
         (100, 150, "active"), (150, 200, "review"), (200, None, "suppressed"),
     ]
 
-    # point-in-time reads
-    at_150 = {r["acc"]: r["status"] for r in scd2_as_of(h3, 175).collect()}
-    assert at_150 == {"A": "review", "B": "active"}
-    now = {r["acc"]: r["status"] for r in scd2_as_of(h3, 10_000).collect()}
-    assert now == {"A": "suppressed", "B": "active"}
+    # point-in-time reads: valid_from <= ts < valid_to
+    def as_of(ts):
+        current = (F.col("valid_from") <= ts) & (
+            F.col("valid_to").isNull() | (F.col("valid_to") > ts)
+        )
+        return {r["acc"]: r["status"] for r in h3.filter(current).collect()}
+
+    assert as_of(175) == {"A": "review", "B": "active"}
+    assert as_of(10_000) == {"A": "suppressed", "B": "active"}
 
 
 def test_incremental_aggregate_refresh_equals_full_recompute(spark, tmp_path):

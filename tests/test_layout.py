@@ -1,4 +1,4 @@
-"""Tests: bucketed-table shuffle elimination and small-file compaction."""
+"""Tests: bucketed-table shuffle elimination."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from omicidx_gh_etl_spark.sources.layout import compact, read_bucketed, write_bucketed
+from omicidx_gh_etl_spark.operators.bm25_index import _write_bucketed
 
 
 def _explain(df) -> str:
@@ -29,16 +29,16 @@ def test_bucketed_join_plans_no_exchange(spark, tmp_path):
         F.col("id").alias("k"), F.concat(F.lit("n"), F.col("id")).alias("name")
     )
     try:
-        write_bucketed(fact, ta, ["k"], num_buckets=8, sort_cols=["k"])
-        write_bucketed(dim, tb, ["k"], num_buckets=8, sort_cols=["k"])
+        _write_bucketed(fact, ta, ["k"], num_buckets=8, sort_cols=["k"])
+        _write_bucketed(dim, tb, ["k"], num_buckets=8, sort_cols=["k"])
         # disable broadcast so the join would otherwise shuffle both sides
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = read_bucketed(spark, ta).join(read_bucketed(spark, tb), "k")
+        joined = spark.table(ta).join(spark.table(tb), "k")
         plan = _explain(joined)
         assert "Exchange" not in plan, plan
         assert joined.count() == 10_000
         # groupBy on the bucket key is also exchange-free
-        agg = read_bucketed(spark, ta).groupBy("k").agg(F.sum("v").alias("s"))
+        agg = spark.table(ta).groupBy("k").agg(F.sum("v").alias("s"))
         assert "Exchange" not in _explain(agg)
         assert agg.count() == 500
     finally:
@@ -46,95 +46,3 @@ def test_bucketed_join_plans_no_exchange(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {ta}")
         spark.sql(f"DROP TABLE IF EXISTS {tb}")
 
-
-def test_compact_merges_small_files(spark, tmp_path):
-    src = str(tmp_path / "small")
-    dest = str(tmp_path / "compacted")
-    spark.range(0, 50_000).select(
-        F.col("id"), F.md5(F.col("id").cast("string")).alias("payload")
-    ).repartition(64).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/*.parquet")) == 64
-    compact(spark, src, dest, target_file_mb=512)
-    out_files = glob.glob(f"{dest}/*.parquet")
-    assert len(out_files) == 1  # ~3MB of data → one 512MB-target file
-    assert spark.read.parquet(dest).count() == 50_000
-
-
-def test_zorder_write_clusters_both_columns(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from omicidx_gh_etl_spark.sources.layout import zorder_write
-
-    n = 40_000
-    df = spark.range(n).select(
-        ((F.col("id") * 48271) % 65536).alias("x"),   # two decorrelated
-        ((F.col("id") * 69621) % 65536).alias("y"),   # uniform columns
-    )
-    dest = str(tmp_path / "zordered")
-    zorder_write(df, dest, ["x", "y"], num_files=8)
-
-    files = glob.glob(f"{dest}/*.parquet")
-    assert len(files) > 3  # range-partitioned output
-
-    def spans(path):
-        s = spark.read.parquet(path).agg(
-            F.min("x"), F.max("x"), F.min("y"), F.max("y")
-        ).collect()[0]
-        return (s[1] - s[0]) / 65536.0, (s[3] - s[2]) / 65536.0
-
-    areas = []
-    for f in files:
-        sx, sy = spans(f)
-        areas.append(sx * sy)
-    # z-clustering: each file covers a small rectangle of the (x, y)
-    # domain, so min/max skipping prunes on EITHER column. A
-    # single-column sort would give area ≈ 1/n_files × 1 full y-span.
-    assert sum(areas) / len(areas) < 0.35
-    # and no data was lost or duplicated
-    assert spark.read.parquet(dest).count() == n
-
-
-def test_sorted_write_disjoint_ranges_enable_skipping(spark, tmp_path):
-    """sorted_write + footer-stats catalog end to end: files carry
-    pairwise-disjoint [min,max] ranges on the cluster column, so a
-    narrow range predicate prunes to O(1) files and the pruned read
-    equals the full-scan answer."""
-    from omicidx_gh_etl_spark.engine.catalog import (
-        prune_files,
-        scan_column_stats,
-        skipping_read,
-    )
-    from omicidx_gh_etl_spark.sources.layout import sorted_write
-
-    n, n_files = 10_000, 8
-    df = spark.range(n).select(
-        (F.col("id") * 7919 % n).alias("k"), F.col("id").alias("payload")
-    )
-    dest = str(tmp_path / "sorted")
-    sorted_write(df, dest, "k", n_files)
-
-    stats = scan_column_stats(spark, dest, ["k"])
-    ranges = sorted(
-        (r["min_num"], r["max_num"])
-        for r in stats.groupBy("file_name")
-        .agg(F.min("min_num").alias("min_num"), F.max("max_num").alias("max_num"))
-        .collect()
-    )
-    assert len(ranges) == n_files
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi < lo  # pairwise disjoint — the skipping precondition
-
-    lo, hi = 4000, 4100
-    kept = prune_files(stats, "k", lo, hi)
-    assert 1 <= len(kept) <= 2  # narrow range → O(1) of the 8 files
-    got = skipping_read(spark, dest, "k", lo, hi, stats=stats).filter(
-        F.col("k").between(lo, hi)
-    )
-    want = spark.read.parquet(dest).filter(F.col("k").between(lo, hi))
-    assert sorted(r["payload"] for r in got.collect()) == sorted(
-        r["payload"] for r in want.collect()
-    )

@@ -4,11 +4,7 @@ the distributed mapInPandas extractors."""
 
 import gzip
 
-from omicidx_gh_etl_spark.sources.ncbi_extract import (
-    extract_bioprojects,
-    extract_biosamples,
-    extract_pubmed,
-)
+from omicidx_gh_etl_spark.sources.ncbi_extract import extract_records
 
 _BIOSAMPLE_XML = """<?xml version="1.0"?>
 <BioSampleSet>
@@ -131,7 +127,7 @@ def test_extract_biosamples_golden(spark, tmp_path):
     (tmp_path / "biosample_set.xml").write_text(_BIOSAMPLE_XML)
     rows = {
         r["accession"]: r
-        for r in extract_biosamples(spark, str(tmp_path)).collect()
+        for r in extract_records(spark, "biosample", str(tmp_path)).collect()
     }
     assert set(rows) == {"SAMN01234", "SAMN01235"}
     r = rows["SAMN01234"]
@@ -157,7 +153,7 @@ def test_extract_bioprojects_golden(spark, tmp_path):
         fh.write(_BIOPROJECT_XML)
     rows = {
         r["accession"]: r
-        for r in extract_bioprojects(spark, str(tmp_path)).collect()
+        for r in extract_records(spark, "bioproject", str(tmp_path)).collect()
     }
     assert set(rows) == {"PRJNA43", "PRJNA44"}  # one row per package
     r = rows["PRJNA43"]
@@ -173,7 +169,7 @@ def test_extract_bioprojects_golden(spark, tmp_path):
 
 def test_extract_pubmed_golden(spark, tmp_path):
     (tmp_path / "pubmed24n0001.xml").write_text(_PUBMED_XML)
-    rows = extract_pubmed(spark, str(tmp_path)).collect()
+    rows = extract_records(spark, "pubmed", str(tmp_path)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["pmid"] == "31452104"
@@ -194,6 +190,6 @@ def test_extract_pubmed_golden(spark, tmp_path):
 
 
 def test_extract_empty_dir(spark, tmp_path):
-    assert extract_biosamples(spark, str(tmp_path)).count() == 0
-    assert extract_bioprojects(spark, str(tmp_path)).count() == 0
-    assert extract_pubmed(spark, str(tmp_path)).count() == 0
+    assert extract_records(spark, "biosample", str(tmp_path)).count() == 0
+    assert extract_records(spark, "bioproject", str(tmp_path)).count() == 0
+    assert extract_records(spark, "pubmed", str(tmp_path)).count() == 0

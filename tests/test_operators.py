@@ -79,15 +79,6 @@ def test_simhash_identical_docs_equal(spark):
     assert 0 <= out[1] < 2**16
 
 
-def test_latest_by_key(spark):
-    df = spark.createDataFrame(
-        [(1, 10, "old"), (1, 20, "new"), (2, 5, "only")],
-        "k long, v long, tag string",
-    )
-    out = dedup.latest_by_key(df, ["k"], [F.desc("v")]).collect()
-    assert {(r["k"], r["tag"]) for r in out} == {(1, "new"), (2, "only")}
-
-
 def test_cosine_topk_orthonormal(spark):
     emb = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.7071, 0.7071])],
@@ -129,13 +120,6 @@ def test_multimodal_feature_batch(spark):
     out = {r["doc_id"]: (r["n_bytes"], r["first_byte"], r["last_byte"])
            for r in multimodal.extract_features(wrapped).collect()}
     assert out == {1: (3, ord("a"), ord("c")), 2: (4, ord("x"), ord("!"))}
-
-
-def test_decode_image_is_stubbed():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x89PNG")
 
 
 # -- skew ---------------------------------------------------------------------
@@ -385,27 +369,7 @@ def test_range_join_left_keeps_unmatched_points(spark):
     assert by_pid[2]["iid"] is None
 
 
-# -- multimodal resize / frame sampling ---------------------------------------
-
-
-def test_resize_images_nearest_neighbor(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from omicidx_gh_etl_spark.operators import multimodal
-
-    # 4x4 gradient "image" downsampled to 2x2 picks rows/cols 0 and 2
-    img = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    df = spark.createDataFrame(
-        [(1, bytearray(img.tobytes()), ("image/raw", 4, 4))],
-        "doc_id long, payload binary, meta struct<kind:string,width:int,height:int>",
-    )
-    out = multimodal.resize_images(df, out_w=2, out_h=2).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["meta"]["width"] == 2 and r["meta"]["height"] == 2
-    got = np.frombuffer(bytes(r["payload"]), dtype=np.uint8).reshape(2, 2)
-    assert got.tolist() == [[0, 2], [8, 10]]
+# -- multimodal frame sampling -----------------------------------------------
 
 
 def test_sample_frames_every_nth(spark):
@@ -508,8 +472,10 @@ def test_remove_boilerplate_segments_newline_corpus(spark):
         (3, f"third story entirely\n{footer}\nPage 7 of 9"),
         (4, "standalone document no footer"),
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    seg = T.split_segments(df, "text", "doc_id", delimiter="\n")
+    seg = spark.createDataFrame(
+        [(d, i, s) for d, t in docs for i, s in enumerate(t.split("\n"))],
+        "doc_id long, seg_idx int, segment string",
+    )
     out = {r["doc_id"]: r for r in
            T.remove_boilerplate_segments(seg, "doc_id", min_docs=3).collect()}
     # footer recurs in 3 docs -> removed; page lines digit-fold to the
@@ -725,10 +691,10 @@ def test_chunk_text_udtf_overlap_and_edges(spark):
 
 
 def test_pq_fit_encode_search_recovers_neighbors(spark):
-    """PQ pipeline end to end on 3 well-separated 4-d clusters:
-    codebooks quantize each 2-d subspace, codes are in-range and
-    deterministic, and ADC top-1 retrieves a member of the query's own
-    cluster without touching raw vectors."""
+    """PQ pipeline end to end on 3 well-separated 4-d clusters with a
+    frozen codebook (as ``similarity_pq_search`` builds it): codes are
+    in-range and deterministic, and ADC top-1 retrieves a member of the
+    query's own cluster without touching raw vectors."""
     from omicidx_gh_etl_spark.operators import similarity
 
     rows = []
@@ -739,10 +705,12 @@ def test_pq_fit_encode_search_recovers_neighbors(spark):
         rows.append((200 + i, [e, 1.0, e, 1.0]))    # cluster C
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    books = similarity.pq_fit(emb, m=2, k=4, dims=4, max_iter=3)
-    got_books = books.collect()
-    assert {r["subspace"] for r in got_books} == {0, 1}
-    assert all(len(r["cv"]) == 2 for r in got_books)
+    # each subspace's 4 centroids are its slices of 4 seed vectors
+    seeds = [dict(rows)[vid] for vid in (0, 100, 200, 3)]
+    books = spark.createDataFrame(
+        [(s, c, v[2 * s:2 * s + 2]) for s in range(2) for c, v in enumerate(seeds)],
+        "subspace int, centroid_id int, cv array<double>",
+    )
 
     codes = similarity.pq_encode(emb, books, m=2, dims=4)
     c_rows = codes.collect()
@@ -766,41 +734,6 @@ def test_pq_fit_encode_search_recovers_neighbors(spark):
     assert top1[0] < 100            # cluster A member
     assert 100 <= top1[1] < 200     # cluster B member
     assert top1[2] >= 200           # cluster C member
-
-
-def test_ivfpq_search_probes_cells_then_adc(spark):
-    """IVF-PQ composition: probing only the query's nearest coarse
-    cell(s) still retrieves the right cluster's member via ADC, and
-    vectors in unprobed cells never appear."""
-    from omicidx_gh_etl_spark.operators import similarity
-
-    rows = []
-    for i in range(12):
-        e = 0.01 * (i % 4)
-        rows.append((i, [1.0, e, 0.0, e]))
-        rows.append((100 + i, [0.0, e, 1.0, e]))
-        rows.append((200 + i, [e, 1.0, e, 1.0]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    coarse = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 0.0]),
-         (2, [0.0, 1.0, 0.0, 1.0])],
-        "centroid_id int, cv array<double>",
-    )
-    books = similarity.pq_fit(emb, m=2, k=4, dims=4, max_iter=3)
-    codes = similarity.pq_encode(emb, books, m=2, dims=4)
-    queries = spark.createDataFrame(
-        [(0, [0.98, 0.0, 0.02, 0.0]), (1, [0.0, 0.96, 0.0, 1.0])],
-        "q_id long, qv array<double>",
-    )
-    out = similarity.ivfpq_search(
-        emb, coarse, codes, books, queries, m=2, dims=4, k=3, nprobe=1
-    ).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["q_id"], []).append(r["vec_id"])
-    # nprobe=1 → only the home cell's vectors are candidates
-    assert all(v < 100 for v in by_q[0]) and len(by_q[0]) == 3
-    assert all(v >= 200 for v in by_q[1]) and len(by_q[1]) == 3
 
 
 # --------------------------------------------------------------------------
@@ -1344,34 +1277,6 @@ def test_remove_duplicate_spans_within_document(spark):
         df, "text", "doc_id", n=8, min_len=12).collect()}
     assert out[1] == run + " middle bit"
     assert out[2] == "unrelated other words here"
-
-
-def test_remove_duplicate_spans_fixpoint_no_spans_remain(spark):
-    """The fixpoint variant's postcondition: after convergence NO
-    >=min_len duplicated span exists anywhere in the corpus — including
-    the chained-overlap shapes a single pass can leave behind."""
-    from omicidx_gh_etl_spark.operators import dedup
-
-    x = [f"x{i}" for i in range(20)]
-    y = [f"y{i}" for i in range(12)]
-    rows = [
-        (1, " ".join(x)),
-        (2, " ".join(x[8:] + y)),                    # overlaps doc 1 then new
-        (3, " ".join(x[16:] + y[:8] + ["f1", "f2", "f3", "f4"])),
-        (4, "independent filler words only here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = dedup.remove_duplicate_spans_fixpoint(
-        df, "text", "doc_id", n=8, min_len=12
-    )
-    remaining = dedup.duplicate_span_runs(
-        dedup.positional_shingles(out, "text", "doc_id", n=8),
-        "doc_id", n=8, min_len=12, include_within_doc=True,
-    )
-    assert remaining.isEmpty()
-    kept = {r["doc_id"]: r["text"] for r in out.collect()}
-    assert kept[1] == " ".join(x)         # first doc always intact
-    assert kept[4] == "independent filler words only here"
 
 
 def test_knn_label_vote_string_labels_tiebreak(spark):
@@ -2279,14 +2184,6 @@ def test_covariance_single_scan_and_bad_input_raises(spark):
     with _pytest.raises(Exception, match="NULL elements"):
         covariance_matrix(holey, "embedding").collect()
 
-    single = spark.createDataFrame(
-        [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
-    )
-    from omicidx_gh_etl_spark.operators.similarity import pca_fit
-
-    with _pytest.raises(ValueError, match=">= 2 non-null"):
-        pca_fit(single, k=1)
-
 
 def test_covariance_state_incremental_equals_one_shot(spark):
     """The O(delta) maintenance contract: union of three disjoint
@@ -2350,103 +2247,6 @@ def test_streaming_covariance_equals_one_shot(spark, tmp_path):
         for r in covariance_matrix(df, "embedding").collect()
     )
     assert streamed == oneshot
-
-
-def test_pca_fit_model_properties(spark):
-    import numpy as np
-
-    from omicidx_gh_etl_spark.operators.similarity import pca_fit
-
-    rows, df = _pca_frame(spark)
-    x = np.array([r[1] for r in rows])
-    model = pca_fit(df, k=4, vec_col="embedding").collect()
-    mean = next(r for r in model if r["component"] == 0)
-    assert mean["eigenvalue"] is None
-    assert np.allclose(mean["loading"], x.mean(axis=0), atol=1e-9)
-    comps = sorted(
-        (r for r in model if r["component"] > 0),
-        key=lambda r: r["component"],
-    )
-    evs = [r["eigenvalue"] for r in comps]
-    assert evs == sorted(evs, reverse=True)
-    V = np.array([r["loading"] for r in comps])
-    assert np.allclose(V @ V.T, np.eye(4), atol=1e-9)  # orthonormal
-    # sign contract: each loading's largest-|coord| entry is positive
-    for v in V:
-        assert v[int(np.argmax(np.abs(v)))] > 0
-    # eigenvalues = top of numpy's, on the same covariance
-    want = np.sort(np.linalg.eigvalsh(np.cov(x, rowvar=False)))[::-1][:4]
-    assert np.allclose(evs, want, atol=1e-9)
-
-
-def test_pca_transform_variance_and_whitening(spark):
-    import numpy as np
-
-    from omicidx_gh_etl_spark.operators.similarity import (
-        pca_fit,
-        pca_transform,
-    )
-
-    rows, df = _pca_frame(spark)
-    model = pca_fit(df, k=3, vec_col="embedding")
-    proj = {
-        r["vec_id"]: r["proj"]
-        for r in pca_transform(
-            df, model, round_to=None
-        ).collect()
-    }
-    P = np.array([proj[i] for i, _ in rows])
-    evs = [
-        r["eigenvalue"]
-        for r in sorted(
-            model.filter("component > 0").collect(),
-            key=lambda r: r["component"],
-        )
-    ]
-    # projection covariance is diag(eigenvalues); whitened, identity
-    assert np.allclose(np.cov(P, rowvar=False, ddof=1),
-                       np.diag(evs), atol=1e-8)
-    W = {
-        r["vec_id"]: r["proj"]
-        for r in pca_transform(
-            df, model, whiten=True, round_to=None
-        ).collect()
-    }
-    Wm = np.array([W[i] for i, _ in rows])
-    assert np.allclose(np.cov(Wm, rowvar=False, ddof=1),
-                       np.eye(3), atol=1e-8)
-    # determinism across partitionings (rounded output path)
-    a = sorted(
-        (r["vec_id"], tuple(r["proj"]))
-        for r in pca_transform(df, model).collect()
-    )
-    b = sorted(
-        (r["vec_id"], tuple(r["proj"]))
-        for r in pca_transform(df.repartition(5), model).collect()
-    )
-    assert a == b
-
-
-def test_pca_transform_rounds_half_up(spark):
-    """pca_transform's rounding is Spark/DuckDB decimal HALF_UP (away
-    from zero), like every other rounded surface in the repo — NOT
-    np.round's banker's HALF_EVEN. 0.125 is binary-exact, so round_to=2
-    distinguishes the modes deterministically: HALF_UP → ±0.13,
-    HALF_EVEN → ±0.12."""
-    from omicidx_gh_etl_spark.operators.similarity import pca_transform
-
-    # hand-built model: mean 0, identity axes → proj == embedding
-    model = spark.createDataFrame(
-        [(0, None, [0.0, 0.0]), (1, 1.0, [1.0, 0.0]), (2, 1.0, [0.0, 1.0])],
-        "component int, eigenvalue double, loading array<double>",
-    )
-    df = spark.createDataFrame(
-        [(1, [0.125, -0.125])], "vec_id long, embedding array<double>"
-    )
-    [(got,)] = (
-        pca_transform(df, model, round_to=2).select("proj").collect()
-    )
-    assert list(got) == [0.13, -0.13]
 
 
 def test_weighted_sample_per_group_quotas_and_small_groups(spark):
@@ -2520,49 +2320,6 @@ def test_contiguous_ids_wide_partition_count_o1_lookup(spark):
         ).collect()
     }
     assert got == want
-
-
-def test_bm25_serve_matches_batch_topk(spark, sf_dir):
-    """The index lifecycle (bm25_build_index -> bm25_serve) returns
-    exactly the one-shot bm25_batch_topk rows for the same corpus and
-    query batch — scores, ranks, ties — and the prebuilt index serves
-    a SECOND query batch without touching the corpus text again
-    (serve-many semantics). Token-less docs count toward n/avgdl in
-    both paths."""
-    from pyspark.sql import functions as F
-
-    from omicidx_gh_etl_spark.operators import text as text_ops
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").limit(200).select(
-        "doc_id", "text"
-    )
-    # plant a token-less doc: it must still count toward n/avgdl
-    d = d.unionByName(spark.createDataFrame(
-        [(999_999, "   ")], "doc_id long, text string"
-    ))
-    q1 = spark.createDataFrame(
-        [(0, "the"), (0, "of"), (1, "and")], "q_id int, term string"
-    )
-    q2 = spark.createDataFrame(
-        [(7, "data"), (7, "the")], "q_id int, term string"
-    )
-    postings, dfreq, stats = text_ops.bm25_build_index(d, "text", "doc_id")
-    for q in (q1, q2):
-        want = sorted(
-            tuple(r) for r in text_ops.bm25_batch_topk(
-                d, q, "text", "doc_id", k=7
-            ).collect()
-        )
-        got = sorted(
-            tuple(r) for r in text_ops.bm25_serve(
-                postings, dfreq, stats, q, "doc_id", k=7
-            ).collect()
-        )
-        assert got == want
-    # the stats row counted the token-less doc
-    n = stats.collect()[0]["__n"]
-    assert n == d.count()
 
 
 def test_bm25_index_persisted_serve_matches_batch_topk(spark, sf_dir):
@@ -2645,11 +2402,11 @@ def test_bm25_index_persisted_serve_matches_batch_topk(spark, sf_dir):
 
 def test_bm25_index_stats_need_unique_doc_ids(spark):
     """With unique doc ids, token-less docs included, Bm25Index's
-    persisted (n, avgdl) equal bm25_build_index's. Unique ids are the
+    persisted (n, avgdl) are the corpus's: n counts every document and
+    avgdl averages token counts over all of them. Unique ids are the
     build's documented precondition: on a duplicate id, n counts rows."""
     import uuid
 
-    from omicidx_gh_etl_spark.operators import text as text_ops
     from omicidx_gh_etl_spark.operators.bm25_index import Bm25Index
 
     docs = spark.createDataFrame(
@@ -2663,8 +2420,7 @@ def test_bm25_index_stats_need_unique_doc_ids(spark):
 
     try:
         idx.build(docs, "text", "doc_id", n_buckets=4)
-        _, _, stats = text_ops.bm25_build_index(docs, "text", "doc_id", materialize=False)
-        assert persisted_stats() == tuple(stats.collect()[0])
+        assert persisted_stats() == (4, (3 + 3 + 0 + 5) / 4)
         dup = docs.unionByName(spark.createDataFrame([(2, "a dog barked")], docs.schema))
         idx.build(dup, "text", "doc_id", n_buckets=4)
         assert persisted_stats()[0] == dup.count() == 5

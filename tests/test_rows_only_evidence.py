@@ -5,16 +5,13 @@ Every registered query is oracle-backed (frozen seeds for
 for `similarity_pq_search`, and an unrolled fixed-round SQL replay for
 `text_bpe_learn_merges`), and ``tests/test_strict_parity.py`` checks
 all four value-exactly on every run. A hash still cannot say "the
-refinement didn't collapse", "ADC recall clears the floor", "the
-clusters partition the corpus" or "the span fixpoint converged", so
-this module computes those deterministic sub-properties at sf0.01 and
-asserts their floors. (`remove_duplicate_spans_fixpoint` is an
-operator, not a registered query; its postcondition is pinned here.)
+refinement didn't collapse", "ADC recall clears the floor" or "the
+clusters partition the corpus", so this module computes those
+deterministic sub-properties at sf0.01 and asserts their floors.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
@@ -93,29 +90,6 @@ def test_semantic_clusters_partition_and_drop_bounds(spark):
     ).count()
     assert sum(r["n_vectors"] for r in rows) == n_corpus
     assert all(0 <= r["n_dropped"] <= r["n_vectors"] - 1 for r in rows)
-
-
-@pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")
-def test_span_fixpoint_postcondition_recorded(spark):
-    """remove_duplicate_spans_fixpoint's postcondition on the real
-    corpus sample: zero >=min_len duplicated spans remain. Last
-    recorded: 120 docs in, 120 out, 0 spans remaining."""
-    from pyspark.sql import functions as F
-
-    from omicidx_gh_etl_spark.operators import dedup
-    from omicidx_gh_etl_spark.queries.tables import load_table
-
-    d = load_table(spark, SF_GATE, "documents").filter(F.col("doc_id") < 120)
-    out = dedup.remove_duplicate_spans_fixpoint(
-        d, "text", "doc_id", n=8, min_len=12, max_iters=5
-    ).localCheckpoint(eager=True)
-    remaining = dedup.duplicate_span_runs(
-        dedup.positional_shingles(out, "text", "doc_id", n=8),
-        "doc_id", n=8, min_len=12, max_shingle_df=50,
-    ).count()
-    assert remaining == 0
-    docs_out = out.count()
-    assert math.isfinite(docs_out) and docs_out > 0
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_GATE), reason="testdata absent")

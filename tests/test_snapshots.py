@@ -98,35 +98,30 @@ def test_empty_snapshot_roundtrip(spark, table):
 
 
 def test_merge_into_snapshot_cdc_with_history(spark, table):
-    from omicidx_gh_etl_spark.engine import merge_into_snapshot
+    from omicidx_gh_etl_spark.engine import merge_into_snapshot_partitions
 
     def batch(rows):
         return spark.createDataFrame(
-            rows, "id long, val string, version long, deleted boolean"
+            [(i, "d1", v, ver, dl) for i, v, ver, dl in rows],
+            "id long, day string, val string, version long, deleted boolean",
         )
 
-    s0 = merge_into_snapshot(
-        table,
-        batch([(1, "a", 1, False), (2, "b", 1, False)]),
-        keys=["id"], order_cols=["version"], delete_col="deleted",
-    )
+    def merge(rows):
+        return merge_into_snapshot_partitions(
+            table, batch(rows), keys=["id"], order_cols=["version"],
+            partition_col="day", delete_col="deleted",
+        )
+
+    s0 = merge([(1, "a", 1, False), (2, "b", 1, False)])
     # update id=1, tombstone id=2, insert id=3
-    s1 = merge_into_snapshot(
-        table,
-        batch([(1, "a2", 2, False), (2, "b", 2, True), (3, "c", 2, False)]),
-        keys=["id"], order_cols=["version"], delete_col="deleted",
-    )
+    s1 = merge([(1, "a2", 2, False), (2, "b", 2, True), (3, "c", 2, False)])
     latest = {r["id"]: r["val"] for r in table.read(spark).collect()}
     assert latest == {1: "a2", 3: "c"}
     # time travel to pre-merge state
     v0 = {r["id"]: r["val"] for r in table.read(spark, s0.version).collect()}
     assert v0 == {1: "a", 2: "b"}
     # a stale version on a live key must NOT resurrect it
-    merge_into_snapshot(
-        table,
-        batch([(1, "old", 0, False)]),
-        keys=["id"], order_cols=["version"], delete_col="deleted",
-    )
+    merge([(1, "old", 0, False)])
     assert {r["id"]: r["val"] for r in table.read(spark).collect()} == {1: "a2", 3: "c"}
     # bad batch? metadata-only undo
     table.rollback(s1.version)

@@ -498,6 +498,38 @@ def test_cli_list_describe_showconfig(spark, data_root, tmp_path, capsys):
     assert cfg["models"] > 20 and cfg["data_root"] == data_root
 
 
+def test_cli_plan_starts_no_spark_session(tmp_path, capsys, monkeypatch):
+    """`plan`, with or without ``--select``, is the runner's topological
+    order read from the registry alone: no Spark session."""
+    import argparse
+
+    from omicidx_gh_etl_spark import cli
+    from omicidx_gh_etl_spark.engine import WarehouseRunner
+    from omicidx_gh_etl_spark.models import REGISTRY
+
+    def no_spark(args):
+        raise AssertionError(f"{args.cmd} started a Spark session")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    runner = WarehouseRunner(
+        spark=None, registry=REGISTRY,
+        data_root=str(tmp_path), warehouse_root=str(tmp_path / "wh"),
+    )
+    for select in (["mart.sra_metadata"], None):
+        ns = argparse.Namespace(
+            cmd="plan", cpus=8, data_root=str(tmp_path),
+            warehouse_root=str(tmp_path / "wh"), export_root=None, select=select,
+        )
+        assert cli.cmd_plan(ns) == 0
+        printed = [
+            line.split(". ", 1)[1].split(" [", 1)[0]
+            for line in capsys.readouterr().out.splitlines()
+        ]
+        assert printed == runner.plan(select=select)
+    assert len(printed) == len(REGISTRY.dependency_edges())
+    assert "mart.sra_metadata" in printed
+
+
 def test_cli_status_aggregates_runs(spark, data_root, tmp_path, capsys):
     """status = success rate + per-model durations from meta.model_runs
     (reference: omicidx_etl/status.py dashboard)."""
